@@ -112,7 +112,7 @@ object Regionalize {
     val n = gids.length
     // gid→index via binarySearch over the sorted primitive gid array —
     // 8 B/entry to broadcast vs ~40-50 B/entry for a boxed Map (the same
-    // pattern Lisa.runKernel uses for its gid lookups)
+    // pattern broadcast-mode Lisa uses for its gid lookups)
     val bScaled = spark.sparkContext.broadcast(scaled)
     val bGids = spark.sparkContext.broadcast(gids)
     try {

@@ -1,31 +1,26 @@
 package graft.stats
 
 import graft.core.Stat0
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Distributed LISA execution.
+/** Distributed LISA execution — broadcast mode, the one-window case of
+  * the engine ([[LisaEngine]]).
   *
-  * The reference computes every local statistic over a whole PG window
-  * partition materialized in RAM (`postgeoda/src/localmoran.c:43-131`).
-  * The Spark shape (SURVEY §3.4): global moments by aggregation, the
-  * standardized value vector broadcast to executors (the permutation step
-  * must read z-values of uniformly drawn ids, so each task needs the full
-  * vector), then a shuffle-free `mapPartitions` over the weights rows
-  * running the per-row seeded kernel. Output is bit-identical under any
-  * partitioning because each row's permutation stream depends only on
-  * (seed, idx).
+  * The whole value table is the window: it is gathered to the driver in
+  * gid order and the statistic is prepared once (`LisaEngine.prepare`).
+  * The prepared vectors and the gid index are then shipped to executors
+  * (the permutation step must read values of uniformly drawn ids, so each
+  * task needs the full vector), and a shuffle-free `mapPartitions` over
+  * the weights rows runs the per-row seeded kernel. Output is
+  * bit-identical under any partitioning because each row's permutation
+  * stream depends only on (seed, idx).
   *
-  * Broadcast mode holds 16 bytes/row (gid + z) — fine to ~100M rows. At
-  * the 10^12 web-table scale the engine switches to per-tile windows,
-  * which the reference itself defines via its window-trim semantics
-  * (`postgeoda/src/binweight.cpp:137-207`, SURVEY §1.4): LISA over a
-  * sub-window drops out-of-window neighbors and renumbers ids — i.e.
-  * per-tile LISA is reference-exact behavior, not an approximation.
+  * Broadcast mode holds 16 bytes/row (gid + z) — fine to ~100M rows.
+  * Beyond that the engine switches to per-tile windows ([[TileLisa]],
+  * whose doc names the two deliberate differences between the modes).
   */
-case class LisaOut(gid: Long, stat: Double, p: Double, c: Double)
-
 object Lisa {
 
   case class Conf(
@@ -49,122 +44,36 @@ object Lisa {
     StructField("gid", LongType), StructField("stat", DoubleType),
     StructField("p", DoubleType), StructField("c", DoubleType)))
 
-  /** Collect (gid asc) → (gids, values). Driver-side gather of the value
-    * vector = the broadcast build step. Deterministic: exact-sum moments,
-    * gid-sorted order.
+  /** Collect (gid asc) → (gids, values): the broadcast build step over a
+    * `(gid, value)` table. Deterministic: gid-sorted order.
     */
   def gather(values: DataFrame): (Array[Long], Array[Double]) = {
-    // per-partition primitive-array collect (packs on executors, no
-    // per-row Row boxing on the driver), then one driver sort by gid —
-    // ~10x faster than orderBy().collect() for broadcast-vector builds
-    val spark = values.sparkSession
-    import spark.implicits._
-    val parts = values.select(col("gid").cast("long"), col("value").cast("double"))
-      .as[(Long, Double)]
-      .mapPartitions { it =>
-        val gs = Array.newBuilder[Long]; val vs = Array.newBuilder[Double]
-        it.foreach { case (g, v) => gs += g; vs += v }
-        Iterator.single((gs.result(), vs.result()))
-      }.collect()
-    val n = parts.iterator.map(_._1.length).sum
-    val rawG = new Array[Long](n)
-    val rawV = new Array[Double](n)
-    var i = 0
-    parts.foreach { case (gs, vs) =>
-      System.arraycopy(gs, 0, rawG, i, gs.length)
-      System.arraycopy(vs, 0, rawV, i, vs.length)
-      i += gs.length
-    }
-    // primitive sort + binary-search permutation: no boxed comparator
-    val gids = rawG.clone()
-    java.util.Arrays.sort(gids)
-    i = 1
-    while (i < n) {
-      require(gids(i) != gids(i - 1),
-        s"duplicate gid ${gids(i)} in value table")
-      i += 1
-    }
-    val vals = new Array[Double](n)
-    i = 0
-    while (i < n) {
-      vals(java.util.Arrays.binarySearch(gids, rawG(i))) = rawV(i)
-      i += 1
-    }
-    (gids, vals)
+    val (gids, mat) = LisaEngine.gather(LisaEngine.univariate(values))
+    (gids, mat.headOption.getOrElse(Array.emptyDoubleArray))
   }
 
-  /** Multivariate gather: same executor-side primitive packing as
-    * `gather` (no driver-side Row boxing/sort), one column-major matrix
-    * per variable in gid-sorted order.
+  /** Broadcast mode: the whole value table is the one window, prepared
+    * once on the driver; the kernel then runs in a distributed pass over
+    * the weights rows `(gid, nbrs array<long>)`. Output (gid, stat, p, c).
     */
-  private def gatherMulti(values: DataFrame): (Array[Long], Array[Array[Double]]) = {
-    val spark = values.sparkSession
-    import spark.implicits._
-    val parts = values.select(col("gid").cast("long"), col("vals"))
-      .as[(Long, Seq[Double])]
-      .mapPartitions { it =>
-        val gs = Array.newBuilder[Long]
-        val vs = Array.newBuilder[Array[Double]]
-        it.foreach { case (g, v) => gs += g; vs += v.toArray }
-        Iterator.single((gs.result(), vs.result()))
-      }.collect()
-    val n = parts.iterator.map(_._1.length).sum
-    require(n > 0, "gatherMulti over empty value table")
-    val rawG = new Array[Long](n)
-    val rawV = new Array[Array[Double]](n)
-    var i = 0
-    parts.foreach { case (gs, vs) =>
-      System.arraycopy(gs, 0, rawG, i, gs.length)
-      System.arraycopy(vs, 0, rawV, i, vs.length)
-      i += gs.length
-    }
-    val gids = rawG.clone()
-    java.util.Arrays.sort(gids)
-    i = 1
-    while (i < n) {
-      require(gids(i) != gids(i - 1), s"duplicate gid ${gids(i)} in value table")
-      i += 1
-    }
-    val nv = rawV(0).length
-    val mat = Array.ofDim[Double](nv, n)
-    i = 0
-    while (i < n) {
-      val pos = java.util.Arrays.binarySearch(gids, rawG(i))
-      val row = rawV(i)
-      require(row.length == nv, s"ragged vals array at gid ${rawG(i)}")
-      var v = 0
-      while (v < nv) { mat(v)(pos) = row(v); v += 1 }
-      i += 1
-    }
-    (gids, mat)
-  }
-
-  /** Run a kernel over weights rows with a broadcast context.
-    * `weights`: (gid, nbrs array<long>); output (gid, stat, p, c).
-    *
-    * In 'lookup' mode the shared draw table must be sized by the GLOBAL
-    * max neighbor count (the stream consumed per permutation depends on
-    * it), so one cheap agg precomputes it — then every partition rebuilds
-    * the identical table locally from (seed, numObs, maxK): ~permutations
-    * × maxK draws once per task, no broadcast needed, still
-    * partitioning-invariant.
-    */
-  private def runKernel(weights: DataFrame, gids: Array[Long],
-      conf: Conf,
-      kernel: (Int, Array[Int], LisaKernels.Scratch) => LisaKernels.Triple): DataFrame = {
+  private def run(stat: TileLisa.Stat, values: DataFrame, weights: DataFrame,
+                  conf: Conf): DataFrame = {
     val spark = weights.sparkSession
+    val (gids, mat) = LisaEngine.gather(values)
+    // an empty value table has no window to prepare; every weights row
+    // then fails its gid lookup, and no weights rows give no output
+    val kernel =
+      if (gids.isEmpty) null else LisaEngine.prepare(stat, gids, mat, conf)
     val bGids = spark.sparkContext.broadcast(gids)
     val numObs = gids.length
-    val lookupK: Int =
-      if (conf.permMethod != "lookup") -1
+    // 'lookup' sizes its shared draw table by the GLOBAL max neighbor
+    // count (`LisaEngine.scratch`): one cheap agg precomputes it
+    val maxK: Int =
+      if (conf.permMethod != "lookup") 0
       else {
-        val mk = weights.agg(max(size(col("nbrs")))).head().getInt(0)
-        // the shared-table shift trick needs maxK < numObs-1; beyond that
-        // (pathologically dense weights) fall back to 'complete'
-        if (mk > 0 && mk < numObs - 1) mk else -1
+        val mk = weights.agg(max(size(col("nbrs")))).head()
+        if (mk.isNullAt(0)) 0 else mk.getInt(0)
       }
-    val permutations = conf.permutations
-    val seed = conf.seed
     // raw InternalRow pass (as in the kNN group stage): neighbor arrays
     // read straight out of UnsafeRows into primitive buffers — no boxed
     // Seq[Long] per row on the permutation hot path
@@ -175,24 +84,13 @@ object Lisa {
       .toInternalRdd(src)
       .mapPartitions { it =>
         val g = bGids.value
-        val lt = if (lookupK > 0)
-          new LisaKernels.LookupTable(numObs, lookupK, permutations, seed)
-        else null
-        val scratch = new LisaKernels.Scratch(numObs, 65536, lt)
+        val scratch = LisaEngine.scratch(numObs, maxK, conf)
         it.map { row: InternalRow =>
           val gid = row.getLong(0)
           val idx = java.util.Arrays.binarySearch(g, gid)
           require(idx >= 0, s"gid $gid not present in value table")
-          val nbrGids: Array[Long] =
-            if (row.isNullAt(1)) Array.emptyLongArray
-            else row.getArray(1).toLongArray()
-          val nbrs = new Array[Int](nbrGids.length)
-          var i = 0
-          while (i < nbrGids.length) {
-            val j = java.util.Arrays.binarySearch(g, nbrGids(i))
-            require(j >= 0, s"neighbor gid ${nbrGids(i)} not in value table")
-            nbrs(i) = j; i += 1
-          }
+          val nbrs = LisaEngine.positions(g, LisaEngine.nbrGids(row, 1),
+            trim = false)
           val t = kernel(idx, nbrs, scratch)
           new GenericInternalRow(
             Array[Any](gid, t.stat, t.p, t.c)): InternalRow
@@ -226,14 +124,8 @@ object Lisa {
   }
 
   /** Local Moran's I → (gid, stat=I, p, c=cluster). */
-  def localMoran(values: DataFrame, weights: DataFrame, conf: Conf = Conf()): DataFrame = {
-    val (gids, vals) = gather(values)
-    Stat0.standardize(vals)
-    val z = vals
-    runKernel(weights, gids, conf, (idx, nbrs, scratch) =>
-      LisaKernels.moran(idx, nbrs, z, conf.permutations, conf.seed,
-        conf.cutoff, scratch))
-  }
+  def localMoran(values: DataFrame, weights: DataFrame, conf: Conf = Conf()): DataFrame =
+    run(TileLisa.Moran, LisaEngine.univariate(values), weights, conf)
 
   /** `local_moran_b` (`moran.sql:36-43`; the reference marks it
     * to-be-deprecated but it is still part of its SQL surface): local
@@ -261,115 +153,38 @@ object Lisa {
     * [[localMoran]].
     */
   def localBiMoran(values: DataFrame, weights: DataFrame,
-                   conf: Conf = Conf()): DataFrame = {
-    val (gids, mat) = gatherMulti(
-      values.select(col("gid"),
-        array(col("value").cast("double"),
-          col("value2").cast("double")).as("vals")))
-    val zx = mat(0); val zy = mat(1)
-    Stat0.standardize(zx); Stat0.standardize(zy)
-    runKernel(weights, gids, conf, (idx, nbrs, scratch) =>
-      LisaKernels.biMoran(idx, nbrs, zx, zy, conf.permutations, conf.seed,
-        conf.cutoff, scratch))
-  }
+                   conf: Conf = Conf()): DataFrame =
+    run(TileLisa.BiMoran, LisaEngine.bivariate(values), weights, conf)
 
   /** Getis-Ord G_i / G_i* → (gid, stat, p, c). */
   def localG(values: DataFrame, weights: DataFrame, star: Boolean,
-             conf: Conf = Conf()): DataFrame = {
-    val (gids, x) = gather(values)
-    var sumAll = 0.0
-    x.foreach(sumAll += _) // gid-sorted order → deterministic
-    runKernel(weights, gids, conf, (idx, nbrs, scratch) =>
-      if (star) LisaKernels.localGStar(idx, nbrs, x, sumAll,
-        conf.permutations, conf.seed, conf.cutoff, scratch)
-      else LisaKernels.localG(idx, nbrs, x, sumAll,
-        conf.permutations, conf.seed, conf.cutoff, scratch))
-  }
+             conf: Conf = Conf()): DataFrame =
+    run(if (star) TileLisa.GStar else TileLisa.G, LisaEngine.univariate(values),
+      weights, conf)
 
-  def localGeary(values: DataFrame, weights: DataFrame, conf: Conf = Conf()): DataFrame = {
-    val (gids, vals) = gather(values)
-    Stat0.standardize(vals)
-    val z = vals
-    runKernel(weights, gids, conf, (idx, nbrs, scratch) =>
-      LisaKernels.geary(idx, nbrs, z, conf.permutations, conf.seed,
-        conf.cutoff, scratch))
-  }
+  def localGeary(values: DataFrame, weights: DataFrame, conf: Conf = Conf()): DataFrame =
+    run(TileLisa.Geary, LisaEngine.univariate(values), weights, conf)
 
   /** Multivariate Geary over `vals: array<double>` column. */
   def localMultiGeary(values: DataFrame, weights: DataFrame,
-                      conf: Conf = Conf()): DataFrame = {
-    val (gids, mat) = gatherMulti(values)
-    val zs = mat.map(v => Stat0.scale(v, conf.scaleMethod))
-    runKernel(weights, gids, conf, (idx, nbrs, scratch) =>
-      LisaKernels.multiGeary(idx, nbrs, zs, conf.permutations, conf.seed,
-        conf.cutoff, scratch))
-  }
-
-  private def requireBinary(x: Array[Double], what: String): Unit = {
-    var i = 0
-    while (i < x.length) {
-      require(x(i) == 0.0 || x(i) == 1.0,
-        s"$what must be binary 0/1 (joincount.c semantics); found ${x(i)}")
-      i += 1
-    }
-  }
+                      conf: Conf = Conf()): DataFrame =
+    run(TileLisa.MultiGeary, values, weights, conf)
 
   def localJoinCount(values: DataFrame, weights: DataFrame,
-                     conf: Conf = Conf()): DataFrame = {
-    val (gids, x) = gather(values)
-    requireBinary(x, "local_joincount variable")
-    runKernel(weights, gids, conf, (idx, nbrs, scratch) =>
-      LisaKernels.joinCount(idx, nbrs, x, conf.permutations, conf.seed, scratch))
-  }
+                     conf: Conf = Conf()): DataFrame =
+    run(TileLisa.JoinCount, LisaEngine.univariate(values), weights, conf)
 
   /** Bivariate join count; errors on co-location, replicating
     * `postgeoda/src/joincount.c:193-197`.
     */
   def localBiJoinCount(values: DataFrame /* gid, value, value2 */,
-                       weights: DataFrame, conf: Conf = Conf()): DataFrame = {
-    // reuse the multivariate primitive gather (executor-side packing)
-    val (gids, mat) = gatherMulti(
-      values.select(col("gid"),
-        array(col("value").cast("double"),
-          col("value2").cast("double")).as("vals")))
-    val n = gids.length
-    val x1 = mat(0); val x2 = mat(1)
-    var i = 0
-    requireBinary(x1, "local_bijoincount first variable")
-    requireBinary(x2, "local_bijoincount second variable")
-    i = 0
-    while (i < n) {
-      // strict reference parity: joincount.c:193-197 errors whenever
-      // r1[i] == r2[i] — including both-zero, not just co-located ones
-      require(x1(i) != x2(i),
-        "local bivariate join count works only when two events cannot " +
-          "happen in the same location (joincount.c:193-197); x1 == x2 at " +
-          "gid " + gids(i))
-      i += 1
-    }
-    runKernel(weights, gids, conf, (idx, nbrs, scratch) =>
-      LisaKernels.biJoinCount(idx, nbrs, x1, x2, conf.permutations,
-        conf.seed, scratch))
-  }
+                       weights: DataFrame, conf: Conf = Conf()): DataFrame =
+    run(TileLisa.BiJoinCount, LisaEngine.bivariate(values), weights, conf)
 
   /** Co-location join count over `vals: array<double>` of binary vars. */
   def localMultiJoinCount(values: DataFrame, weights: DataFrame,
-                          conf: Conf = Conf()): DataFrame = {
-    val (gids, mat) = gatherMulti(values)
-    mat.zipWithIndex.foreach { case (v, vi) =>
-      requireBinary(v, s"local_multijoincount variable $vi") }
-    val n = gids.length
-    val prods = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      var p = 1.0; var v = 0
-      while (v < mat.length) { p *= mat(v)(i); v += 1 }
-      prods(i) = p; i += 1
-    }
-    runKernel(weights, gids, conf, (idx, nbrs, scratch) =>
-      LisaKernels.multiJoinCount(idx, nbrs, prods, conf.permutations,
-        conf.seed, scratch))
-  }
+                          conf: Conf = Conf()): DataFrame =
+    run(TileLisa.MultiJoinCount, values, weights, conf)
 
   /** Quantile-bin membership indicator per GeoDa quantile classification:
     * breaks at percentiles 100*i/k (i=1..k-1), bin = 1 + #{breaks <= x}.
@@ -391,33 +206,13 @@ object Lisa {
     * quantile-bin membership, then local join count.
     */
   def quantileLisa(k: Int, q: Int, values: DataFrame, weights: DataFrame,
-                   conf: Conf = Conf()): DataFrame = {
-    val (gids, vals) = gather(values)
-    val x = quantileIndicator(vals, k, q)
-    runKernel(weights, gids, conf, (idx, nbrs, scratch) =>
-      LisaKernels.joinCount(idx, nbrs, x, conf.permutations, conf.seed, scratch))
-  }
+                   conf: Conf = Conf()): DataFrame =
+    run(TileLisa.Quantile(k, q), LisaEngine.univariate(values), weights, conf)
 
   /** Multivariate quantile LISA: AND of per-variable bin indicators, then
     * join count (`quantilelisa.c:143-300` / proxy_quantilelisa.cpp:61-115).
     */
   def multiQuantileLisa(ks: Array[Int], qs: Array[Int], values: DataFrame,
-                        weights: DataFrame, conf: Conf = Conf()): DataFrame = {
-    val (gids, mat) = gatherMulti(values)
-    require(ks.length == mat.length && qs.length == mat.length,
-      "ks/qs/vars arity mismatch")
-    val n = gids.length
-    val ind = mat.zipWithIndex.map { case (v, i) =>
-      quantileIndicator(v, ks(i), qs(i)) }
-    val prods = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      var p = 1.0; var v = 0
-      while (v < ind.length) { p *= ind(v)(i); v += 1 }
-      prods(i) = p; i += 1
-    }
-    runKernel(weights, gids, conf, (idx, nbrs, scratch) =>
-      LisaKernels.joinCount(idx, nbrs, prods, conf.permutations, conf.seed,
-        scratch))
-  }
+                        weights: DataFrame, conf: Conf = Conf()): DataFrame =
+    run(TileLisa.MultiQuantile(ks.toSeq, qs.toSeq), values, weights, conf)
 }

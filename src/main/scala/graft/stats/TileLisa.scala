@@ -1,25 +1,30 @@
 package graft.stats
 
-import graft.core.{Stat0, Tiling}
+import graft.core.Tiling
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Per-tile LISA — the 10^12-row execution mode (SURVEY §7.5 option i).
   *
-  * Broadcast-mode LISA needs the full z-vector on every executor, which
-  * caps out around ~10^8 rows. Beyond that the engine partitions space
-  * into super-tiles and runs the statistic independently per tile with
-  * the reference's own window-trim semantics (`binweight.cpp:128-207`,
-  * SURVEY §1.4): LISA over a sub-window DROPS neighbors outside the
-  * window, RENUMBERS observations to window positions 0..N-1, and
-  * standardizes over the window — so per-tile output is reference-defined
+  * Broadcast-mode LISA ([[Lisa]]) needs the full value vector on every
+  * executor, which caps out around ~10^8 rows. Beyond that the engine
+  * partitions space into super-tiles and makes each tile a window of the
+  * reference's own window-trim semantics (`binweight.cpp:128-207`, SURVEY
+  * §1.4): LISA over a sub-window DROPS neighbors outside the window,
+  * RENUMBERS observations to window positions 0..N-1, and derives
+  * everything over the window — so per-tile output is reference-defined
   * behavior (each tile IS a window), not an approximation of the global
-  * statistic. The same argument extends to every window-level derivation:
-  * quantile bins are computed over the window's values, multivariate
-  * scaling per window, join-count binary validation per window row.
+  * statistic. Each window runs the same `LisaEngine.prepare` that
+  * broadcast mode runs once over the whole table (standardize,
+  * multivariate scaling, G sums, binary and co-location checks, quantile
+  * binning), so one tile covering every point reproduces broadcast mode
+  * bit for bit. Two differences are deliberate: a neighbor gid outside
+  * the window is trimmed here (broadcast mode rejects one missing from
+  * the value table), and a weights row with no value row is dropped by
+  * the inner join below (broadcast mode fails on it).
   *
-  * Shape: one shuffle keyed by tile; within each tile group the same
-  * LisaKernels run as in broadcast mode. Tiles are independent → no
+  * Shape: one shuffle keyed by tile; tiles are independent → no
   * broadcast, no global state, arbitrarily many tiles.
   *
   * All 12 reference LISA statistics are supported (the univariate five
@@ -91,9 +96,8 @@ object TileLisa {
   def run(stat: Stat, points: DataFrame, values: DataFrame,
           weights: DataFrame, tileSize: Double,
           conf: Lisa.Conf = Lisa.Conf()): DataFrame =
-    runMulti(stat, points,
-      values.select(col("gid"), array(col("value").cast("double")).as("vals")),
-      weights, tileSize, conf)
+    runMulti(stat, points, LisaEngine.univariate(values), weights, tileSize,
+      conf)
 
   /** Per-tile LISA over a multivariate value frame (gid, vals:
     * array<double>). Univariate statistics read vals(0).
@@ -133,82 +137,47 @@ object TileLisa {
         col("tile"))
       .sortWithinPartitions("tile", "gid")
 
-    val permutations = conf.permutations
-    val seed = conf.seed
-    val cutoff = conf.cutoff
-    val permMethod = conf.permMethod
-    val scaleMethod = conf.scaleMethod
-    val which = stat
-
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     val outRdd = org.apache.spark.sql.graftshim.ColumnShim
       .toInternalRdd(joined)
       .mapPartitions { it =>
         val rowsIt = it.buffered
-        new Iterator[InternalRow] {
-          private var window: Iterator[InternalRow] = Iterator.empty
-          override def hasNext: Boolean = {
-            while (!window.hasNext && rowsIt.hasNext) window = nextWindow()
-            window.hasNext
+        // consume one consecutive same-tile run into a window at a time
+        Iterator.continually(rowsIt).takeWhile(_.hasNext).flatMap { _ =>
+          val tile = rowsIt.head.getLong(0)
+          val rows = new LisaEngine.RowsBuilder
+          val nbrsB = Array.newBuilder[Array[Long]]
+          while (rowsIt.hasNext && rowsIt.head.getLong(0) == tile) {
+            val row = rowsIt.next()
+            // the raw pass reads tile with getLong, which would silently
+            // decode a null slot as 0 and contaminate tile 0
+            require(!row.isNullAt(0),
+              "null tile in TileLisa input (null x/y in points?)")
+            rows.add(row, 1)
+            nbrsB += LisaEngine.nbrGids(row, 3)
           }
-          override def next(): InternalRow = {
-            if (!hasNext) throw new NoSuchElementException
-            window.next()
-          }
-          /** Consume one consecutive same-tile run into a window. */
-          private def nextWindow(): Iterator[InternalRow] = {
-            val tile = rowsIt.head.getLong(0)
-            val gidsB = Array.newBuilder[Long]
-            val valsB = Array.newBuilder[Array[Double]]
-            val nbrsB = Array.newBuilder[Array[Long]]
-            while (rowsIt.hasNext && rowsIt.head.getLong(0) == tile) {
-              val row = rowsIt.next()
-              // the raw pass reads tile/gid with getLong, which would
-              // silently decode a null slot as 0 and contaminate tile 0
-              // — reject nulls loudly (the typed-Dataset decode this
-              // pass replaced failed loudly on them)
-              require(!row.isNullAt(0),
-                "null tile in TileLisa input (null x/y in points?)")
-              require(!row.isNullAt(1), "null gid in TileLisa input")
-              val gid = row.getLong(1)
-              gidsB += gid
-              // the raw pass skips typed-Dataset decoding, so null
-              // elements must be rejected here — toDoubleArray would
-              // silently read a null slot as 0.0
-              valsB += (if (row.isNullAt(2)) Array.emptyDoubleArray
-                        else {
-                          val arr = row.getArray(2)
-                          var k = 0
-                          val m = arr.numElements()
-                          while (k < m) {
-                            require(!arr.isNullAt(k),
-                              s"null element in vals array at gid $gid")
-                            k += 1
-                          }
-                          arr.toDoubleArray()
-                        })
-              nbrsB += (if (row.isNullAt(3)) Array.emptyLongArray
-                        else row.getArray(3).toLongArray())
-            }
-            windowKernel(which, permutations, seed, cutoff, permMethod,
-              scaleMethod)(tile, gidsB.result(), valsB.result(),
-              nbrsB.result())
+          // the window is prepared exactly as broadcast mode prepares the
+          // whole table; rows are gid-sorted by the shuffle, so row i is
+          // window position i, and neighbors outside the window are trimmed
+          val (gids, mat) = LisaEngine.window(rows.result())
+          val kernel = LisaEngine.prepare(stat, gids, mat, conf)
+          val trimmed =
+            nbrsB.result().map(LisaEngine.positions(gids, _, trim = true))
+          val scratch = LisaEngine.scratch(gids.length,
+            trimmed.iterator.map(_.length).maxOption.getOrElse(0), conf)
+          Iterator.range(0, gids.length).map { idx =>
+            val t = kernel(idx, trimmed(idx), scratch)
+            new GenericInternalRow(
+              Array[Any](gids(idx), tile, t.stat, t.p, t.c)): InternalRow
           }
         }
       }
-    val out = org.apache.spark.sql.graftshim.ColumnShim.internalDf(spark, outRdd,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("gid",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("tile",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("stat",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("p",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("c",
-          org.apache.spark.sql.types.DoubleType))))
+    // broadcast mode's (gid, stat, p, c) with the tile after the gid
+    val schema = StructType(Lisa.outSchema.fields.head +:
+      StructField("tile", LongType) +: Lisa.outSchema.fields.tail)
+    val out = org.apache.spark.sql.graftshim.ColumnShim
+      .internalDf(spark, outRdd, schema)
     // materialize the kernel output ONCE (5 fixed-width columns per
     // row — tiny next to the permutation work that produced it): every
     // caller of this 10^12-row path sorts or joins the result, and a
@@ -217,149 +186,6 @@ object TileLisa {
     // r8 job-listener probe measured 2 × ~0.85 s of an ~2.1 s tile
     // query inside the duplicated kernel jobs; guide §1.4/§2.4)
     graft.core.Materialize.releasing(out, Nil)
-  }
-
-  /** Run one tile window (rows already gid-sorted). Everything the
-    * broadcast engine derives globally is derived over the window here
-    * (window-trim semantics, see object doc).
-    */
-  private def windowKernel(which: Stat, permutations: Int, seed: Int,
-      cutoff: Double, permMethod: String, scaleMethod: String)(
-      tile: Long, gids: Array[Long], rowVals: Array[Array[Double]],
-      nbrGids: Array[Array[Long]])
-      : Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-    val n = gids.length
-    if (n == 0) return Iterator.empty
-    // column-major value matrix for this window
-    val nv = rowVals(0).length
-    require(nv > 0, s"empty vals array at gid ${gids(0)}")
-    val mat = Array.ofDim[Double](nv, n)
-    var mi = 0
-    while (mi < n) {
-      val vs = rowVals(mi)
-      require(vs.length == nv,
-        s"ragged vals array at gid ${gids(mi)} ($nv vs ${vs.length})")
-      var v = 0
-      while (v < nv) { mat(v)(mi) = vs(v); v += 1 }
-      mi += 1
-    }
-      def requireBinary(x: Array[Double], what: String): Unit = {
-        var j = 0
-        while (j < n) {
-          require(x(j) == 0.0 || x(j) == 1.0,
-            s"$what must be binary 0/1 (joincount.c semantics); " +
-              s"found ${x(j)} at gid ${gids(j)}")
-          j += 1
-        }
-      }
-      // per-window preparation + kernel selection — everything that the
-      // broadcast engine derives globally is derived over the window here
-      // (window-trim semantics, see object doc)
-      val kernelOf: (Int, Array[Int], LisaKernels.Scratch) => LisaKernels.Triple =
-        which match {
-          case Moran =>
-            val z = mat(0).clone(); Stat0.standardize(z)
-            (idx, nbrs, s) => LisaKernels.moran(idx, nbrs, z, permutations,
-              seed, cutoff, s)
-          case Geary =>
-            val z = mat(0).clone(); Stat0.standardize(z)
-            (idx, nbrs, s) => LisaKernels.geary(idx, nbrs, z, permutations,
-              seed, cutoff, s)
-          case G =>
-            val x = mat(0)
-            var sumAll = 0.0; x.foreach(sumAll += _)
-            (idx, nbrs, s) => LisaKernels.localG(idx, nbrs, x, sumAll,
-              permutations, seed, cutoff, s)
-          case GStar =>
-            val x = mat(0)
-            var sumAll = 0.0; x.foreach(sumAll += _)
-            (idx, nbrs, s) => LisaKernels.localGStar(idx, nbrs, x, sumAll,
-              permutations, seed, cutoff, s)
-          case JoinCount =>
-            val x = mat(0)
-            requireBinary(x, "tile join count variable")
-            (idx, nbrs, s) => LisaKernels.joinCount(idx, nbrs, x,
-              permutations, seed, s)
-          case MultiGeary =>
-            val zs = mat.map(v => Stat0.scale(v, scaleMethod))
-            (idx, nbrs, s) => LisaKernels.multiGeary(idx, nbrs, zs,
-              permutations, seed, cutoff, s)
-          case BiMoran =>
-            require(nv == 2, s"tile bimoran needs 2 variables, got $nv")
-            val zx = mat(0).clone(); Stat0.standardize(zx)
-            val zy = mat(1).clone(); Stat0.standardize(zy)
-            (idx, nbrs, s) => LisaKernels.biMoran(idx, nbrs, zx, zy,
-              permutations, seed, cutoff, s)
-          case BiJoinCount =>
-            require(nv == 2, s"tile bijoincount needs 2 variables, got $nv")
-            val x1 = mat(0); val x2 = mat(1)
-            requireBinary(x1, "tile bijoincount first variable")
-            requireBinary(x2, "tile bijoincount second variable")
-            var j = 0
-            while (j < n) {
-              require(x1(j) != x2(j),
-                "local bivariate join count works only when two events " +
-                  "cannot happen in the same location " +
-                  s"(joincount.c:193-197); x1 == x2 at gid ${gids(j)}")
-              j += 1
-            }
-            (idx, nbrs, s) => LisaKernels.biJoinCount(idx, nbrs, x1, x2,
-              permutations, seed, s)
-          case MultiJoinCount =>
-            mat.zipWithIndex.foreach { case (v, vi) =>
-              requireBinary(v, s"tile multijoincount variable $vi") }
-            val prods = new Array[Double](n)
-            var j = 0
-            while (j < n) {
-              var p = 1.0; var v = 0
-              while (v < nv) { p *= mat(v)(j); v += 1 }
-              prods(j) = p; j += 1
-            }
-            (idx, nbrs, s) => LisaKernels.multiJoinCount(idx, nbrs, prods,
-              permutations, seed, s)
-          case Quantile(k, q) =>
-            val x = Lisa.quantileIndicator(mat(0), k, q)
-            (idx, nbrs, s) => LisaKernels.joinCount(idx, nbrs, x,
-              permutations, seed, s)
-          case MultiQuantile(ks, qs) =>
-            require(ks.length == nv && qs.length == nv,
-              "ks/qs/vars arity mismatch")
-            val ind = mat.zipWithIndex.map { case (v, vi) =>
-              Lisa.quantileIndicator(v, ks(vi), qs(vi)) }
-            val prods = new Array[Double](n)
-            var j = 0
-            while (j < n) {
-              var p = 1.0; var v = 0
-              while (v < nv) { p *= ind(v)(j); v += 1 }
-              prods(j) = p; j += 1
-            }
-            (idx, nbrs, s) => LisaKernels.joinCount(idx, nbrs, prods,
-              permutations, seed, s)
-        }
-      // window-trim all rows first: drop neighbors not present in this
-      // tile (binweight.cpp:153-183 semantics), remap to window
-      // positions — and learn the window's max degree so 'lookup' mode
-      // can size its shared draw table (per window, exactly as the
-      // broadcast engine sizes it globally)
-      val trimmed = nbrGids.map { nbrs =>
-        nbrs.iterator
-          .map(nb => java.util.Arrays.binarySearch(gids, nb))
-          .filter(_ >= 0).toArray
-      }
-      var maxK = 0
-      trimmed.foreach(a => if (a.length > maxK) maxK = a.length)
-      val lt =
-        if (permMethod == "lookup" && maxK > 0 && maxK < n - 1)
-          new LisaKernels.LookupTable(n, maxK, permutations, seed)
-        else null // dense/tiny window: 'complete' fallback, as in runKernel
-      val scratch = new LisaKernels.Scratch(n, 65536, lt)
-      Iterator.range(0, n).map { idx =>
-        val t = kernelOf(idx, trimmed(idx), scratch)
-        new GenericInternalRow(
-          Array[Any](gids(idx), tile, t.stat, t.p, t.c)): InternalRow
-      }
   }
 
   /** Local Moran per tile (back-compat entry point). */

@@ -2,7 +2,9 @@ package graft.stats
 
 import graft.SparkFixture
 import graft.weights.KnnWeights
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{array, col}
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 class TileLisaSpec extends AnyFunSuite {
@@ -17,21 +19,6 @@ class TileLisaSpec extends AnyFunSuite {
   private def values(n: Int) = {
     import spark.implicits._
     (1 to n).map(i => (i.toLong, (i * 37 % 101).toDouble)).toDF("gid", "value")
-  }
-
-  test("single giant tile equals broadcast-mode localMoran") {
-    import spark.implicits._
-    val pts = points(120)
-    val w = KnnWeights.build(pts, KnnWeights.Conf(k = 4, cellSize = Some(4.0)))
-    val v = values(120)
-    val broadcastMode = Lisa.localMoran(v, w).orderBy("gid")
-      .as[(Long, Double, Double, Double)].collect()
-    // tile size covering the whole domain → one window == global window
-    val tiled = TileLisa.localMoran(pts, v, w, tileSize = 1e6)
-      .orderBy("gid")
-      .select("gid", "stat", "p", "c")
-      .as[(Long, Double, Double, Double)].collect()
-    assert(tiled.sameElements(broadcastMode))
   }
 
   test("lookup mode: single tile equals broadcast lookup; multi-tile deterministic") {
@@ -79,109 +66,161 @@ class TileLisaSpec extends AnyFunSuite {
     assert(nTiles > 1)
   }
 
-  test("single tile equals broadcast mode for G*, Geary, join count") {
-    import spark.implicits._
-    val pts = points(100)
-    val w = KnnWeights.build(pts, KnnWeights.Conf(k = 4, cellSize = Some(4.0)))
-    val v = values(100)
-    val gsB = Lisa.localG(v, w, star = true).orderBy("gid")
-      .as[(Long, Double, Double, Double)].collect()
-    val gsT = TileLisa.run(TileLisa.GStar, pts, v, w, tileSize = 1e6)
-      .orderBy("gid").select("gid", "stat", "p", "c")
-      .as[(Long, Double, Double, Double)].collect()
-    assert(gsT.sameElements(gsB))
-    val geB = Lisa.localGeary(v, w).orderBy("gid")
-      .as[(Long, Double, Double, Double)].collect()
-    val geT = TileLisa.run(TileLisa.Geary, pts, v, w, tileSize = 1e6)
-      .orderBy("gid").select("gid", "stat", "p", "c")
-      .as[(Long, Double, Double, Double)].collect()
-    assert(geT.sameElements(geB))
-    val bin = (1 to 100).map(i =>
-      (i.toLong, if ((i * 13) % 7 < 3) 1.0 else 0.0)).toDF("gid", "value")
-    val jcB = Lisa.localJoinCount(bin, w).orderBy("gid")
-      .as[(Long, Double, Double, Double)].collect()
-    val jcT = TileLisa.run(TileLisa.JoinCount, pts, bin, w, tileSize = 1e6)
-      .orderBy("gid").select("gid", "stat", "p", "c")
-      .as[(Long, Double, Double, Double)].collect()
-    assert(jcT.sameElements(jcB))
+  /** Value frames for every statistic over the gids of `pts`: `v`
+    * (gid, value), binary `bin`, bivariate `bm` (gid, value, value2),
+    * never co-located binary `bi`, multivariate `mv` (gid, vals) and
+    * binary `mvBin`.
+    */
+  private case class Inputs(pts: DataFrame, w: DataFrame, v: DataFrame,
+      bin: DataFrame, bm: DataFrame, bi: DataFrame, mv: DataFrame,
+      mvBin: DataFrame) {
+    def limit0: Inputs = Inputs(pts.limit(0), w.limit(0), v.limit(0),
+      bin.limit(0), bm.limit(0), bi.limit(0), mv.limit(0), mvBin.limit(0))
   }
 
-  test("single tile equals broadcast mode for the multivariate family") {
+  private def inputs(n: Int): Inputs = {
     import spark.implicits._
-    val n = 100
     val pts = points(n)
     val w = KnnWeights.build(pts, KnnWeights.Conf(k = 4, cellSize = Some(4.0)))
-    val mv = (1 to n).map(i => (i.toLong,
-      Seq((i * 37 % 101).toDouble, (i * 17 % 1000).toDouble)))
-      .toDF("gid", "vals")
-    // multigeary
-    val mgB = Lisa.localMultiGeary(mv, w).orderBy("gid")
-      .as[(Long, Double, Double, Double)].collect()
-    val mgT = TileLisa.runMulti(TileLisa.MultiGeary, pts, mv, w, tileSize = 1e6)
-      .orderBy("gid").select("gid", "stat", "p", "c")
-      .as[(Long, Double, Double, Double)].collect()
-    assert(mgT.sameElements(mgB))
-    // bivariate Moran (z_x × lag z_y, per-window standardization)
-    val bm = (1 to n).map(i => (i.toLong, (i * 37 % 101).toDouble,
-      (i * 17 % 1000).toDouble)).toDF("gid", "value", "value2")
-    val bmB = Lisa.localBiMoran(bm, w).orderBy("gid")
-      .as[(Long, Double, Double, Double)].collect()
-    val bmT = TileLisa.runMulti(TileLisa.BiMoran, pts,
-        bm.select(col("gid"),
-          array(col("value"), col("value2")).as("vals")),
-        w, tileSize = 1e6)
-      .orderBy("gid").select("gid", "stat", "p", "c")
-      .as[(Long, Double, Double, Double)].collect()
-    assert(bmT.sameElements(bmB))
-    // bivariate join count (complementary indicators → never co-located)
-    val bi = (1 to n).map { i =>
-      val x1 = if ((i * 13) % 7 < 3) 1.0 else 0.0
-      (i.toLong, x1, 1.0 - x1)
-    }.toDF("gid", "value", "value2")
-    val bjB = Lisa.localBiJoinCount(bi, w).orderBy("gid")
-      .as[(Long, Double, Double, Double)].collect()
-    val bjT = TileLisa.runMulti(TileLisa.BiJoinCount, pts,
-        bi.select(col("gid"), array(col("value"), col("value2")).as("vals")),
-        w, tileSize = 1e6)
-      .orderBy("gid").select("gid", "stat", "p", "c")
-      .as[(Long, Double, Double, Double)].collect()
-    assert(bjT.sameElements(bjB))
-    // co-location (multivariate) join count
-    val mjv = (1 to n).map { i =>
-      (i.toLong, Seq(if ((i * 13) % 7 < 3) 1.0 else 0.0,
-        if ((i * 11) % 5 < 2) 1.0 else 0.0))
-    }.toDF("gid", "vals")
-    val mjB = Lisa.localMultiJoinCount(mjv, w).orderBy("gid")
-      .as[(Long, Double, Double, Double)].collect()
-    val mjT = TileLisa.runMulti(TileLisa.MultiJoinCount, pts, mjv, w,
-        tileSize = 1e6)
-      .orderBy("gid").select("gid", "stat", "p", "c")
-      .as[(Long, Double, Double, Double)].collect()
-    assert(mjT.sameElements(mjB))
+    def b(i: Int, m: Int, r: Int) = if ((i * m) % r < r / 2) 1.0 else 0.0
+    Inputs(pts, w, values(n),
+      (1 to n).map(i => (i.toLong, b(i, 13, 7))).toDF("gid", "value"),
+      (1 to n).map(i => (i.toLong, (i * 37 % 101).toDouble,
+        (i * 17 % 1000).toDouble)).toDF("gid", "value", "value2"),
+      (1 to n).map(i => (i.toLong, b(i, 13, 7), 1.0 - b(i, 13, 7)))
+        .toDF("gid", "value", "value2"),
+      (1 to n).map(i => (i.toLong, Seq((i * 37 % 101).toDouble,
+        (i * 17 % 1000).toDouble))).toDF("gid", "vals"),
+      (1 to n).map(i => (i.toLong, Seq(b(i, 13, 7), b(i, 11, 5))))
+        .toDF("gid", "vals"))
   }
 
-  test("single tile equals broadcast mode for the quantile family") {
-    import spark.implicits._
-    val n = 100
+  /** Every statistic, by its reference name. */
+  private val stats: Seq[(String, TileLisa.Stat)] = {
+    import TileLisa._
+    Seq("moran" -> Moran, "g" -> G, "gstar" -> GStar, "geary" -> Geary,
+      "joincount" -> JoinCount, "multigeary" -> MultiGeary,
+      "bimoran" -> BiMoran, "bijoincount" -> BiJoinCount,
+      "multijoincount" -> MultiJoinCount, "quantile" -> Quantile(5, 5),
+      "multiquantile" -> MultiQuantile(Seq(4, 4), Seq(4, 1)))
+  }
+
+  /** `stat` as (broadcast-mode call, one-tile call), both giving
+    * (gid, stat, p, c).
+    */
+  private def modes(stat: TileLisa.Stat, in: Inputs)
+      : (Lisa.Conf => DataFrame, Lisa.Conf => DataFrame) = {
+    import TileLisa._
+    def tile(vals: DataFrame)(conf: Lisa.Conf) =
+      TileLisa.runMulti(stat, in.pts, vals, in.w, tileSize = 1e6, conf)
+        .select("gid", "stat", "p", "c")
+    def tile1(v: DataFrame)(conf: Lisa.Conf) =
+      TileLisa.run(stat, in.pts, v, in.w, tileSize = 1e6, conf)
+        .select("gid", "stat", "p", "c")
+    stat match {
+      case Moran => (Lisa.localMoran(in.v, in.w, _), tile1(in.v) _)
+      case G => (Lisa.localG(in.v, in.w, star = false, _), tile1(in.v) _)
+      case GStar => (Lisa.localG(in.v, in.w, star = true, _), tile1(in.v) _)
+      case Geary => (Lisa.localGeary(in.v, in.w, _), tile1(in.v) _)
+      case JoinCount => (Lisa.localJoinCount(in.bin, in.w, _), tile1(in.bin) _)
+      case MultiGeary => (Lisa.localMultiGeary(in.mv, in.w, _), tile(in.mv) _)
+      case BiMoran => (Lisa.localBiMoran(in.bm, in.w, _), tile(pair(in.bm)) _)
+      case BiJoinCount =>
+        (Lisa.localBiJoinCount(in.bi, in.w, _), tile(pair(in.bi)) _)
+      case MultiJoinCount =>
+        (Lisa.localMultiJoinCount(in.mvBin, in.w, _), tile(in.mvBin) _)
+      case Quantile(k, q) =>
+        (Lisa.quantileLisa(k, q, in.v, in.w, _), tile1(in.v) _)
+      case MultiQuantile(ks, qs) => (Lisa.multiQuantileLisa(ks.toArray,
+        qs.toArray, in.mv, in.w, _), tile(in.mv) _)
+    }
+  }
+
+  private val permMethods = Seq("complete", "lookup")
+
+  private def one(df: DataFrame) =
+    df.select(col("gid"), array(col("value")).as("vals"))
+  private def pair(df: DataFrame) =
+    df.select(col("gid"), array(col("value"), col("value2")).as("vals"))
+
+  private lazy val in100 = inputs(100)
+
+  // one table: every statistic in both permutation methods
+  for ((name, stat) <- stats)
+    test(s"single window equals broadcast: $name, complete and lookup") {
+      import spark.implicits._
+      val (broadcastMode, oneTile) = modes(stat, in100)
+      for (pm <- permMethods) {
+        val conf = Lisa.Conf(permMethod = pm)
+        val b = broadcastMode(conf).orderBy("gid")
+          .as[(Long, Double, Double, Double)].collect()
+        val t = oneTile(conf).orderBy("gid")
+          .as[(Long, Double, Double, Double)].collect()
+        assert(b.length == 100, s"$pm row count")
+        assert(t.sameElements(b), s"$pm: one tile differs from broadcast")
+      }
+    }
+
+  test("empty input gives empty output in both modes and permutation methods") {
+    val in = inputs(20).limit0
+    for ((name, stat) <- stats; pm <- permMethods) {
+      val (broadcastMode, oneTile) = modes(stat, in)
+      val conf = Lisa.Conf(permMethod = pm)
+      assert(broadcastMode(conf).count() == 0, s"broadcast $name $pm")
+      assert(oneTile(conf).count() == 0, s"tile $name $pm")
+    }
+  }
+
+  /** The `require` reason of a failure, whether it was raised on the
+    * driver or inside a task (where Spark wraps it in a stage failure).
+    */
+  private def reason(body: => Any): String = {
+    val e = intercept[Exception](body)
+    val m = "requirement failed: ([^\\n]*)".r
+      .findFirstMatchIn(e.toString + "\n" + e.getMessage)
+    assert(m.isDefined, s"not a require failure: $e")
+    m.get.group(1)
+  }
+
+  test("bad input fails in both modes with the same message naming the gid") {
+    val n = 20
     val pts = points(n)
-    val w = KnnWeights.build(pts, KnnWeights.Conf(k = 4, cellSize = Some(4.0)))
-    val v = values(n)
-    val qB = Lisa.quantileLisa(5, 5, v, w).orderBy("gid")
-      .as[(Long, Double, Double, Double)].collect()
-    val qT = TileLisa.run(TileLisa.Quantile(5, 5), pts, v, w, tileSize = 1e6)
-      .orderBy("gid").select("gid", "stat", "p", "c")
-      .as[(Long, Double, Double, Double)].collect()
-    assert(qT.sameElements(qB))
-    val mv = (1 to n).map(i => (i.toLong,
-      Seq((i * 37 % 101).toDouble, (i * 17 % 1000).toDouble)))
-      .toDF("gid", "vals")
-    val mqB = Lisa.multiQuantileLisa(Array(4, 4), Array(4, 1), mv, w)
-      .orderBy("gid").as[(Long, Double, Double, Double)].collect()
-    val mqT = TileLisa.runMulti(TileLisa.MultiQuantile(Seq(4, 4), Seq(4, 1)),
-        pts, mv, w, tileSize = 1e6)
-      .orderBy("gid").select("gid", "stat", "p", "c")
-      .as[(Long, Double, Double, Double)].collect()
-    assert(mqT.sameElements(mqB))
+    val w = KnnWeights.build(pts, KnnWeights.Conf(k = 2, cellSize = Some(8.0)))
+    def frame(schema: String, rows: Seq[Row]) = spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*), StructType.fromDDL(schema))
+    def uni(f: Int => Any) =
+      frame("gid BIGINT, value DOUBLE", (1 to n).map(i => Row(i.toLong, f(i))))
+    def multi(f: Int => Seq[Any]) = frame("gid BIGINT, vals ARRAY<DOUBLE>",
+      (1 to n).map(i => Row(i.toLong, f(i))))
+    def two(f: Int => (Double, Double)) =
+      frame("gid BIGINT, value DOUBLE, value2 DOUBLE",
+        (1 to n).map { i => val (a, b) = f(i); Row(i.toLong, a, b) })
+    def both(stat: TileLisa.Stat, broadcastMode: => DataFrame, vals: DataFrame,
+             want: String): Unit = {
+      val b = reason(broadcastMode.collect())
+      val t = reason(TileLisa.runMulti(stat, pts, vals, w, tileSize = 1e6)
+        .collect())
+      assert(b == t && b.contains(want), s"$stat: broadcast '$b', tile '$t'")
+    }
+    val nullValue = uni(i => if (i == 6) null else i.toDouble)
+    both(TileLisa.Moran, Lisa.localMoran(nullValue, w),
+      one(nullValue), "null element in vals array at gid 6")
+    val nullElem = multi(i => Seq(i.toDouble, if (i == 6) null else 1.0 * i))
+    both(TileLisa.MultiGeary, Lisa.localMultiGeary(nullElem, w), nullElem,
+      "null element in vals array at gid 6")
+    val nullArray = multi(i => if (i == 6) null else Seq(i.toDouble, 2.0 * i))
+    both(TileLisa.MultiGeary, Lisa.localMultiGeary(nullArray, w), nullArray,
+      "null vals array at gid 6")
+    val ragged = multi(i => Seq.fill(if (i == 7) 3 else 2)(i.toDouble))
+    both(TileLisa.MultiGeary, Lisa.localMultiGeary(ragged, w), ragged,
+      "ragged vals array at gid 7 (2 vs 3)")
+    val nonBinary = uni(i => if (i == 9) 2.0 else (i % 2).toDouble)
+    both(TileLisa.JoinCount, Lisa.localJoinCount(nonBinary, w),
+      one(nonBinary), "found 2.0 at gid 9")
+    val coLocated = two(i => if (i == 4) (1.0, 1.0) else
+      ((i % 2).toDouble, 1.0 - i % 2))
+    both(TileLisa.BiJoinCount, Lisa.localBiJoinCount(coLocated, w),
+      pair(coLocated), "x1 == x2 at gid 4")
   }
 
   test("multi-tile multivariate/quantile runs are partitioning-invariant") {
