@@ -169,8 +169,10 @@ object NeighborMatch {
     * the 2-d projection distance: a point outside the ±r block differs
     * by ≥ r·cellSize in the projection, so `kth < r·cellSize` proves the
     * top-k complete. Uncertified stragglers re-run at doubled radius,
-    * ending in a broadcast completion of the (few) leftovers — the same
-    * loop shape as `KnnWeights.knnRows`, never an N×N cross join.
+    * ending in a broadcast completion of the (few) leftovers — never an
+    * N×N cross join. This is its own copy of the expanding-radius join
+    * loop that `KnnWeights.knnRows` has replaced with a broadcast
+    * completion pass; porting it onto that pass is a ROADMAP item.
     * Replaces the reference's single-node kd-tree
     * (`neighbor_match.c:46-230`) at any dimensionality.
     */
@@ -260,7 +262,7 @@ object NeighborMatch {
         if (r > 64) exhausted = true
       }
     }
-    // same scoped-release pattern as KnnWeights.knnRows
+    // scoped release of the per-round caches (graft.core.Materialize)
     val out = graft.core.Materialize.releasing(done, pts +: loopCaches.toSeq)
     out.select(col("gid"), explode(col("anbrs")).as("anbr"))
   }

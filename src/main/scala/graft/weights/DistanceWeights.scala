@@ -189,10 +189,10 @@ object DistanceWeights {
                        isMile: Boolean = true): Double = {
     // cells sized for ~4 candidates per 3×3 block, not ~1: with the
     // k=1 auto size most points find a 1-NN but can't certify
-    // (kth < cellSize fails), so the expanding-radius loop runs extra
-    // rounds of fixed-latency jobs. A 2× cell edge certifies nearly
-    // everything in round one; the max-over-1-NN result is identical
-    // under any cell size (the certification rule is exact).
+    // (kth < cellSize fails), so the completion pass takes many
+    // stragglers. A 2× cell edge certifies nearly everything in round
+    // one; the max-over-1-NN result is identical under any cell size
+    // (the certification rule is exact).
     val p1 = KnnWeights.pairs(points,
       KnnWeights.Conf(k = 1, isArc = isArc, isMile = isMile,
         cellSize = Some(KnnWeights.autoCellSize(points, 4))))

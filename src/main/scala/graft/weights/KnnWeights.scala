@@ -1,9 +1,9 @@
 package graft.weights
 
 import graft.core.{Dist, Tiling}
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** k-nearest-neighbor spatial weights, rebuilt Spark-first.
   *
@@ -17,10 +17,25 @@ import org.apache.spark.sql.functions._
   * each home point's top-k with a bounded max-heap — no global sort, no
   * second aggregation shuffle: the group pass emits finished neighbor
   * arrays. A point's top-k is provably complete when its kth-neighbor
-  * distance < cellSize (anything outside the block is ≥ cellSize away);
-  * the rare uncertified points re-run through an expanding-radius
-  * join (they are <<1% for any sane cell size), ending in a broadcast
-  * brute-force pass. Deterministic: neighbor order (distance, gid) asc.
+  * distance < cellSize (anything outside the block is ≥ cellSize away).
+  * The rare uncertified points (stragglers, <<1% for any sane cell size)
+  * are collected once and finished by a broadcast completion pass: each
+  * straggler gets the smallest ring its round-1 heap proves is enough
+  * (an under-filled heap doubles its ring per pass; past ring
+  * [[MaxRing]] it takes every point), and one `mapPartitions` over the
+  * points offers each point to the stragglers whose ring covers its
+  * cell — one job per pass, no shuffle, no join. Deterministic: neighbor
+  * order (distance, gid) asc.
+  *
+  * Driver bound: a completion pass holds at most [[MaxPassEntries]]
+  * entries of straggler state (a straggler costs k heap slots plus one
+  * slot per cell of its ring), and the driver holds at most one batch of
+  * MaxPassEntries / (k + 1) stragglers and their finished rows; more
+  * stragglers are fetched in gid order and finished by further passes of
+  * the same code.
+  *
+  * Input: a null gid, or a null, NaN or infinite x/y, fails the build
+  * with a message naming the gid.
   *
   * Scale notes: shuffle volume is 9×|points| fixed-width rows; skewed
   * (dense) cells only grow the in-memory candidate buffer of their one
@@ -40,6 +55,22 @@ object KnnWeights {
       adaptiveBandwidth: Boolean = true,
       useKernelDiagonals: Boolean = false,
       cellSize: Option[Double] = None)
+
+  /** Widest Chebyshev ring a completion pass scans by cells; a straggler
+    * no ring up to it can certify is offered every point.
+    */
+  val MaxRing = 64
+
+  /** Driver bound on one completion pass's straggler state, in entries:
+    * each straggler costs k heap slots plus one index slot per cell of
+    * its ring (one when it takes every point). About 16 bytes an entry,
+    * so a pass's broadcast index and merged heaps stay within ~16 MB
+    * each; more stragglers wait for the next pass.
+    */
+  val MaxPassEntries: Int = 1 << 20
+
+  /** Ring value of a straggler that is offered every point. */
+  private val AllPoints = Int.MaxValue
 
   /** Auto cell size targeting ~k candidates per 3x3 block. */
   def autoCellSize(points: DataFrame, k: Int): Double = {
@@ -77,10 +108,47 @@ object KnnWeights {
     }
   }
 
+  /** The ring the next pass must scan for a home whose heap over its
+    * ±`scanned` block holds `size` entries with kth distance `kth`, or 0
+    * when that heap is already exact. A full heap is exact once some
+    * r ≤ `scanned` has certBound(r) > kth: everything outside that block
+    * is farther than the kth kept neighbor. Otherwise it needs the
+    * smallest r that does (searched, not solved: the arc bound is not
+    * monotone in r), or every point past [[MaxRing]]. An under-filled
+    * heap doubles its ring.
+    */
+  private def nextRing(conf: Conf, cellSize: Double, scanned: Int,
+                       size: Int, kth: Double, y: Double): Int =
+    if (scanned == AllPoints) 0
+    else if (size == conf.k) {
+      var r = 1
+      while (r <= MaxRing && !(certBound(conf, cellSize, r, y) > kth)) r += 1
+      if (r <= scanned) 0 else if (r <= MaxRing) r else AllPoints
+    } else if (2 * scanned <= MaxRing) 2 * scanned
+    else AllPoints
+
+  /** `(gid long, x, y)` with every row checked: a null gid, or a null,
+    * NaN or infinite x/y, fails the build with a message naming the gid.
+    * The check wraps x and y themselves so it runs before the cell id
+    * arithmetic; without it a raw read takes null as 0.0, and NaN has no
+    * place in the (dist, gid) order.
+    */
+  private def checkedPoints(points: DataFrame): DataFrame = {
+    val gid = col("gid").cast("long")
+    def shown(c: Column): Column = coalesce(c.cast("string"), lit("null"))
+    def bad(c: Column): Column = c.isNull || isnan(c) || abs(c) === Double.PositiveInfinity
+    val fail = raise_error(concat(lit("kNN input gid "), shown(gid), lit(" has x="),
+      shown(col("x")), lit(", y="), shown(col("y")),
+      lit("; gid must be non-null and x, y finite")))
+    val badRow = gid.isNull || bad(col("x")) || bad(col("y"))
+    points.select(gid.as("gid"), when(badRow, fail).otherwise(col("x")).as("x"),
+      when(badRow, fail).otherwise(col("y")).as("y"))
+  }
+
   /** Bounded max-heap of (dist, gid), capacity k, with deterministic
     * (dist, gid) ordering.
     */
-  private final class TopK(k: Int) {
+  private final class TopK(k: Int) extends Serializable {
     val ds = new Array[Double](k)
     val gs = new Array[Long](k)
     var size = 0
@@ -109,6 +177,12 @@ object KnnWeights {
         }
       }
     }
+    /** Offers every entry of `o`, a heap over disjoint candidates. */
+    def merge(o: TopK): TopK = {
+      var i = 0
+      while (i < o.size) { offer(o.ds(i), o.gs(i)); i += 1 }
+      this
+    }
     /** kth (largest kept) distance, or +inf when under-filled. */
     def kth: Double = if (size == 0) Double.PositiveInfinity else ds(0)
     /** drain into (nbrs, dists) sorted by (dist, gid) asc. */
@@ -127,13 +201,12 @@ object KnnWeights {
   def knnRows(points: DataFrame, conf: Conf,
               homeFilter: Option[Column] = None): DataFrame = {
     val spark = points.sparkSession
-    import spark.implicits._
     val s = conf.cellSize.getOrElse(autoCellSize(points, conf.k))
     val k = conf.k
     val cfg = conf
 
-    val pts = points.select(col("gid").cast("long"), col("x"), col("y"))
-      .withColumn("cell", Tiling.cellIdCol(col("x"), col("y"), s))
+    val checked = checkedPoints(points)
+    val pts = checked.withColumn("cell", Tiling.cellIdCol(col("x"), col("y"), s))
 
     // ship every point to its 9-cell block; home flagged by delta==0.
     // Grouping is done by hash-repartition + in-partition sort on the
@@ -163,14 +236,14 @@ object KnnWeights {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     import org.apache.spark.sql.catalyst.util.ArrayData
-    import org.apache.spark.sql.types._
-    val outSchema = StructType(Seq(
+    val rowSchema = StructType(Seq(
       StructField("gid", LongType, nullable = false),
       StructField("x", DoubleType, nullable = false),
       StructField("y", DoubleType, nullable = false),
       StructField("nbrs", ArrayType(LongType, containsNull = false)),
-      StructField("dists", ArrayType(DoubleType, containsNull = false)),
-      StructField("certified", BooleanType, nullable = false)))
+      StructField("dists", ArrayType(DoubleType, containsNull = false))))
+    // ring: 0 when certified, else the ring the completion pass scans
+    val outSchema = rowSchema.add("ring", IntegerType, nullable = false)
     val outRdd = org.apache.spark.sql.graftshim.ColumnShim
       .toInternalRdd(shippedDf)
       .mapPartitions { it =>
@@ -231,83 +304,133 @@ object KnnWeights {
               i += 1
             }
             val (nbrs, dists) = heap.sortedOut()
-            val certified = heap.size == k &&
-              heap.kth < certBound(cfg, s, 1, y)
             new GenericInternalRow(Array[Any](gid, x, y,
               ArrayData.toArrayData(nbrs), ArrayData.toArrayData(dists),
-              certified))
+              nextRing(cfg, s, 1, heap.size, heap.kth, y)))
           }
         }
       }
     val round1 = org.apache.spark.sql.graftshim.ColumnShim
       .internalDf(spark, outRdd, outSchema).cache()
-    val loopCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val parts = complete(round1.filter(col("ring") > 0).select("gid", "x", "y", "ring"),
+      checked, cfg, s, rowSchema)
+    val done = (round1.filter(col("ring") === 0).select("gid", "x", "y", "nbrs", "dists") +:
+      parts).reduce(_ unionByName _)
+    // Materialize once (one pass over the already-cached round1), then
+    // release it — see graft.core.Materialize for the rationale and the
+    // reliable-checkpoint cluster mode.
+    val out = graft.core.Materialize.releasing(done, Seq(round1))
+    parts.foreach(graft.core.Materialize.release)
+    out
+  }
 
-    val resolved = round1.filter(col("certified"))
-      .select("gid", "x", "y", "nbrs", "dists")
-
-    val unresolvedPts = round1.filter(!col("certified"))
-      .select("gid", "x", "y")
-      .withColumn("cell", Tiling.cellIdCol(col("x"), col("y"), s))
-
-    // expanding-radius completion for the stragglers (normally <<1%)
-    var done = resolved
-    var unresolved = unresolvedPts
-    var r = 2
-    var exhausted = false
-    var remaining = unresolved.limit(1).count() > 0
-    val ptsB = pts.select(col("gid").as("bgid"), col("x").as("bx"),
-      col("y").as("by"), col("cell").as("bcell"))
-    while (remaining) {
-      val cand =
-        if (!exhausted) {
-          val blockDeltas = (for (dx <- -r to r; dy <- -r to r)
-            yield dx.toLong * Tiling.Mul + dy).toArray
-          unresolved
-            .withColumn("__delta", explode(typedLit(blockDeltas)))
-            .withColumn("__ccell", col("cell") + col("__delta"))
-            .join(ptsB, col("__ccell") === col("bcell"))
-            .filter(col("gid") =!= col("bgid"))
-        } else {
-          broadcast(unresolved).crossJoin(ptsB)
-            .filter(col("gid") =!= col("bgid"))
+  /** Finishes round 1's stragglers `(gid, x, y, ring)` by completion
+    * passes over the `checked` points; returns their rows as frames of
+    * `schema`. Stragglers come to the driver in gid order, at most
+    * `batch` at a time (the most one pass could take); the first fetch
+    * also fills round 1's cache. Each pass takes a gid-order prefix of
+    * the pending ones within [[MaxPassEntries]] and sends back those it
+    * could not finish with their next ring. A batch's rows stay a
+    * driver-local relation only when no batch follows; otherwise they
+    * are checkpointed off the driver, so it never holds more than one
+    * batch of rows.
+    */
+  private def complete(stragglers: DataFrame, checked: DataFrame, cfg: Conf,
+                       s: Double, schema: StructType): Seq[DataFrame] = {
+    val spark = stragglers.sparkSession
+    val k = cfg.k
+    val batch = math.max(1, MaxPassEntries / (k + 1))
+    def fetch(after: Option[Long]): Array[Straggler] =
+      after.fold(stragglers)(g => stragglers.filter(col("gid") > g))
+        .orderBy("gid").limit(batch + 1).collect()
+        .map(r => Straggler(r.getLong(0), r.getDouble(1), r.getDouble(2), r.getInt(3)))
+    val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    var fetched = fetch(None)
+    while (fetched.nonEmpty) {
+      val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+      var pending = fetched.take(batch).toSeq
+      while (pending.nonEmpty) {
+        var cost = 0L
+        val fit = pending.indexWhere { st =>
+          cost += k + (if (st.ring == AllPoints) 1L
+            else (2L * st.ring + 1) * (2L * st.ring + 1))
+          cost > MaxPassEntries
         }
-      val rr = r; val ex = exhausted
-      val topk = cand.select(col("gid"), col("x"), col("y"),
-          col("bgid"), col("bx"), col("by"))
-        .as[(Long, Double, Double, Long, Double, Double)]
-        .groupByKey(_._1)
-        .mapGroups { (gid, it) =>
-          val heap = new TopK(k)
-          var x = 0.0; var y = 0.0
-          it.foreach { c =>
-            x = c._2; y = c._3
-            heap.offer(distOf(cfg)(x, y, c._5, c._6), c._4)
-          }
-          val (nbrs, dists) = heap.sortedOut()
-          val certified = ex ||
-            (heap.size == k && heap.kth < certBound(cfg, s, rr, y))
-          (gid, x, y, nbrs, dists, certified)
-        }.toDF("gid", "x", "y", "nbrs", "dists", "certified").cache()
-      loopCaches += topk
-      done = done.unionByName(topk.filter(col("certified"))
-        .select("gid", "x", "y", "nbrs", "dists"))
-      if (exhausted) remaining = false
-      else {
-        // anti-join, NOT topk.filter(!certified): a point with zero
-        // candidates in this radius is absent from topk entirely but
-        // must stay unresolved
-        unresolved = unresolved.join(
-          topk.filter(col("certified")).select("gid"), Seq("gid"), "left_anti")
-        remaining = unresolved.limit(1).count() > 0
-        r *= 2
-        if (r > 64) exhausted = true
+        val (now, later) = pending.splitAt(if (fit < 0) pending.length else math.max(1, fit))
+        val heaps = completionPass(checked, cfg, s, now.toArray)
+        val again = now.indices.flatMap { i =>
+          val st = now(i); val h = heaps(i)
+          val next = nextRing(cfg, s, st.ring, h.size, h.kth, st.y)
+          if (next == 0) {
+            val (nbrs, dists) = h.sortedOut()
+            rows += Row(st.gid, st.x, st.y, nbrs, dists)
+            None
+          } else Some(st.copy(ring = next))
+        }
+        pending = again ++ later
       }
+      val more = fetched.length > batch
+      val part = spark.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*), schema)
+      parts += (if (more) graft.core.Materialize.releasing(part, Nil) else part)
+      fetched = if (more) fetch(Some(fetched(batch - 1).gid)) else Array.empty
     }
-    // Materialize once (one pass over the already-cached parents), then
-    // release the internal caches — see graft.core.Materialize for the
-    // rationale and the reliable-checkpoint cluster mode.
-    graft.core.Materialize.releasing(done, round1 +: loopCaches.toSeq)
+    parts.toSeq
+  }
+
+  /** A home whose top-k round 1 could not certify, with the Chebyshev
+    * ring (or [[AllPoints]]) its next completion pass scans.
+    */
+  private final case class Straggler(gid: Long, x: Double, y: Double, ring: Int)
+
+  /** What a completion pass broadcasts: the stragglers and a sorted index
+    * of their ring cells. An index key packs (cell << 21 | straggler): a
+    * valid cell id is < 2^42 and a pass has < 2^20 stragglers.
+    */
+  private final case class PassPlan(gids: Array[Long], xs: Array[Double],
+                                    ys: Array[Double], keys: Array[Long],
+                                    everywhere: Array[Int])
+
+  /** One job over the checked `points`: offer every point to each
+    * straggler whose ring covers its cell, and to every straggler that
+    * takes all points; per-partition heaps merge by `treeReduce`. Returns
+    * one heap per straggler, in `todo` order, holding the top-k of its
+    * ring's block (or of all points).
+    */
+  private def completionPass(points: DataFrame, cfg: Conf, s: Double,
+                             todo: Array[Straggler]): Array[TopK] = {
+    val keys = todo.indices.iterator.filter(todo(_).ring != AllPoints).flatMap { i =>
+      val st = todo(i)
+      val home = Tiling.cellId(st.x, st.y, s)
+      Tiling.block(home, st.ring).iterator.map(c => (c << 21) | i)
+    }.toArray
+    java.util.Arrays.sort(keys)
+    val sc = points.sparkSession.sparkContext
+    val plan = sc.broadcast(PassPlan(todo.map(_.gid), todo.map(_.x),
+      todo.map(_.y), keys, todo.indices.filter(todo(_).ring == AllPoints).toArray))
+    val k = cfg.k; val m = todo.length
+    try {
+      org.apache.spark.sql.graftshim.ColumnShim
+        .toInternalRdd(points)
+        .mapPartitions { it =>
+          val p = plan.value
+          val heaps = Array.fill(m)(new TopK(k))
+          def offer(i: Int, g: Long, x: Double, y: Double): Unit =
+            if (g != p.gids(i)) heaps(i).offer(distOf(cfg)(p.xs(i), p.ys(i), x, y), g)
+          it.foreach { row =>
+            val g = row.getLong(0); val x = row.getDouble(1); val y = row.getDouble(2)
+            val cell = Tiling.cellId(x, y, s)
+            var j = java.util.Arrays.binarySearch(p.keys, cell << 21)
+            if (j < 0) j = -j - 1
+            while (j < p.keys.length && (p.keys(j) >>> 21) == cell) {
+              offer((p.keys(j) & ((1L << 21) - 1)).toInt, g, x, y)
+              j += 1
+            }
+            p.everywhere.foreach(offer(_, g, x, y))
+          }
+          Iterator.single(heaps)
+        }
+        .treeReduce { (a, b) => a.indices.foreach(i => a(i).merge(b(i))); a }
+    } finally plan.destroy()
   }
 
   /** `knn_weights_sub(gid, geom, k, start, end)` parity
