@@ -60,9 +60,7 @@ object RedcapProfile {
       if x + dx < side && y + dy >= 0 && y + dy < rows
     } yield (y * side + x, (y + dy) * side + (x + dx))).toArray
     val bounds = Array.fill(n)(0.0)
-    // optional args: [n] [linkage-substring] [layout full|condensed]
-    // — the A/B hooks for the D-matrix layout experiment
-    args.lift(2).foreach(l => sys.props("graft.redcap.layout") = l)
+    // optional args: [n] [linkage-substring]
     val methods = Seq("firstorder-singlelinkage", "fullorder-singlelinkage",
       "fullorder-completelinkage", "fullorder-averagelinkage",
       "fullorder-wardlinkage")
@@ -72,7 +70,7 @@ object RedcapProfile {
       val labels = Regionalize.solve(n, scaled, edges, bounds,
         Regionalize.Conf(k = 6, method = m))
       val sec = (System.nanoTime() - t0) / 1e9
-      println(f"$m%-28s n=$n sec=$sec%.3f clusters=${labels.max} layout=${args.lift(2).getOrElse("auto")}")
+      println(f"$m%-28s n=$n sec=$sec%.3f clusters=${labels.max}")
     }
   }
 

@@ -204,26 +204,14 @@ object Regionalize {
       "wardlinkage").contains(linkage), s"unknown linkage '$linkage'")
     val ward = linkage == "wardlinkage"
     // Dissimilarity matrix, LW-updated in place: condensed upper
-    // triangle by default. A mirrored row-major FULL layout (three
-    // sequential streams per sweep instead of strided reads for x < row)
-    // was A/B-tested interleaved at 20k (graft.RedcapProfile, 4 rounds
-    // per layout) and made NO measurable difference — run-to-run wall
-    // swings 14-85 s on identical code/input in this sandbox, entirely
-    // host contention windows, and within a quiet window both layouts
-    // time the same. Condensed stays (half the memory); `full` remains
-    // available via -Dgraft.redcap.layout for re-running the experiment.
+    // triangle, half the memory of a mirrored full layout, which timed
+    // the same in an A/B at 20k.
     val nv = scaled.length
-    val useFull = sys.props.get("graft.redcap.layout") match {
-      case Some("full") => n <= 46000
-      case _ => false
-    }
-    val dFull: Array[Double] = if (useFull) new Array[Double](n * n) else null
-    val dCond: Array[Double] = if (useFull) null
-      else new Array[Double](n.toLong * (n - 1) / 2 match {
-        case m if m <= Int.MaxValue => m.toInt
-        case _ => throw new IllegalArgumentException(
-          s"full-order linkage needs an O(N^2) matrix; N=$n too large")
-      })
+    val dCond = new Array[Double](n.toLong * (n - 1) / 2 match {
+      case m if m <= Int.MaxValue => m.toInt
+      case _ => throw new IllegalArgumentException(
+        s"full-order linkage needs an O(N^2) matrix; N=$n too large")
+    })
     // no tuple: `val (a, b) = ...` here allocated a Tuple2 per access —
     // hundreds of millions of them across init + sweeps, which turned
     // the solve into a GC benchmark (13 s init for a 1.6 GB fill)
@@ -232,12 +220,8 @@ object Regionalize {
       val b = if (i < j) j else i
       a * n - a * (a + 1) / 2 + (b - a - 1)
     }
-    @inline def dGet(i: Int, j: Int): Double =
-      if (useFull) dFull(i * n + j) else dCond(dIdx(i, j))
-    @inline def dSet(i: Int, j: Int, v: Double): Unit =
-      if (useFull) { dFull(i * n + j) = v; dFull(j * n + i) = v }
-      else dCond(dIdx(i, j)) = v
-    val tInit0 = System.nanoTime()
+    @inline def dGet(i: Int, j: Int): Double = dCond(dIdx(i, j))
+    @inline def dSet(i: Int, j: Int, v: Double): Unit = dCond(dIdx(i, j)) = v
     // O(N²) matrix fill, parallel by row: every (i, j) entry is an
     // independent pure function of the value matrix, so threading the
     // row loop is bit-identical to the serial fill. (The sweep below is
@@ -260,9 +244,6 @@ object Regionalize {
       }
     }
 
-    if (sys.props.contains("graft.redcap.profile") ||
-        sys.env.contains("GRAFT_REDCAP_PROFILE"))
-      println(f"fullOrderTree: init=${(System.nanoTime() - tInit0) / 1e9}%.2f")
     val uf = new UnionFind(n)
     val sizes = Array.fill(n)(1)
     @inline def pairKey(a: Int, b: Int): Long =
@@ -312,8 +293,6 @@ object Regionalize {
       case "singlelinkage" => 0; case "completelinkage" => 1
       case "averagelinkage" => 2; case _ => 3
     }
-    val prof = sys.props.contains("graft.redcap.profile") ||
-      sys.env.contains("GRAFT_REDCAP_PROFILE")
 
     // Persistent worker pool for the per-merge LW sweep. A fork/join
     // submission per merge costs ~0.15 ms of coordination — at ~N
@@ -328,8 +307,7 @@ object Regionalize {
     // ~16 workers saturate the sweep's memory bandwidth; beyond that the
     // barrier's unpark fan-out costs more than the extra threads earn
     // (A/B at 20k: 15 workers 1.2 s, 31 workers 2.3 s, 4 workers 2.7 s)
-    val nw = sys.env.get("GRAFT_REDCAP_WORKERS").map(_.toInt).getOrElse(
-      math.max(1, math.min(Runtime.getRuntime.availableProcessors - 1, 16)))
+    val nw = math.max(1, math.min(Runtime.getRuntime.availableProcessors - 1, 16))
     val usePool = n >= parThreshold && nw > 1
     var mRa = 0; var mRb = 0; var mC = 0; var mCnt = 0
     var mD = 0.0; var mNAd = 0.0; var mNBd = 0.0; var mInvAB = 0.0
@@ -371,14 +349,11 @@ object Regionalize {
       th.start()
     }
 
-    var tSweep = 0L; var tBook = 0L; var nPops = 0L; var nPush = 0L
-    val tLoop0 = System.nanoTime()
     val tree = mutable.ArrayBuffer.empty[(Int, Int)]
     var nClusters = n
     try {
     while (nClusters > 1 && heap.size > 0) {
       heap.pop()
-      nPops += 1
       val d = heap.topD; val ra = heap.topA; val rb = heap.topB
       // valid iff both are live roots, still contiguous, and d is current
       val live = uf.find(ra) == ra && uf.find(rb) == rb &&
@@ -396,7 +371,6 @@ object Regionalize {
         // full Lance-Williams sweep over all live roots (branch-free
         // dispatch: the string match was ~20x the arithmetic per step);
         // the worker pool takes over while the live set is large
-        val tS0 = if (prof) System.nanoTime() else 0L
         if (usePool && liveCnt >= parThreshold) {
           mRa = ra; mRb = rb; mC = c; mCnt = liveCnt
           mD = d; mNAd = nAd; mNBd = nBd; mInvAB = invAB
@@ -408,8 +382,6 @@ object Regionalize {
             lwUpdateAt(liveArr(p), ra, rb, c, d, nAd, nBd, invAB); p += 1
           }
         }
-        if (prof) tSweep += System.nanoTime() - tS0
-        val tB0 = if (prof) System.nanoTime() else 0L
         // contiguity bookkeeping + heap entries only for contiguous pairs
         nbrs.foreach { x2 =>
           val kc = pairKey(c, x2)
@@ -422,9 +394,7 @@ object Regionalize {
           }
           contig(x2) -= ra; contig(x2) -= rb; contig(x2) += c
           heap.push(dGet(c, x2), math.min(c, x2), math.max(c, x2))
-          nPush += 1
         }
-        if (prof) tBook += System.nanoTime() - tB0
         unlink(o)
         contig(c) = nbrs
         contig(o) = null // free
@@ -437,10 +407,6 @@ object Regionalize {
       if (phaser != null) phaser.forceTermination()
     }
     require(nClusters == 1, "full-order tree did not converge (disconnected?)")
-    if (prof)
-      println(f"fullOrderTree: loop=${(System.nanoTime() - tLoop0) / 1e9}%.2f " +
-        f"sweep=${tSweep / 1e9}%.2f book=${tBook / 1e9}%.2f " +
-        s"pops=$nPops pushes=$nPush heapPeak=${heap.size}")
     tree.toArray
   }
 

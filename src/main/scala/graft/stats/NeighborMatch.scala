@@ -13,15 +13,14 @@ import org.apache.spark.sql.functions._
   * reports per observation the overlap cardinality v and the
   * hypergeometric tail probability P(X >= v), X ~ Hypergeom(N-1, k, k).
   *
-  * Spark shape: BOTH kNN sides run the cell-ring engine — ≤2-dim
-  * euclidean attribute spaces reuse the planar engine directly
-  * (attribute values become coordinates); 3+ dims and manhattan run the
-  * same discipline with full-dimensional exact distances over a 2-d
-  * projection grid ([[attrKnnHighDim]]) — no cross join and no O(N²)
-  * stage at ANY dimensionality; scaling moments come from one
-  * aggregation, not a driver collect. The hypergeometric p depends only
-  * on the overlap cardinality v ∈ [0, k], so it's a k+1-element literal
-  * lookup — no UDF.
+  * Spark shape: BOTH kNN sides run the one kNN engine (`KnnWeights`):
+  * the spatial side over (x, y), the attribute side over the scaled
+  * vectors with euclidean or manhattan distance over all dims, gridded
+  * by their first two — no cross join and no O(N²) stage at ANY
+  * dimensionality; scaling moments come from one aggregation, not a
+  * driver collect. The hypergeometric p depends only on the overlap
+  * cardinality v ∈ [0, k], so it's a k+1-element literal lookup — no
+  * UDF.
   */
 object NeighborMatch {
 
@@ -144,128 +143,15 @@ object NeighborMatch {
     }
   }
 
-  /** Exact attribute-space kNN pairs (gid, anbr) — no cross join at ANY
-    * dimensionality. ≤2-dim euclidean (and 1-dim manhattan, which is the
-    * same metric) maps attributes to coordinates and runs the planar
-    * cell-ring engine directly; everything else runs
-    * [[attrKnnHighDim]] — the same cell-ring discipline over the first
-    * two scaled dims with exact full-dimensional distances.
+  /** Exact attribute-space kNN pairs (gid, anbr) over the scaled
+    * vectors `sv` of `nv` values, euclidean or manhattan: the kNN
+    * engine's vector metrics (`KnnWeights`), for every dimension.
     */
   private[stats] def attrKnn(scaled: DataFrame, nv: Int, k: Int,
-                             distType: String): DataFrame = {
-    if (nv == 1 || (distType == "euclidean" && nv <= 2)) {
-      val pts = scaled.select(col("gid"), col("sv")(0).as("x"),
-        (if (nv == 2) col("sv")(1) else lit(0.0)).as("y"))
-      KnnWeights.pairs(pts, KnnWeights.Conf(k = k))
-        .select(col("gid"), col("nbr").as("anbr"))
-    } else attrKnnHighDim(scaled, nv, k, distType == "manhattan")
-  }
-
-  /** Exact d-dimensional kNN via the cell-ring discipline: grid cells
-    * over the FIRST TWO scaled dims (sized for ~k candidates per 3×3
-    * block), candidates from the ±r Chebyshev block, full-dimensional
-    * exact distance per candidate. Certification transfers from the
-    * planar engine because both L2 and L1 full-space distances dominate
-    * the 2-d projection distance: a point outside the ±r block differs
-    * by ≥ r·cellSize in the projection, so `kth < r·cellSize` proves the
-    * top-k complete. Uncertified stragglers re-run at doubled radius,
-    * ending in a broadcast completion of the (few) leftovers — never an
-    * N×N cross join. This is its own copy of the expanding-radius join
-    * loop that `KnnWeights.knnRows` has replaced with a broadcast
-    * completion pass; porting it onto that pass is a ROADMAP item.
-    * Replaces the reference's single-node kd-tree
-    * (`neighbor_match.c:46-230`) at any dimensionality.
-    */
-  private def attrKnnHighDim(scaled: DataFrame, nv: Int, k: Int,
-                             manhattan: Boolean): DataFrame = {
-    val spark = scaled.sparkSession
-    import spark.implicits._
-    val b = scaled.agg(min(col("sv")(0)), max(col("sv")(0)),
-      min(col("sv")(1)), max(col("sv")(1)), count(lit(1))).head()
-    val (mnx, mxx, mny, mxy, n) = (b.getDouble(0), b.getDouble(1),
-      b.getDouble(2), b.getDouble(3), b.getLong(4))
-    val w = math.max(mxx - mnx, 1e-9); val h = math.max(mxy - mny, 1e-9)
-    val s = math.max(
-      math.sqrt(w * h * math.max(1, k) / math.max(1L, n)), 1e-9)
-
-    val pts = scaled.select(col("gid").cast("long").as("gid"), col("sv"))
-      .withColumn("cell",
-        graft.core.Tiling.cellIdCol(col("sv")(0), col("sv")(1), s))
-      .cache()
-    val ptsB = pts.select(col("gid").as("bgid"), col("sv").as("bsv"),
-      col("cell").as("bcell"))
-
-    val dims = nv // stable capture for the closure
-    def dist(a: Seq[Double], c: Seq[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < dims) {
-        val d = a(i) - c(i)
-        acc += (if (manhattan) math.abs(d) else d * d)
-        i += 1
-      }
-      if (manhattan) acc else math.sqrt(acc)
-    }
-
-    val loopCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var done: DataFrame = null
-    var unresolved = pts
-    var r = 1
-    var exhausted = false
-    var remaining = true
-    while (remaining) {
-      val cand =
-        if (!exhausted) {
-          val blockDeltas = (for (dx <- -r to r; dy <- -r to r)
-            yield dx.toLong * graft.core.Tiling.Mul + dy).toArray
-          unresolved
-            .withColumn("__delta", explode(typedLit(blockDeltas)))
-            .withColumn("__ccell", col("cell") + col("__delta"))
-            .join(ptsB, col("__ccell") === col("bcell"))
-            .filter(col("gid") =!= col("bgid"))
-        } else {
-          broadcast(unresolved).crossJoin(ptsB)
-            .filter(col("gid") =!= col("bgid"))
-        }
-      val rr = r; val ex = exhausted
-      val topk = cand.select(col("gid"), col("sv"), col("bgid"), col("bsv"))
-        .as[(Long, Seq[Double], Long, Seq[Double])]
-        .groupByKey(_._1)
-        .mapGroups { (gid, it) =>
-          // deterministic insertion top-k on (dist, gid) asc, k small
-          val ds = Array.fill(k)(Double.PositiveInfinity)
-          val gs = new Array[Long](k)
-          var sz = 0
-          it.foreach { c =>
-            val d = dist(c._2, c._4); val g = c._3
-            if (sz < k || d < ds(k - 1) || (d == ds(k - 1) && g < gs(k - 1))) {
-              var i = math.min(sz, k - 1)
-              while (i > 0 &&
-                     (ds(i - 1) > d || (ds(i - 1) == d && gs(i - 1) > g))) {
-                ds(i) = ds(i - 1); gs(i) = gs(i - 1); i -= 1
-              }
-              ds(i) = d; gs(i) = g
-              if (sz < k) sz += 1
-            }
-          }
-          val certified = ex || (sz == k && ds(k - 1) < rr * s)
-          (gid, gs.take(sz).toSeq, certified)
-        }.toDF("gid", "anbrs", "certified").cache()
-      loopCaches += topk
-      val good = topk.filter(col("certified")).select("gid", "anbrs")
-      done = if (done == null) good else done.unionByName(good)
-      if (exhausted) remaining = false
-      else {
-        unresolved = unresolved.join(
-          topk.filter(col("certified")).select("gid"), Seq("gid"), "left_anti")
-        remaining = unresolved.limit(1).count() > 0
-        r *= 2
-        if (r > 64) exhausted = true
-      }
-    }
-    // scoped release of the per-round caches (graft.core.Materialize)
-    val out = graft.core.Materialize.releasing(done, pts +: loopCaches.toSeq)
-    out.select(col("gid"), explode(col("anbrs")).as("anbr"))
-  }
+                             distType: String): DataFrame =
+    KnnWeights.vectorRows(scaled.select(col("gid"), col("sv").as("v")), k, nv,
+        distType == "manhattan")
+      .select(col("gid"), explode(col("nbrs")).as("anbr"))
 
   /** points: (gid, x, y); values: (gid, vals array<double>).
     * Returns (gid, card, p). scaleMethod per lisa.h:139-159; distType
@@ -275,14 +161,34 @@ object NeighborMatch {
           scaleMethod: String = "standardize",
           distType: String = "euclidean",
           cellSize: Option[Double] = None): DataFrame = {
+    // one pass over values: the row count, and the vector length from
+    // its min and max; rows whose lengths differ are named here, any
+    // other bad vector by the row check below, which runs before the
+    // scaling moments could spread one NaN to every row
+    val len = when(col("vals").isNotNull, size(col("vals")))
+    val m = values.agg(count(lit(1)), min(len), max(len),
+      min_by(col("gid"), len), max_by(col("gid"), len)).head()
+    val n = m.getLong(0)
+    if (n == 0) {
+      require(points.isEmpty, "neighbor match: values has no rows but points has")
+      return points.select(col("gid").cast("long").as("gid"),
+        lit(0.0).as("card"), lit(1.0).as("p"))
+    }
+    val nv = if (m.isNullAt(2)) 0 else m.getInt(2)
+    require(m.isNullAt(1) || m.getInt(1) == nv, s"neighbor match: gid ${m.get(3)} " +
+      s"has ${m.getInt(1)} values but gid ${m.get(4)} has $nv; every vector must " +
+      "have the same length")
+    require(nv > 0 || m.isNullAt(2), "neighbor match needs at least one value per row")
+    val gid = col("gid").cast("long")
+    val checked = values.select(gid.as("gid"),
+      KnnWeights.checkedVector(gid, col("vals").cast("array<double>"), nv).as("vals"))
+
     // spatial kNN via the cell-ring engine
     val spatial = KnnWeights.pairs(points, KnnWeights.Conf(k = k,
         cellSize = cellSize))
       .select(col("gid"), col("nbr"))
 
-    val nv = values.select(size(col("vals"))).head().getInt(0)
-    val n = values.count()
-    val scaled = scaleVals(values, nv, scaleMethod)
+    val scaled = scaleVals(checked, nv, scaleMethod)
     val aknn = attrKnn(scaled, nv, k, distType)
 
     // overlap cardinality by inner join of the two neighbor sets

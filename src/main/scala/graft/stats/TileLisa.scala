@@ -67,7 +67,7 @@ object TileLisa {
   /** Derive a tile edge from point density: square tiles sized so a
     * tile holds ~`targetRows` points under uniform density —
     * `s = sqrt(w·h·target/n)` over the bounding box, the same density
-    * rule `NeighborMatch.attrKnnHighDim` uses for its candidate cells.
+    * rule `KnnWeights.autoCellSize` uses for its candidate cells.
     * 100k rows/window keeps the per-window kernel (O(rows × k × perms))
     * and its lookup table comfortably inside one task while leaving
     * ~n/100k tiles of parallelism; callers with strong window-semantics

@@ -5,11 +5,21 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** k-nearest-neighbor spatial weights, rebuilt Spark-first.
+/** k-nearest-neighbor spatial weights, rebuilt Spark-first, and the one
+  * kNN engine of the repo: the attribute-space kNN of the neighbor match
+  * test (`NeighborMatch`) runs on it too.
   *
   * Reference behavior: `knn_weights(gid, geom, k [, power, is_inverse,
   * is_arc, is_mile])` (`postgeoda/src/weights_knn.c:58-202`,
   * `postgeoda/src/proxy.cpp:130-139`) — a single-node kd-tree build.
+  *
+  * Metrics: a point is a gid and a coordinate vector whose first two
+  * coordinates, (x, y), place it on the grid. Spatial points are just
+  * (x, y), ranked by planar or arc (great-circle, miles or km) distance.
+  * Attribute vectors `v` of d values are ranked by euclidean (L2) or
+  * manhattan (L1) distance over all d, and projected to (v(0), v(1)),
+  * with y = 0 for one dim. No metric is smaller than the projection's
+  * gap, so the certification below holds for all four.
   *
   * Spark shape (SURVEY §7.4): grid cells sized for ~k points per
   * Chebyshev-1 block; every point is SHIPPED to the 9 cells of its block
@@ -34,8 +44,9 @@ import org.apache.spark.sql.types._
   * stragglers are fetched in gid order and finished by further passes of
   * the same code.
   *
-  * Input: a null gid, or a null, NaN or infinite x/y, fails the build
-  * with a message naming the gid.
+  * Input: a null gid, a null, NaN or infinite x/y, or an attribute
+  * vector that is null, holds a null, NaN or infinite value, or does not
+  * hold d values, fails the build with a message naming the gid.
   *
   * Scale notes: shuffle volume is 9×|points| fixed-width rows; skewed
   * (dense) cells only grow the in-memory candidate buffer of their one
@@ -72,36 +83,68 @@ object KnnWeights {
   /** Ring value of a straggler that is offered every point. */
   private val AllPoints = Int.MaxValue
 
-  /** Auto cell size targeting ~k candidates per 3x3 block. */
+  /** The distance a build ranks by (see the object doc): `kind` is one
+    * of the constants in the companion; `dims` is the length of the
+    * vector `v` that L2 and L1 points carry (0 for planar and arc, whose
+    * points carry none); `mile` picks arc's unit.
+    */
+  private final case class Metric(kind: Int, dims: Int, mile: Boolean) {
+    def vector: Boolean = dims > 0
+  }
+  private object Metric {
+    val Planar = 0; val Arc = 1; val L2 = 2; val L1 = 3
+  }
+
+  /** Auto cell size targeting ~k candidates per 3x3 block. Points spread
+    * along one axis only (the other extent under k/n of it, e.g. one-dim
+    * attributes at y = 0) get ~k per cell along that axis instead of an
+    * area rule that shrinks to a sliver of the 1e-9 floor.
+    */
   def autoCellSize(points: DataFrame, k: Int): Double = {
     val row = points.agg(min("x"), max("x"), min("y"), max("y"),
       count(lit(1))).head()
     val (mnx, mxx, mny, mxy, n) = (row.getDouble(0), row.getDouble(1),
       row.getDouble(2), row.getDouble(3), row.getLong(4))
     val w = math.max(mxx - mnx, 1e-9); val h = math.max(mxy - mny, 1e-9)
-    math.max(math.sqrt(w * h * math.max(1, k) / math.max(1L, n)), 1e-9)
+    val perPoint = math.max(1, k).toDouble / math.max(1L, n)
+    math.max(math.max(math.sqrt(w * h * perPoint), math.max(w, h) * perPoint), 1e-9)
   }
 
-  @inline private def distOf(conf: Conf)(ax: Double, ay: Double,
-                                         bx: Double, by: Double): Double =
-    if (conf.isArc) Dist.arc(ax, ay, bx, by, conf.isMile)
-    else Dist.euclidean(ax, ay, bx, by)
+  /** Distance under `m` from point a to point b, given their grid
+    * coordinates; L2 and L1 read `m.dims` values of each vector, a's from
+    * `av` at `ai` and b's from `bv` at `bi`. The sum starts at 0.0, so
+    * two-dim L2 is bit-equal to planar distance.
+    */
+  @inline private def dist(m: Metric, ax: Double, ay: Double, av: Array[Double], ai: Int,
+                           bx: Double, by: Double, bv: Array[Double], bi: Int): Double =
+    if (m.kind == Metric.Planar) Dist.euclidean(ax, ay, bx, by)
+    else if (m.kind == Metric.Arc) Dist.arc(ax, ay, bx, by, m.mile)
+    else {
+      val l1 = m.kind == Metric.L1
+      var acc = 0.0; var j = 0
+      while (j < m.dims) {
+        val d = av(ai + j) - bv(bi + j)
+        acc += (if (l1) math.abs(d) else d * d)
+        j += 1
+      }
+      if (l1) acc else math.sqrt(acc)
+    }
 
   /** Certification bound: the minimum possible distance to any point
     * OUTSIDE the ±`cells` Chebyshev block of a home point at latitude
-    * `y`, in the same units as `distOf`. Planar: cells × cellSize. Arc:
+    * `y`, in the same units as `dist`. Planar: cells × cellSize. Arc:
     * the block guarantees ≥ cells×cellSize degrees of separation in lat
     * or lon; lat degrees are worth degLen, lon degrees shrink by cos at
     * the worst latitude the un-excluded band can reach (|y| + extent),
     * so the bound uses that cos — the unit fix for the old
-    * kth(miles) < cellSize(degrees) comparison.
+    * kth(miles) < cellSize(degrees) comparison. L2 and L1: as planar.
     */
-  @inline private def certBound(conf: Conf, cellSizeDeg: Double,
+  @inline private def certBound(m: Metric, cellSizeDeg: Double,
                                 cells: Int, y: Double): Double = {
     val span = cells * cellSizeDeg
-    if (!conf.isArc) span
+    if (m.kind != Metric.Arc) span
     else {
-      val degLen = (if (conf.isMile) Dist.EarthMiles else Dist.EarthKm) *
+      val degLen = (if (m.mile) Dist.EarthMiles else Dist.EarthKm) *
         math.Pi / 180.0
       val phi = math.min(math.abs(y) + span, 89.999)
       span * degLen * math.cos(math.toRadians(phi))
@@ -117,15 +160,17 @@ object KnnWeights {
     * monotone in r), or every point past [[MaxRing]]. An under-filled
     * heap doubles its ring.
     */
-  private def nextRing(conf: Conf, cellSize: Double, scanned: Int,
+  private def nextRing(m: Metric, k: Int, cellSize: Double, scanned: Int,
                        size: Int, kth: Double, y: Double): Int =
     if (scanned == AllPoints) 0
-    else if (size == conf.k) {
+    else if (size == k) {
       var r = 1
-      while (r <= MaxRing && !(certBound(conf, cellSize, r, y) > kth)) r += 1
+      while (r <= MaxRing && !(certBound(m, cellSize, r, y) > kth)) r += 1
       if (r <= scanned) 0 else if (r <= MaxRing) r else AllPoints
     } else if (2 * scanned <= MaxRing) 2 * scanned
     else AllPoints
+
+  private def shown(c: Column): Column = coalesce(c.cast("string"), lit("null"))
 
   /** `(gid long, x, y)` with every row checked: a null gid, or a null,
     * NaN or infinite x/y, fails the build with a message naming the gid.
@@ -135,7 +180,6 @@ object KnnWeights {
     */
   private def checkedPoints(points: DataFrame): DataFrame = {
     val gid = col("gid").cast("long")
-    def shown(c: Column): Column = coalesce(c.cast("string"), lit("null"))
     def bad(c: Column): Column = c.isNull || isnan(c) || abs(c) === Double.PositiveInfinity
     val fail = raise_error(concat(lit("kNN input gid "), shown(gid), lit(" has x="),
       shown(col("x")), lit(", y="), shown(col("y")),
@@ -143,6 +187,19 @@ object KnnWeights {
     val badRow = gid.isNull || bad(col("x")) || bad(col("y"))
     points.select(gid.as("gid"), when(badRow, fail).otherwise(col("x")).as("x"),
       when(badRow, fail).otherwise(col("y")).as("y"))
+  }
+
+  /** The attribute vector `v` (array<double>) of row `gid`, checked by
+    * [[checkedPoints]]' rule: a null gid, a null vector, a null, NaN or
+    * infinite value, or a length other than `dims` fails with a message
+    * naming the gid.
+    */
+  private[graft] def checkedVector(gid: Column, v: Column, dims: Int): Column = {
+    val badRow = gid.isNull || v.isNull || size(v) =!= dims ||
+      exists(v, e => e.isNull || isnan(e) || abs(e) === Double.PositiveInfinity)
+    when(badRow, raise_error(concat(lit("kNN input gid "), shown(gid), lit(" has values "),
+      shown(v), lit(s"; gid must be non-null and the vector hold $dims finite values"))))
+      .otherwise(v)
   }
 
   /** Bounded max-heap of (dist, gid), capacity k, with deterministic
@@ -199,13 +256,37 @@ object KnnWeights {
     * compute is pruned to the requested slice, not post-filtered.
     */
   def knnRows(points: DataFrame, conf: Conf,
-              homeFilter: Option[Column] = None): DataFrame = {
-    val spark = points.sparkSession
-    val s = conf.cellSize.getOrElse(autoCellSize(points, conf.k))
-    val k = conf.k
-    val cfg = conf
+              homeFilter: Option[Column] = None): DataFrame =
+    engine(checkedPoints(points), conf.k,
+      Metric(if (conf.isArc) Metric.Arc else Metric.Planar, 0, conf.isMile),
+      conf.cellSize, homeFilter)
 
-    val checked = checkedPoints(points)
+  /** kNN rows, as [[knnRows]], over attribute vectors `(gid, v)` of
+    * `dims` values, ranked by euclidean or, when `manhattan`, manhattan
+    * distance over all of them; x and y are the vectors' projection.
+    */
+  private[graft] def vectorRows(points: DataFrame, k: Int, dims: Int,
+                                manhattan: Boolean): DataFrame = {
+    require(dims > 0, "attribute kNN needs at least one value per vector")
+    val gid = col("gid").cast("long"); val v = col("v")
+    val checked = points.select(gid.as("gid"),
+        checkedVector(gid, v.cast("array<double>"), dims).as("v"))
+      .select(col("gid"), v(0).as("x"), (if (dims > 1) v(1) else lit(0.0)).as("y"), v)
+    engine(checked, k, Metric(if (manhattan) Metric.L1 else Metric.L2, dims, mile = false),
+      None, None)
+  }
+
+  /** The engine over `checked` points `(gid, x, y)`, plus `v` for a
+    * vector metric: round 1's cell-keyed group pass, then the completion
+    * passes for its stragglers. Returns `(gid, x, y, nbrs, dists)`.
+    */
+  private def engine(checked: DataFrame, k: Int, m: Metric, cellSize: Option[Double],
+                     homeFilter: Option[Column]): DataFrame = {
+    val spark = checked.sparkSession
+    val s = cellSize.getOrElse(autoCellSize(checked, k))
+    val stride = m.dims // vector values per point in the flat buffers below
+    val vcol = if (m.vector) Seq(col("v")) else Nil
+
     val pts = checked.withColumn("cell", Tiling.cellIdCol(col("x"), col("y"), s))
 
     // ship every point to its 9-cell block; home flagged by delta==0.
@@ -218,14 +299,14 @@ object KnnWeights {
     val homePred = homeFilter.getOrElse(lit(true))
     val shippedDf = pts
       .withColumn("__delta", explode(typedLit(deltas)))
-      .select((col("cell") + col("__delta")).as("tcell"), col("gid"),
+      .select(Seq((col("cell") + col("__delta")).as("tcell"), col("gid"),
         col("x"), col("y"),
-        ((col("__delta") === 0L) && homePred).as("home"))
+        ((col("__delta") === 0L) && homePred).as("home")) ++ vcol: _*)
       // explicit partition count: the group pass is compute-bound (heap
       // evals), so we want ~4 waves of tasks per core for balance; an
       // AQE-coalesced exchange would target 64MB IO-sized partitions and
       // under-parallelize the math
-      .repartition(4 * points.sparkSession.sessionState.conf.numShufflePartitions,
+      .repartition(4 * spark.sessionState.conf.numShufflePartitions,
         col("tcell"))
       .sortWithinPartitions("tcell")
 
@@ -242,8 +323,12 @@ object KnnWeights {
       StructField("y", DoubleType, nullable = false),
       StructField("nbrs", ArrayType(LongType, containsNull = false)),
       StructField("dists", ArrayType(DoubleType, containsNull = false))))
-    // ring: 0 when certified, else the ring the completion pass scans
-    val outSchema = rowSchema.add("ring", IntegerType, nullable = false)
+    // ring: 0 when certified, else the ring the completion pass scans;
+    // v: a vector metric's values, which a straggler takes along
+    val ringSchema = rowSchema.add("ring", IntegerType, nullable = false)
+    val outSchema =
+      if (m.vector) ringSchema.add("v", ArrayType(DoubleType, containsNull = false))
+      else ringSchema
     val outRdd = org.apache.spark.sql.graftshim.ColumnShim
       .toInternalRdd(shippedDf)
       .mapPartitions { it =>
@@ -252,6 +337,7 @@ object KnnWeights {
           private var xBuf = new Array[Double](256)
           private var yBuf = new Array[Double](256)
           private var hBuf = new Array[Boolean](256)
+          private var vBuf = new Array[Double](256 * stride)
           private var n = 0
           private var nextRow: InternalRow = if (it.hasNext) it.next() else null
           private var pendingIdx = 0 // index into buffered homes
@@ -261,6 +347,7 @@ object KnnWeights {
             xBuf = java.util.Arrays.copyOf(xBuf, cap)
             yBuf = java.util.Arrays.copyOf(yBuf, cap)
             hBuf = java.util.Arrays.copyOf(hBuf, cap)
+            vBuf = java.util.Arrays.copyOf(vBuf, cap * stride)
           }
           private def loadRun(): Unit = {
             n = 0
@@ -274,6 +361,11 @@ object KnnWeights {
               xBuf(n) = nextRow.getDouble(2)
               yBuf(n) = nextRow.getDouble(3)
               hBuf(n) = nextRow.getBoolean(4)
+              if (stride > 0) {
+                val v = nextRow.getArray(5)
+                var j = 0
+                while (j < stride) { vBuf(n * stride + j) = v.getDouble(j); j += 1 }
+              }
               n += 1
               if (it.hasNext) {
                 nextRow = it.next()
@@ -300,20 +392,24 @@ object KnnWeights {
             var i = 0
             while (i < n) {
               if (gBuf(i) != gid)
-                heap.offer(distOf(cfg)(x, y, xBuf(i), yBuf(i)), gBuf(i))
+                heap.offer(dist(m, x, y, vBuf, i0 * stride, xBuf(i), yBuf(i), vBuf, i * stride),
+                  gBuf(i))
               i += 1
             }
             val (nbrs, dists) = heap.sortedOut()
-            new GenericInternalRow(Array[Any](gid, x, y,
-              ArrayData.toArrayData(nbrs), ArrayData.toArrayData(dists),
-              nextRing(cfg, s, 1, heap.size, heap.kth, y)))
+            val ring = nextRing(m, k, s, 1, heap.size, heap.kth, y)
+            val fields = Array[Any](gid, x, y,
+              ArrayData.toArrayData(nbrs), ArrayData.toArrayData(dists), ring)
+            new GenericInternalRow(if (stride == 0) fields else fields :+
+              ArrayData.toArrayData(java.util.Arrays.copyOfRange(vBuf, i0 * stride, (i0 + 1) * stride)))
           }
         }
       }
     val round1 = org.apache.spark.sql.graftshim.ColumnShim
       .internalDf(spark, outRdd, outSchema).cache()
-    val parts = complete(round1.filter(col("ring") > 0).select("gid", "x", "y", "ring"),
-      checked, cfg, s, rowSchema)
+    val parts = complete(round1.filter(col("ring") > 0)
+        .select(Seq(col("gid"), col("x"), col("y"), col("ring")) ++ vcol: _*),
+      checked, k, m, s, rowSchema)
     val done = (round1.filter(col("ring") === 0).select("gid", "x", "y", "nbrs", "dists") +:
       parts).reduce(_ unionByName _)
     // Materialize once (one pass over the already-cached round1), then
@@ -324,7 +420,7 @@ object KnnWeights {
     out
   }
 
-  /** Finishes round 1's stragglers `(gid, x, y, ring)` by completion
+  /** Finishes round 1's stragglers `(gid, x, y, ring[, v])` by completion
     * passes over the `checked` points; returns their rows as frames of
     * `schema`. Stragglers come to the driver in gid order, at most
     * `batch` at a time (the most one pass could take); the first fetch
@@ -335,15 +431,15 @@ object KnnWeights {
     * are checkpointed off the driver, so it never holds more than one
     * batch of rows.
     */
-  private def complete(stragglers: DataFrame, checked: DataFrame, cfg: Conf,
+  private def complete(stragglers: DataFrame, checked: DataFrame, k: Int, m: Metric,
                        s: Double, schema: StructType): Seq[DataFrame] = {
     val spark = stragglers.sparkSession
-    val k = cfg.k
     val batch = math.max(1, MaxPassEntries / (k + 1))
     def fetch(after: Option[Long]): Array[Straggler] =
       after.fold(stragglers)(g => stragglers.filter(col("gid") > g))
         .orderBy("gid").limit(batch + 1).collect()
-        .map(r => Straggler(r.getLong(0), r.getDouble(1), r.getDouble(2), r.getInt(3)))
+        .map(r => Straggler(r.getLong(0), r.getDouble(1), r.getDouble(2), r.getInt(3),
+          if (m.vector) r.getSeq[Double](4).toArray else Array.emptyDoubleArray))
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var fetched = fetch(None)
     while (fetched.nonEmpty) {
@@ -357,10 +453,10 @@ object KnnWeights {
           cost > MaxPassEntries
         }
         val (now, later) = pending.splitAt(if (fit < 0) pending.length else math.max(1, fit))
-        val heaps = completionPass(checked, cfg, s, now.toArray)
+        val heaps = completionPass(checked, k, m, s, now.toArray)
         val again = now.indices.flatMap { i =>
           val st = now(i); val h = heaps(i)
-          val next = nextRing(cfg, s, st.ring, h.size, h.kth, st.y)
+          val next = nextRing(m, k, s, st.ring, h.size, h.kth, st.y)
           if (next == 0) {
             val (nbrs, dists) = h.sortedOut()
             rows += Row(st.gid, st.x, st.y, nbrs, dists)
@@ -378,17 +474,20 @@ object KnnWeights {
   }
 
   /** A home whose top-k round 1 could not certify, with the Chebyshev
-    * ring (or [[AllPoints]]) its next completion pass scans.
+    * ring (or [[AllPoints]]) its next completion pass scans and a vector
+    * metric's values `v` (empty otherwise).
     */
-  private final case class Straggler(gid: Long, x: Double, y: Double, ring: Int)
+  private final case class Straggler(gid: Long, x: Double, y: Double, ring: Int,
+                                     v: Array[Double])
 
   /** What a completion pass broadcasts: the stragglers and a sorted index
     * of their ring cells. An index key packs (cell << 21 | straggler): a
-    * valid cell id is < 2^42 and a pass has < 2^20 stragglers.
+    * valid cell id is < 2^42 and a pass has < 2^20 stragglers. `vs` holds
+    * the stragglers' vectors end to end.
     */
   private final case class PassPlan(gids: Array[Long], xs: Array[Double],
-                                    ys: Array[Double], keys: Array[Long],
-                                    everywhere: Array[Int])
+                                    ys: Array[Double], vs: Array[Double],
+                                    keys: Array[Long], everywhere: Array[Int])
 
   /** One job over the checked `points`: offer every point to each
     * straggler whose ring covers its cell, and to every straggler that
@@ -396,7 +495,7 @@ object KnnWeights {
     * one heap per straggler, in `todo` order, holding the top-k of its
     * ring's block (or of all points).
     */
-  private def completionPass(points: DataFrame, cfg: Conf, s: Double,
+  private def completionPass(points: DataFrame, k: Int, m: Metric, s: Double,
                              todo: Array[Straggler]): Array[TopK] = {
     val keys = todo.indices.iterator.filter(todo(_).ring != AllPoints).flatMap { i =>
       val st = todo(i)
@@ -405,27 +504,35 @@ object KnnWeights {
     }.toArray
     java.util.Arrays.sort(keys)
     val sc = points.sparkSession.sparkContext
-    val plan = sc.broadcast(PassPlan(todo.map(_.gid), todo.map(_.x),
-      todo.map(_.y), keys, todo.indices.filter(todo(_).ring == AllPoints).toArray))
-    val k = cfg.k; val m = todo.length
+    val plan = sc.broadcast(PassPlan(todo.map(_.gid), todo.map(_.x), todo.map(_.y),
+      todo.flatMap(_.v), keys, todo.indices.filter(todo(_).ring == AllPoints).toArray))
+    val n = todo.length
+    val stride = m.dims
     try {
       org.apache.spark.sql.graftshim.ColumnShim
         .toInternalRdd(points)
         .mapPartitions { it =>
           val p = plan.value
-          val heaps = Array.fill(m)(new TopK(k))
-          def offer(i: Int, g: Long, x: Double, y: Double): Unit =
-            if (g != p.gids(i)) heaps(i).offer(distOf(cfg)(p.xs(i), p.ys(i), x, y), g)
+          val heaps = Array.fill(n)(new TopK(k))
+          val pv = new Array[Double](stride)
           it.foreach { row =>
             val g = row.getLong(0); val x = row.getDouble(1); val y = row.getDouble(2)
+            if (stride > 0) {
+              val v = row.getArray(3)
+              var j = 0
+              while (j < stride) { pv(j) = v.getDouble(j); j += 1 }
+            }
+            def offer(i: Int): Unit =
+              if (g != p.gids(i))
+                heaps(i).offer(dist(m, p.xs(i), p.ys(i), p.vs, i * stride, x, y, pv, 0), g)
             val cell = Tiling.cellId(x, y, s)
             var j = java.util.Arrays.binarySearch(p.keys, cell << 21)
             if (j < 0) j = -j - 1
             while (j < p.keys.length && (p.keys(j) >>> 21) == cell) {
-              offer((p.keys(j) & ((1L << 21) - 1)).toInt, g, x, y)
+              offer((p.keys(j) & ((1L << 21) - 1)).toInt)
               j += 1
             }
-            p.everywhere.foreach(offer(_, g, x, y))
+            p.everywhere.foreach(offer)
           }
           Iterator.single(heaps)
         }

@@ -91,73 +91,166 @@ class NeighborMatchSpec extends AnyFunSuite {
     assert(meanCard < 1.5, s"mean overlap $meanCard")
   }
 
-  /** Driver-side exact kNN for golden comparison. */
+  /** Driver-side exact kNN pairs (gid, nbr), with the engine's sum
+    * order (0.0 first, home minus candidate) and (dist, gid) order.
+    */
   private def bruteAttrKnn(rows: Seq[(Long, Seq[Double])], k: Int,
                            manhattan: Boolean): Set[(Long, Long)] = {
-    def d(a: Seq[Double], b: Seq[Double]): Double = {
-      val t = a.iterator.zip(b.iterator).map { case (x, y) =>
-        if (manhattan) math.abs(x - y) else (x - y) * (x - y) }.sum
-      if (manhattan) t else math.sqrt(t)
-    }
-    rows.flatMap { case (g, v) =>
-      rows.filter(_._1 != g)
-        .map { case (g2, v2) => (d(v, v2), g2) }
-        .sorted.take(k).map { case (_, g2) => (g, g2) }
+    val gs = rows.map(_._1).toArray
+    val vs = rows.map(_._2.toArray).toArray
+    val kk = math.min(k, gs.length - 1)
+    gs.indices.flatMap { i =>
+      val ds = Array.fill(kk)(Double.PositiveInfinity)
+      val ns = Array.fill(kk)(Long.MaxValue)
+      var j = 0
+      while (j < gs.length) {
+        if (j != i) {
+          var acc = 0.0; var c = 0
+          while (c < vs(i).length) {
+            val t = vs(i)(c) - vs(j)(c)
+            acc += (if (manhattan) math.abs(t) else t * t); c += 1
+          }
+          val d = if (manhattan) acc else math.sqrt(acc)
+          var p = kk
+          while (p > 0 && (d < ds(p - 1) || (d == ds(p - 1) && gs(j) < ns(p - 1)))) p -= 1
+          if (p < kk) {
+            System.arraycopy(ds, p, ds, p + 1, kk - p - 1)
+            System.arraycopy(ns, p, ns, p + 1, kk - p - 1)
+            ds(p) = d; ns(p) = gs(j)
+          }
+        }
+        j += 1
+      }
+      ns.map(n => (gs(i), n))
     }.toSet
   }
 
-  test("attribute kNN: 2-dim cell-ring equals driver brute at 4k rows") {
+  /** `n` rows of `nv` values from `value(row, dim)`. */
+  private def valsDf(n: Int, nv: Int)(value: (Int, Int) => Double) = {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val n = 4000
-    val vals = (1 to n).map { i =>
-      (i.toLong, Seq((i * 7919 % 10007).toDouble, (i * 104729 % 9973).toDouble))
-    }.toDF("gid", "vals")
-    val scaled = NeighborMatch.scaleVals(vals, 2, "standardize").cache()
-    val fast = NeighborMatch.attrKnn(scaled, 2, 6, "euclidean")
-      .select("gid", "anbr").as[(Long, Long)].collect().toSet
-    val local = scaled.select("gid", "sv").as[(Long, Seq[Double])].collect().toSeq
-    val brute = bruteAttrKnn(local, 6, manhattan = false)
-    assert(fast == brute,
-      s"cell-ring vs brute diff: ${(fast diff brute).take(5)} / ${(brute diff fast).take(5)}")
-    // NOTE deliberately no plan-shape assertion here: attrKnn returns a
-    // checkpointed frame (scoped cache release), so its executed plan is
-    // a scan of the materialized blocks and can never show an internal
-    // Cartesian — the exact-equality against brute force above (and at
-    // 10k rows in the high-dim test) is the effective
-    // no-quadratic-blowup guard for this path.
-    scaled.unpersist()
+    (1 to n).map(i => (i.toLong, Seq.tabulate(nv)(d => value(i, d)))).toDF("gid", "vals")
   }
 
-  test("attribute kNN: 3-dim euclidean + 2-dim manhattan cell-ring exact at 10k rows") {
+  private def assertExact(scaled: org.apache.spark.sql.DataFrame, nv: Int, k: Int,
+                          distType: String, clue: String): Set[(Long, Long)] = {
+    import spark.implicits._
+    val got = NeighborMatch.attrKnn(scaled, nv, k, distType)
+      .select("gid", "anbr").as[(Long, Long)].collect()
+    val local = scaled.select("gid", "sv").as[(Long, Seq[Double])].collect().toSeq
+    val want = bruteAttrKnn(local, k, distType == "manhattan")
+    assert(got.length == got.toSet.size, s"$clue: duplicate pairs")
+    assert(got.toSet == want,
+      s"$clue: ${(got.toSet diff want).take(5)} / ${(want diff got.toSet).take(5)}")
+    want
+  }
+
+  test("attribute kNN is exact for every metric and dimension") {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    for ((nv, distType) <- Seq((1, "euclidean"), (1, "manhattan"), (2, "euclidean"),
+        (2, "manhattan"), (3, "euclidean"), (5, "manhattan"))) {
+      val clue = s"$nv-dim $distType"
+      // spread values, standardized; the same pairs at 1 and 7 partitions
+      val rnd = new scala.util.Random(nv * 31 + distType.length)
+      val spread = NeighborMatch.scaleVals(valsDf(1500, nv)((_, _) => rnd.nextGaussian() * 50),
+        nv, "standardize").cache()
+      val byParts = Seq(1, 7).map { p =>
+        spark.conf.set(key, p.toString)
+        try assertExact(spread.repartition(p), nv, 6, distType, s"$clue spread at $p partitions")
+        finally spark.conf.set(key, before)
+      }
+      assert(byParts(0) == byParts(1), clue)
+      spread.unpersist()
+      // integer values over a few levels: most neighbors tie on distance
+      assertExact(NeighborMatch.scaleVals(valsDf(400, nv)((i, d) => ((i * (7 + d)) % 5).toDouble),
+        nv, "raw"), nv, 6, distType, s"$clue ties")
+      // the first two dims, the grid projection, are constant
+      assertExact(NeighborMatch.scaleVals(valsDf(200, nv)((i, d) =>
+          if (d < 2) d + 1.0 else ((i * 13 + d) % 17).toDouble), nv, "raw"),
+        nv, 6, distType, s"$clue degenerate projection")
+      // k >= n: every other row
+      val few = assertExact(NeighborMatch.scaleVals(valsDf(5, nv)((i, d) => i * (d + 1.5)),
+        nv, "raw"), nv, 7, distType, s"$clue k >= n")
+      assert(few.size == 20, clue)
+    }
+  }
+
+  test("attribute kNN runs a fixed number of jobs at 10k rows") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val n = 10000
-    val vals = (1 to n).map { i =>
-      (i.toLong, Seq((i * 7919 % 10007).toDouble,
-        (i * 104729 % 9973).toDouble, (i * 31 % 89).toDouble))
-    }.toDF("gid", "vals")
-    val scaled = NeighborMatch.scaleVals(vals, 3, "standardize").cache()
-    val local = scaled.select("gid", "sv").as[(Long, Seq[Double])].collect().toSeq
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val vals = valsDf(10000, 3)((i, d) => Seq(i * 7919 % 10007, i * 104729 % 9973, i * 31 % 89)(d).toDouble)
+    val scaled3 = NeighborMatch.scaleVals(vals, 3, "standardize").cache()
+    val scaled2 = NeighborMatch.scaleVals(vals.select($"gid", slice($"vals", 1, 2).as("vals")),
+      2, "standardize").cache()
+    val scaled1 = NeighborMatch.scaleVals(vals.select($"gid", slice($"vals", 1, 1).as("vals")),
+      1, "standardize").cache()
+    Seq(scaled3, scaled2, scaled1).foreach(_.count())
+    val group = "attr-knn-job-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p => p.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    for ((scaled, nv, distType) <- Seq((scaled3, 3, "euclidean"), (scaled2, 2, "manhattan"),
+        (scaled1, 1, "euclidean"))) {
+      org.apache.spark.graftshim.BusShim.drain(sc)
+      jobs.set(0)
+      sc.addSparkListener(listener)
+      val got = try {
+        sc.setJobGroup(group, "attribute kNN job count")
+        try {
+          val out = NeighborMatch.attrKnn(scaled, nv, 6, distType)
+          assert(out.count() == 60000)
+          out
+        } finally sc.clearJobGroup()
+      } finally {
+        org.apache.spark.graftshim.BusShim.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+      assert(jobs.get() <= 8, s"$nv-dim $distType attribute kNN ran ${jobs.get()} jobs")
+      val local = scaled.select("gid", "sv").as[(Long, Seq[Double])].collect().toSeq
+      val want = bruteAttrKnn(local, 6, distType == "manhattan")
+      val have = got.select("gid", "anbr").as[(Long, Long)].collect().toSet
+      assert(have == want,
+        s"$nv-dim $distType: ${(have diff want).take(5)} / ${(want diff have).take(5)}")
+    }
+    Seq(scaled3, scaled2, scaled1).foreach(_.unpersist())
+  }
 
-    val got3 = NeighborMatch.attrKnn(scaled, 3, 6, "euclidean")
-      .select("gid", "anbr").as[(Long, Long)].collect().toSet
-    val want3 = bruteAttrKnn(local, 6, manhattan = false)
-    assert(got3 == want3,
-      s"3-dim diff: ${(got3 diff want3).take(5)} / ${(want3 diff got3).take(5)}")
-
-    val scaled2 = NeighborMatch.scaleVals(
-      vals.select($"gid", slice($"vals", 1, 2).as("vals")), 2, "standardize")
-      .cache()
-    val local2 = scaled2.select("gid", "sv").as[(Long, Seq[Double])].collect().toSeq
-    val gotM = NeighborMatch.attrKnn(scaled2, 2, 6, "manhattan")
-      .select("gid", "anbr").as[(Long, Long)].collect().toSet
-    val wantM = bruteAttrKnn(local2, 6, manhattan = true)
-    assert(gotM == wantM,
-      s"manhattan diff: ${(gotM diff wantM).take(5)} / ${(wantM diff gotM).take(5)}")
-
-    // no plan assertion (checkpointed output — see the 2-dim test note);
-    // exactness vs brute force at 10k rows is the guard
-    scaled.unpersist(); scaled2.unpersist()
+  test("neighbor match fails loudly on bad attribute input, naming the gid") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val pts = (1 to 40).map(i => (i.toLong, (i % 7).toDouble, (i / 7).toDouble))
+      .toDF("gid", "x", "y")
+    val schema = StructType(Seq(StructField("gid", LongType),
+      StructField("vals", ArrayType(DoubleType, containsNull = true))))
+    def values(bad: Seq[java.lang.Double]): org.apache.spark.sql.DataFrame = {
+      val rows = (1 to 40).map { i =>
+        Row(i.toLong, if (i == 17) bad else Seq[java.lang.Double](i * 1.0, (i * 7 % 11) * 1.0, (i % 5) * 1.0))
+      }
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    }
+    def message(bad: Seq[java.lang.Double], scale: String): String = {
+      val e = intercept[Exception](NeighborMatch.run(pts, values(bad), k = 4, scaleMethod = scale).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    }
+    val cases = Seq[(String, Seq[java.lang.Double])](
+      "NaN value" -> Seq(1.0, Double.NaN, 2.0),
+      "infinite value" -> Seq(1.0, 2.0, Double.NegativeInfinity),
+      "null value" -> Seq(1.0, null, 2.0),
+      "short vector" -> Seq(1.0, 2.0),
+      "long vector" -> Seq(1.0, 2.0, 3.0, 4.0),
+      "null vector" -> null)
+    for ((name, bad) <- cases; scale <- Seq("raw", "standardize"))
+      assert(message(bad, scale).contains("gid 17 "), s"$name, $scale: ${message(bad, scale)}")
+    // an empty points and values pair gives no rows
+    val none = NeighborMatch.run(pts.limit(0), values(Nil).limit(0), k = 4)
+    assert(none.count() == 0)
+    assert(none.columns.toSeq == Seq("gid", "card", "p"))
   }
 }
