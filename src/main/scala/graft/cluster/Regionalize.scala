@@ -185,6 +185,20 @@ object Regionalize {
     partitionTree(n, scaled, treeEdges, bounds, conf)
   }
 
+  /** Index of the pair (i, j), i != j, in the condensed upper triangle of
+    * an n×n matrix, where row a = min(i, j) starts at a·n − a(a+1)/2.
+    * Computed in Long, since a(a+1) overflows Int from a = 46341, and
+    * narrowed once: the index fits Int whenever n(n−1)/2 does.
+    */
+  private[cluster] def condensedIndex(n: Int, i: Int, j: Int): Int = {
+    // no tuple: `val (a, b) = ...` here allocated a Tuple2 per access —
+    // hundreds of millions of them across init + sweeps, which turned
+    // the solve into a GC benchmark (13 s init for a 1.6 GB fill)
+    val a = if (i < j) i else j
+    val b = if (i < j) j else i
+    (a.toLong * n - a.toLong * (a + 1) / 2 + (b - a - 1)).toInt
+  }
+
   /** Full-order REDCAP: contiguity-constrained agglomerative clustering;
     * each merge contributes the cheapest first-order edge between the two
     * merging clusters to the spanning tree [public REDCAP, Guo 2008].
@@ -212,16 +226,8 @@ object Regionalize {
       case _ => throw new IllegalArgumentException(
         s"full-order linkage needs an O(N^2) matrix; N=$n too large")
     })
-    // no tuple: `val (a, b) = ...` here allocated a Tuple2 per access —
-    // hundreds of millions of them across init + sweeps, which turned
-    // the solve into a GC benchmark (13 s init for a 1.6 GB fill)
-    @inline def dIdx(i: Int, j: Int): Int = {
-      val a = if (i < j) i else j
-      val b = if (i < j) j else i
-      a * n - a * (a + 1) / 2 + (b - a - 1)
-    }
-    @inline def dGet(i: Int, j: Int): Double = dCond(dIdx(i, j))
-    @inline def dSet(i: Int, j: Int, v: Double): Unit = dCond(dIdx(i, j)) = v
+    @inline def dGet(i: Int, j: Int): Double = dCond(condensedIndex(n, i, j))
+    @inline def dSet(i: Int, j: Int, v: Double): Unit = dCond(condensedIndex(n, i, j)) = v
     // O(N²) matrix fill, parallel by row: every (i, j) entry is an
     // independent pure function of the value matrix, so threading the
     // row loop is bit-identical to the serial fill. (The sweep below is

@@ -123,10 +123,10 @@ object TileLisa {
       .join(weights.select(col("gid").cast("long"), col("nbrs")), Seq("gid"))
       .select(col("tile"), col("gid").cast("long").as("gid"), col("vals"),
         col("nbrs"))
-      // 4× the session's shuffle width (the KnnWeights group-pass
-      // convention): the kernel stage is compute-bound (O(rows × k ×
-      // permutations) per window), and hashing a modest tile count into
-      // exactly `numShufflePartitions` partitions stacks 2-3 windows on
+      // 4× the session's shuffle width: the kernel stage is compute-
+      // bound (O(rows × k × permutations) per window), and hashing a
+      // modest tile count into exactly `numShufflePartitions`
+      // partitions stacks 2-3 windows on
       // one task while other cores idle — at 20 tiles / 32 partitions
       // the r8 probe measured the kernel job at ~0.9 s vs ~0.35 s of
       // max-window work. Wider hashing separates the windows; values

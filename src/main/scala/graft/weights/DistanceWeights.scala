@@ -72,11 +72,12 @@ object DistanceWeights {
         .withColumn("cell", Tiling.cellIdCol(col("x"), col("y"), cellSize))
       val deltas = (for (dx <- -1 to 1; dy <- -1 to 1)
         yield dx.toLong * Tiling.Mul + dy).toArray
-      // pin both join inputs to a cell-hashed width (the KnnWeights
-      // group-pass convention): the candidate join + distance filter is
-      // the compute-dense stage, but its inputs are byte-tiny — without
-      // the pin the planner broadcast-joins and streams everything
-      // through the source scan's task count (ONE task for a small
+      // pin both join inputs to a cell-hashed width, 4× the session's
+      // shuffle width so that the candidate join + distance filter, the
+      // compute-dense stage, spreads over several waves per core. Its
+      // inputs are byte-tiny: without the pin the planner broadcast-
+      // joins and streams everything through the source scan's task
+      // count (ONE task for a small
       // parquet file; at cluster scale, however many splits the scan
       // happened to get). Same-width hash on the join keys keeps the
       // pair math spread by cell at any scale; values are unchanged.

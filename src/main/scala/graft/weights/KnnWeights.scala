@@ -50,8 +50,9 @@ import org.apache.spark.sql.types._
   *
   * Scale notes: shuffle volume is 9×|points| fixed-width rows; skewed
   * (dense) cells only grow the in-memory candidate buffer of their one
-  * group — for pathological density add a salt level to the tiling, but
-  * AQE already splits the *shuffle* partitions. The reference's manual
+  * group — for pathological density add a salt level to the tiling (AQE
+  * neither splits nor coalesces the group pass's explicitly sized
+  * exchange). The reference's manual
   * `knn_weights_sub` sharding (`weights_knn.c:213-369`) is obsolete here.
   */
 object KnnWeights {
@@ -103,10 +104,12 @@ object KnnWeights {
   def autoCellSize(points: DataFrame, k: Int): Double = {
     val row = points.agg(min("x"), max("x"), min("y"), max("y"),
       count(lit(1))).head()
-    val (mnx, mxx, mny, mxy, n) = (row.getDouble(0), row.getDouble(1),
-      row.getDouble(2), row.getDouble(3), row.getLong(4))
-    val w = math.max(mxx - mnx, 1e-9); val h = math.max(mxy - mny, 1e-9)
-    val perPoint = math.max(1, k).toDouble / math.max(1L, n)
+    val n = row.getLong(4)
+    // an empty frame has no extent: any positive cell size is exact
+    if (n == 0L) return 1.0
+    val w = math.max(row.getDouble(1) - row.getDouble(0), 1e-9)
+    val h = math.max(row.getDouble(3) - row.getDouble(2), 1e-9)
+    val perPoint = math.max(1, k).toDouble / n
     math.max(math.max(math.sqrt(w * h * perPoint), math.max(w, h) * perPoint), 1e-9)
   }
 
@@ -302,12 +305,14 @@ object KnnWeights {
       .select(Seq((col("cell") + col("__delta")).as("tcell"), col("gid"),
         col("x"), col("y"),
         ((col("__delta") === 0L) && homePred).as("home")) ++ vcol: _*)
-      // explicit partition count: the group pass is compute-bound (heap
-      // evals), so we want ~4 waves of tasks per core for balance; an
-      // AQE-coalesced exchange would target 64MB IO-sized partitions and
-      // under-parallelize the math
-      .repartition(4 * spark.sessionState.conf.numShufflePartitions,
-        col("tcell"))
+      // explicit partition count at the session's shuffle width (the
+      // core count locally, the deployer's width on a cluster): one task
+      // per partition keeps the compute-bound heap evals on every core,
+      // where an AQE-coalesced exchange would target 64MB IO-sized
+      // partitions and under-parallelize the math. No wider: the output
+      // keeps this partitioning, and every consumer of the weights pays
+      // each partition's fixed task and block cost again.
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("tcell"))
       .sortWithinPartitions("tcell")
 
     // one pass per cell-run over raw InternalRows: bounded-heap top-k per
@@ -466,7 +471,10 @@ object KnnWeights {
         pending = again ++ later
       }
       val more = fetched.length > batch
+      // one partition: a driver-local relation is otherwise sliced into
+      // up to defaultParallelism partitions of a few rows each
       val part = spark.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*), schema)
+        .coalesce(1)
       parts += (if (more) graft.core.Materialize.releasing(part, Nil) else part)
       fetched = if (more) fetch(Some(fetched(batch - 1).gid)) else Array.empty
     }

@@ -237,6 +237,22 @@ class RegionalizeSpec extends AnyFunSuite {
     }
   }
 
+  test("full-order condensed index stays exact up to the size guard (n = 65536)") {
+    // no matrix: the index alone, at the largest n whose n(n-1)/2 fits Int
+    val n = 65536
+    def idx(i: Int, j: Int): Int = Regionalize.condensedIndex(n, i, j)
+    assert(idx(0, 1) == 0 && idx(1, 0) == 0)
+    assert(idx(n - 2, n - 1).toLong == n.toLong * (n - 1) / 2 - 1)
+    // row a = 46341 is the first whose a(a+1) overflows Int
+    val a = 46341
+    assert(idx(a, a + 1).toLong == a.toLong * n - a.toLong * (a + 1) / 2)
+    assert(idx(a + 1, a) == idx(a, a + 1))
+    // consecutive pairs map to consecutive indices across that row boundary
+    assert(idx(a - 1, n - 1) + 1 == idx(a, a + 1))
+    assert(idx(a, a + 1) + 1 == idx(a, a + 2))
+    assert(idx(a, n - 1) + 1 == idx(a + 1, a + 2))
+  }
+
   /** r8: the per-merge Lance-Williams sweep runs on a fixed worker pool
     * once the live set exceeds 4096 roots. The equivalence test above
     * stays below that threshold, so this probe runs the POOLED path

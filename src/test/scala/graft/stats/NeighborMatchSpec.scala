@@ -178,7 +178,6 @@ class NeighborMatchSpec extends AnyFunSuite {
   test("attribute kNN runs a fixed number of jobs at 10k rows") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val vals = valsDf(10000, 3)((i, d) => Seq(i * 7919 % 10007, i * 104729 % 9973, i * 31 % 89)(d).toDouble)
     val scaled3 = NeighborMatch.scaleVals(vals, 3, "standardize").cache()
     val scaled2 = NeighborMatch.scaleVals(vals.select($"gid", slice($"vals", 1, 2).as("vals")),
@@ -186,31 +185,15 @@ class NeighborMatchSpec extends AnyFunSuite {
     val scaled1 = NeighborMatch.scaleVals(vals.select($"gid", slice($"vals", 1, 1).as("vals")),
       1, "standardize").cache()
     Seq(scaled3, scaled2, scaled1).foreach(_.count())
-    val group = "attr-knn-job-count"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p => p.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
     for ((scaled, nv, distType) <- Seq((scaled3, 3, "euclidean"), (scaled2, 2, "manhattan"),
         (scaled1, 1, "euclidean"))) {
-      org.apache.spark.graftshim.BusShim.drain(sc)
-      jobs.set(0)
-      sc.addSparkListener(listener)
-      val got = try {
-        sc.setJobGroup(group, "attribute kNN job count")
-        try {
-          val out = NeighborMatch.attrKnn(scaled, nv, 6, distType)
-          assert(out.count() == 60000)
-          out
-        } finally sc.clearJobGroup()
-      } finally {
-        org.apache.spark.graftshim.BusShim.drain(sc)
-        sc.removeSparkListener(listener)
+      val (got, ran) = org.apache.spark.graftshim.BusShim.counted(spark.sparkContext,
+          "attr-knn-job-count") {
+        val out = NeighborMatch.attrKnn(scaled, nv, 6, distType)
+        assert(out.count() == 60000)
+        out
       }
-      assert(jobs.get() <= 8, s"$nv-dim $distType attribute kNN ran ${jobs.get()} jobs")
+      assert(ran.jobs <= 8, s"$nv-dim $distType attribute kNN ran ${ran.jobs} jobs")
       val local = scaled.select("gid", "sv").as[(Long, Seq[Double])].collect().toSeq
       val want = bruteAttrKnn(local, 6, distType == "manhattan")
       val have = got.select("gid", "anbr").as[(Long, Long)].collect().toSet

@@ -2,7 +2,8 @@ package graft.weights
 
 import graft.SparkFixture
 import graft.core.{Dist, Tiling}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.stats.Lisa
+import org.apache.spark.graftshim.BusShim
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -143,29 +144,51 @@ class KnnSpec extends AnyFunSuite {
     df.count()
     val s = KnnWeights.autoCellSize(df, 10)
     pts.takeRight(2).foreach(p => assert(kth(pts, p, 10) >= s, s"gid ${p._1} must straggle"))
-    val group = "knn-job-count"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p => p.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.graftshim.BusShim.drain(sc)
-    sc.addSparkListener(listener)
-    val got = try {
-      sc.setJobGroup(group, "kNN job count")
-      try KnnWeights.build(df, KnnWeights.Conf(k = 10))
-      finally sc.clearJobGroup()
-    } finally {
-      org.apache.spark.graftshim.BusShim.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    assert(jobs.get() <= 6, s"kNN build ran ${jobs.get()} jobs")
+    val (got, ran) = BusShim.counted(spark.sparkContext, "knn-job-count")(
+      KnnWeights.build(df, KnnWeights.Conf(k = 10)))
+    assert(ran.jobs <= 6, s"kNN build ran ${ran.jobs} jobs")
     val want = brute(pts, 10)
     got.select("gid", "nbrs").as[(Long, Seq[Long])].collect()
       .foreach { case (g, n) => assert(n == want(g)._2, s"gid $g") }
     df.unpersist()
+  }
+
+  test("kNN weights come out at the session's shuffle width, as does a LISA kernel over them") {
+    // width + 1 partitions: the group pass's width plus one for the
+    // stragglers the completion pass finished (planted has three); the
+    // LISA kernel runs one task per weights partition (its values sit in
+    // one partition, so no stage of the call may be wider)
+    val pts = planted
+    val df = pts.toDF("gid", "x", "y")
+    val values = pts.map { case (g, x, y) => (g, x * y) }.toDF("gid", "value").coalesce(1)
+    val conf = KnnWeights.Conf(k = k, cellSize = Some(cell))
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    def at(width: Int): Map[Long, Out] = {
+      spark.conf.set(key, width.toString)
+      try {
+        val weights = KnnWeights.build(df, conf)
+        val parts = weights.rdd.getNumPartitions
+        assert(parts <= width + 1, s"weights at width $width have $parts partitions")
+        val (moran, ran) = BusShim.counted(spark.sparkContext, "lisa-width")(
+          Lisa.localMoran(values, weights, Lisa.Conf(permutations = 99, permMethod = "lookup")))
+        assert(moran.count() == pts.length)
+        assert(ran.stageTasks.nonEmpty && ran.stageTasks.max <= width + 1,
+          s"local Moran at width $width ran stages of ${ran.stageTasks} tasks")
+        val knn = KnnWeights.knnRows(df, conf)
+        assert(knn.rdd.getNumPartitions <= width + 1)
+        rows(knn)
+      } finally spark.conf.set(key, before)
+    }
+    assertExact(at(3), at(1))
+  }
+
+  test("kNN over an empty input gives 0 rows at the auto cell size") {
+    val empty = Seq.empty[Pt].toDF("gid", "x", "y")
+    val conf = KnnWeights.Conf(k = 4)
+    assert(KnnWeights.build(empty, conf).count() == 0)
+    assert(KnnWeights.knnRows(empty, conf).count() == 0)
+    assert(KnnWeights.pairs(empty, conf).count() == 0)
   }
 
   test("kNN stragglers beyond the per-pass driver bound complete exactly") {
