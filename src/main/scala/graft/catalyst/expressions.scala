@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression,
 import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType,
-  LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
+  IntegerType, LongType}
 
 /** Native Catalyst expressions with whole-stage codegen for the two pure
   * functions on the engine's hot paths (SURVEY §4.2): grid cell-id
@@ -75,7 +75,6 @@ case class TwHashExpr(child: Expression)
 case class DotExpr(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
     with ExpectsInputTypes {
-  import org.apache.spark.sql.types.ArrayType
   override def inputTypes: Seq[DataType] =
     Seq(ArrayType(DoubleType), ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
@@ -163,7 +162,6 @@ case class DotExpr(left: Expression, right: Expression)
 case class AdcScoreExpr(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
     with ExpectsInputTypes {
-  import org.apache.spark.sql.types.{ArrayType, IntegerType}
   override def inputTypes: Seq[DataType] =
     Seq(ArrayType(IntegerType), ArrayType(ArrayType(DoubleType)))
   override def dataType: DataType = DoubleType
@@ -225,6 +223,68 @@ case class AdcScoreExpr(left: Expression, right: Expression)
       l: Expression, r: Expression): Expression = copy(l, r)
 }
 
+/** nearest_cids(vec) → array<int>: the top min(n, k) cids of a k-cell
+  * codebook for `vec` ([[graft.pipeline.Similarity]]'s assignment, PQ
+  * encode and probes). Cell c scores vec · codebook[c] + bias[c] (0 for
+  * cosine, −½|c|² for Euclidean), ranked (score desc, cid asc) in Spark
+  * SQL's double order — `array_position(scores, array_max(scores))`'s
+  * rule, kept by the [[TopKAgg.Buf]] the distributed top-k uses. Dots sum
+  * left to right like [[DotExpr]]; null when no cell has a score (null
+  * vec or element, other dimension, empty codebook). The codebook is
+  * held once and printed as its shape: plans do not grow with k·dim.
+  */
+case class NearestCidsExpr(child: Expression, codebook: Array[Double],
+    bias: Array[Double], cids: Array[Int], n: Int)
+    extends UnaryExpression with ExpectsInputTypes {
+  import org.apache.spark.sql.catalyst.util.ArrayData
+  require(bias.length == cids.length && n > 0 &&
+    (cids.isEmpty || codebook.length % cids.length == 0),
+    "nearest_cids: one bias and cid per codebook row, n > 0")
+  private val k = cids.length
+  private val dim = if (k == 0) 0 else codebook.length / k
+
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def nullable: Boolean = true
+  override def toString: String = s"nearest_cids($child, ${k}x$dim codebook, $n)"
+  override def sql: String = s"nearest_cids(${child.sql}, ${k}x$dim codebook, $n)"
+
+  /** The top cids for one non-null vector, or null (see the class doc). */
+  def nearest(v: ArrayData): ArrayData = {
+    if (k == 0 || v.numElements() != dim) return null
+    val x = new Array[Double](dim)
+    var i = 0
+    while (i < dim) {
+      if (v.isNullAt(i)) return null
+      x(i) = v.getDouble(i); i += 1
+    }
+    val m = math.min(n, k)
+    val top = TopKAgg.Buf(new Array[Double](m), new Array[Long](m), 0)
+    var c = 0
+    while (c < k) {
+      var acc = 0.0
+      val off = c * dim
+      i = 0
+      while (i < dim) { acc += x(i) * codebook(off + i); i += 1 }
+      top.insert(acc + bias(c), cids(c))
+      c += 1
+    }
+    ArrayData.toArrayData(Array.tabulate(top.n)(j => top.ids(j).toInt))
+  }
+
+  override protected def nullSafeEval(v: Any): Any =
+    nearest(v.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("nearestCids", this)
+    nullSafeCodeGen(ctx, ev, v =>
+      s"${ev.value} = $self.nearest($v);\n${ev.isNull} = ${ev.value} == null;")
+  }
+
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+}
+
 object GraftFunctions {
   def cell_id(x: Column, y: Column, cellSize: Double): Column =
     ColumnShim.column(CellIdExpr(ColumnShim.expression(x),
@@ -238,6 +298,10 @@ object GraftFunctions {
   def adc_score(codes: Column, lut: Column): Column =
     ColumnShim.column(AdcScoreExpr(ColumnShim.expression(codes),
       ColumnShim.expression(lut)))
+  def nearest_cids(vec: Column, codebook: Array[Double], bias: Array[Double],
+                   cids: Array[Int], n: Int): Column =
+    ColumnShim.column(NearestCidsExpr(ColumnShim.expression(vec), codebook,
+      bias, cids, n))
 
   /** Arity guard for SQL-registered builders: a wrong argument count
     * must surface as an AnalysisException naming the signature, not an

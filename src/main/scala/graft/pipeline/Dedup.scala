@@ -338,9 +338,7 @@ object Dedup {
       vecCol: String = "embedding", dimHint: Int = -1): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val dim =
-      if (dimHint > 0) dimHint
-      else emb.select(size(col(vecCol))).head().getInt(0)
+    val dim = Similarity.trainDim(emb, vecCol, dimHint)
     // mix64-finalized: raw short-string FNV-1a leaves plane entries for
     // adjacent (t, p) nearly identical (no final avalanche), which made
     // the planes almost PARALLEL — one effective direction per band and
@@ -686,12 +684,13 @@ object Dedup {
     // a full count() would replay the (possibly expensive, uncached)
     // upstream plan once before any clustering work. The probe returns
     // the DIMENSION too, so neither branch pays a second limit-1 job
-    // for it (the flat path's centroid build used to run its own).
+    // for it (the flat path's centroid build used to run its own). It
+    // skips null embeddings; when it finds none, the first row (if any)
+    // goes through `normalized`, whose check names a null one's id.
     val dimProbe: Option[Int] =
-      if (nClusters0 > 0) {
-        val r = renamed.select(size(col("embedding"))).limit(1).collect()
-        r.headOption.map(_.getInt(0))
-      } else None
+      if (nClusters0 > 0) Similarity.dimOf(renamed, "embedding") else None
+    if (nClusters0 > 0 && dimProbe.isEmpty)
+      Similarity.normalized(renamed).limit(1).collect()
     val n: Long =
       if (nClusters0 > 0) { if (dimProbe.isEmpty) 0L else -1L }
       else renamed.count()
@@ -730,8 +729,7 @@ object Dedup {
       // one dim probe shared by both levels' centroid builds (residuals
       // have the same dimensionality as the embeddings); reuses the
       // emptiness probe's value when it ran
-      val dim = dimProbe.getOrElse(
-        renamed.select(size(col("embedding"))).head().getInt(0))
+      val dim = dimProbe.getOrElse(Similarity.trainDim(renamed, "embedding", -1))
       val cents1 = Similarity.scatteredCentroids(renamed, k1, dim)
       val a1 = Similarity.assignNearest(
         Similarity.normalized(renamed), cents1)
@@ -850,7 +848,7 @@ object Dedup {
     val comp = graft.cluster.Components.connected(pairs,
       nodes = Some(assigned.select(col("id"))), nodeCol = "id")
     // keep rule needs each member's similarity to its OWN centroid —
-    // recomputed here (assignNearest's max_by discards it); one
+    // recomputed here (the assignment keeps only the cid); one
     // broadcast join against the k-row centroid frame. The two-level
     // multi-probe path carries TWO rows per id in `assigned` (one per
     // probed residual cell) that are value-identical on (id, kcid,

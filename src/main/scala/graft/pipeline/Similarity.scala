@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -16,6 +15,10 @@ import org.apache.spark.sql.functions._
   * centroid (the "inverted file"); queries probe `nprobe` nearest
   * centroids; candidates scored exactly within probed buckets. All
   * shuffles keyed by centroid id.
+  *
+  * Every nearest-cell choice — assignment, PQ encode, query probes — is
+  * one argmax of vector · codebook + bias, ties to the lowest cid
+  * ([[nearestCells]], [[graft.catalyst.NearestCidsExpr]]).
   */
 object Similarity {
 
@@ -25,11 +28,20 @@ object Similarity {
   private def dot(a: String, b: String) =
     graft.catalyst.GraftFunctions.dot_arr(col(a), col(b))
 
-  /** L2-normalize the vector column into `unit` (array<double>). */
+  /** L2-normalize the vector column into `unit` (array<double>). A null
+    * vector or element fails the query with a message naming its id —
+    * checked in this projection, so it costs no job.
+    */
   def normalized(emb: DataFrame, idCol: String = "vec_id",
-                 vecCol: String = "embedding"): DataFrame =
+                 vecCol: String = "embedding"): DataFrame = {
+    val v = col(vecCol)
+    val checked = when(v.isNull || exists(v, _.isNull),
+      raise_error(concat(lit("vector input id "),
+        coalesce(col(idCol).cast("string"), lit("null")),
+        lit(" has a null embedding or a null element"))))
+      .otherwise(v)
     emb.select(col(idCol).cast("long").as("id"),
-        transform(col(vecCol), x => x.cast("double")).as("v"))
+        transform(checked, x => x.cast("double")).as("v"))
       .withColumn("norm",
         sqrt(aggregate(transform(col("v"), x => x * x), lit(0.0),
           (acc, x) => acc + x)))
@@ -37,6 +49,19 @@ object Similarity {
         when(col("norm") === 0.0, col("v"))
           .otherwise(transform(col("v"), x => x / col("norm"))))
       .select("id", "unit")
+  }
+
+  /** Size of the first non-null `vecCol` vector (one limit-1 job). */
+  private[pipeline] def dimOf(df: DataFrame, vecCol: String): Option[Int] =
+    df.filter(col(vecCol).isNotNull).select(size(col(vecCol))).limit(1)
+      .collect().headOption.map(_.getInt(0))
+
+  /** `dimHint` when positive, else [[dimOf]]; training needs a vector. */
+  private[pipeline] def trainDim(df: DataFrame, vecCol: String,
+                                 dimHint: Int): Int =
+    if (dimHint > 0) dimHint
+    else dimOf(df, vecCol).getOrElse(throw new IllegalArgumentException(
+      s"no non-null `$vecCol` vector to size the codebook by"))
 
   /** Rank scored rows per query: partial top-k aggregate (map-side
     * k-slot buffers, ~k rows per partition reach the shuffle) instead
@@ -63,33 +88,75 @@ object Similarity {
     rankTopK(scored, k)
   }
 
-  /** Nearest-centroid assignment. When the centroid frame is a LOCAL
-    * relation (every build below the driver bound), assignment is a
-    * PURE SCAN — the centroids ride into the plan as literals (the
-    * pqEncode pattern) and each row pays k fused dot products inside
-    * whole-stage codegen with NO exchange: the corpus is never
-    * shuffled to be assigned, at any corpus size. Tie rule identical
-    * to the aggregate form: max sim, then min cid (`array_position`
-    * finds the FIRST maximum and the score array is cid-ascending).
-    * Distributed centroid frames (beyond the driver bound) keep the
-    * max_by partial-agg form.
+  /** The top `n` cids for `vec` among (cid, vector, bias) cells. */
+  private def nearestCids(vec: Column, cells: Seq[(Int, Seq[Double], Double)],
+                          n: Int): Column = {
+    val sorted = cells.sortBy(_._1)
+    graft.catalyst.GraftFunctions.nearest_cids(vec,
+      sorted.flatMap(_._2).toArray, sorted.map(_._3).toArray,
+      sorted.map(_._1).toArray, n)
+  }
+
+  /** The (cid, vector, bias = −½·cn2 if `euclid` else 0) cells of a
+    * centroid frame that is a driver-local relation within
+    * [[centroidsFitDriver]], which is checked before anything is
+    * collected; None for any other frame.
     */
+  private def localCodebook(cents: DataFrame, cvec: String,
+      euclid: Boolean): Option[Seq[(Int, Seq[Double], Double)]] = {
+    val fits = cents.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        val o = l.output.indexWhere(_.name == cvec)
+        val dim = l.data.headOption
+          .filterNot(_.isNullAt(o)).fold(0)(_.getArray(o).numElements())
+        centroidsFitDriver(l.data.length, dim)
+      case _ => false
+    }
+    if (!fits) None
+    else Some(cents.select(col("cid").cast("int"), col(cvec),
+        if (euclid) lit(-0.5) * col("cn2") else lit(0.0)).collect().toSeq
+      .map(r => (r.getInt(0), r.getSeq[Double](1), r.getDouble(2))))
+  }
+
+  /** The `n` cells nearest each row's `vec`, by (score desc, cid asc):
+    * score = v·c over centroids (cid, `cvec`), or v·c − ½|c|² over (cid,
+    * `cvec`, cn2) when `euclid` (argmin |v−c|²). A driver-local codebook
+    * within [[centroidsFitDriver]] is one `nearest_cids` projection — a
+    * PURE SCAN, rows are never shuffled to be assigned; beyond it the
+    * centroids are broadcast into a partial aggregate with the same tie
+    * rule, `max_by` over (score, −cid) for n = 1, [[graft.catalyst
+    * .TopKAgg]] for n > 1. Returns (`key`, cid, `keep`…) per (row, cell).
+    */
+  private def nearestCells(f: DataFrame, key: String, vec: String,
+      cents: DataFrame, cvec: String, euclid: Boolean, n: Int,
+      keep: Seq[String]): DataFrame = {
+    val kept = keep.map(col)
+    localCodebook(cents, cvec, euclid) match {
+      case Some(cb) =>
+        val cids = nearestCids(col(vec), cb, n)
+        f.select(col(key) +: (if (n == 1) cids.getItem(0) else explode(cids))
+          .as("cid") +: kept: _*)
+      case None =>
+        val dot = graft.catalyst.GraftFunctions.dot_arr(col(vec), col(cvec))
+        val scored = f.crossJoin(broadcast(cents)).select(col(key) +:
+          col("cid") +: (if (euclid) dot - lit(0.5) * col("cn2") else dot)
+            .as("__score") +: kept: _*)
+        val firsts = keep.map(c => first(col(c)).as(c))
+        if (n == 1)
+          scored.groupBy(key).agg(max_by(col("cid"),
+            struct(col("__score"), negate(col("cid")))).as("cid"), firsts: _*)
+        else
+          scored.groupBy(key).agg(graft.catalyst.TopKAgg.topk(n)(
+              col("__score"), col("cid").cast("long")).as("__top"), firsts: _*)
+            .select(col(key) +: explode(transform(col("__top"),
+              t => t("_2").cast("int"))).as("cid") +: kept: _*)
+    }
+  }
+
+  /** Cosine assignment of (id, unit) to (cid, cunit): (id, cid, unit). */
   private[graft] def assignNearest(c: DataFrame, cents: DataFrame): DataFrame =
-    if (graft.core.Materialize.isLocal(cents)) {
-      val rows = cents.select(col("cid").cast("int"), col("cunit")).collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
-      val scores = array(rows.map { case (_, v) =>
-        graft.catalyst.GraftFunctions.dot_arr(col("unit"), typedLit(v)) }: _*)
-      val cid = element_at(typedLit(rows.map(_._1).toSeq),
-        array_position(scores, array_max(scores)).cast("int"))
-      c.select(col("id"), cid.as("cid"), col("unit"))
-    } else
-      c.crossJoin(broadcast(cents))
-        .select(col("id"), col("unit"), col("cid"),
-          dot("unit", "cunit").as("sim"))
-        .groupBy("id")
-        .agg(max_by(col("cid"), struct(col("sim"), negate(col("cid")))).as("cid"),
-          first(col("unit")).as("unit"))
+    nearestCells(c, "id", "unit", cents, "cunit", euclid = false, 1,
+      Seq("unit"))
 
   /** Deterministic IVF centroids: pick nCentroids seeds by id order, one
     * refinement sweep (mean of assigned vectors). Returns centroid DF
@@ -119,8 +186,7 @@ object Similarity {
     * difference), while their Euclidean nearest residual-centroid stays
     * shared. argmin |r−c|² = argmax (r·c − ½|c|²); ties by min cid.
     * Input (id, vec: array<double>); returns (cid, cvec, cn2).
-    */
-  /** `inputCached = true` skips the internal cache — for callers whose
+    * `inputCached = true` skips the internal cache — for callers whose
     * frame is already cache-backed (the two-level semantic-dedup
     * residual frame), where a second cache of the same rows only costs
     * memory and a materialization pass.
@@ -130,31 +196,33 @@ object Similarity {
                       inputCached: Boolean = false): DataFrame = {
     val f0 = frame.select(col("id"), col("vec"))
     val f = if (inputCached) f0 else f0.cache()
-    val ord = Seq(xxhash64(col("id")), col("id"))
+    lloydSweep(f, "vec", "cvec", nCentroids,
+      Seq(xxhash64(col("id")), col("id")), euclid = true, dimHint,
+      if (inputCached) Nil else Seq(f))
+  }
+
+  /** One Lloyd sweep over (id, `vec`): seeds drawn under `ord`, nearest-
+    * seed assignment, means in ONE codegen'd hash aggregate with map-side
+    * partials (dim fixed, small). Returns (cid, `cvec`[, cn2 = |c|² when
+    * `euclid`]) and releases `internal`.
+    */
+  private def lloydSweep(f: DataFrame, vec: String, cvec: String,
+      nCentroids: Int, ord: Seq[Column], euclid: Boolean, dimHint: Int,
+      internal: Seq[DataFrame]): DataFrame = {
+    val spark = f.sparkSession
+    import spark.implicits._
     // cn2 on the driver is the same left-fold of squares in array order
-    // as the old aggregate(transform(...)) column
-    val seeds = collectSeeds(f, nCentroids, ord, "vec",
-      r => {
-        val v = r.getSeq[Double](1)
-        Seq(v, v.foldLeft(0.0)((a, x) => a + x * x))
-      },
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cid",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("cvec",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType)),
-        org.apache.spark.sql.types.StructField("cn2",
-          org.apache.spark.sql.types.DoubleType, nullable = false))))
-    val assigned = assignNearestEuclid(f, seeds)
-    val dim =
-      if (dimHint > 0) dimHint
-      else f.select(size(col("vec"))).head().getInt(0)
-    val out = assigned.groupBy("cid")
-      .agg(array((0 until dim).map(i => avg(col("vec")(i))): _*).as("cvec"))
-      .withColumn("cn2", aggregate(transform(col("cvec"), x => x * x),
+    // as the aggregate(transform(...)) column below
+    val seeds = seedVectors(f.select(col("id"), col(vec)), nCentroids, ord)
+      .zipWithIndex.map { case (v, i) => (i, v, v.foldLeft(0.0)((a, x) => a + x * x)) }
+      .toDF("cid", cvec, "cn2")
+    val assigned = nearestCells(f, "id", vec, seeds, cvec, euclid, 1, Seq(vec))
+    val dim = trainDim(f, vec, dimHint)
+    val means = assigned.groupBy("cid")
+      .agg(array((0 until dim).map(i => avg(col(vec)(i))): _*).as(cvec))
+    val out = if (!euclid) means
+      else means.withColumn("cn2", aggregate(transform(col(cvec), x => x * x),
         lit(0.0), (a, x) => a + x))
-    val internal = if (inputCached) Nil else Seq(f)
     if (centroidsFitDriver(nCentroids, dim))
       graft.core.Materialize.collected(out, internal)
     else graft.core.Materialize.releasing(out, internal)
@@ -168,91 +236,28 @@ object Similarity {
   private def centroidsFitDriver(n: Int, dim: Int): Boolean =
     n.toLong * math.max(1, dim) <= (8L << 20)
 
-  /** Euclidean nearest-centroid assignment: max_by over
-    * (r·c − ½|c|², −cid) — the same windowless partial-agg shape as
-    * [[assignNearest]]. Input (id, vec); centroids (cid, cvec, cn2).
-    * `probes` > 1 emits the top-`probes` cells per id (multi-probe:
-    * candidate-generation recall at Voronoi boundaries; the partial
-    * top-k aggregate keeps the same tie rule, score desc then min cid)
-    * and returns ONLY (id, cid) — its caller keys the probe cells back
-    * to the full rows by id, so threading the vector through the top-k
-    * aggregate and the explode would shuffle and duplicate d doubles
-    * per probe for nothing. probes = 1 keeps (id, cid, vec): the Lloyd
-    * mean recompute consumes the vector in the very next aggregate.
+  /** Euclidean nearest-centroid assignment over centroids (cid, cvec,
+    * cn2) ([[nearestCells]]). `probes` > 1 emits the top-`probes` cells
+    * per id (multi-probe: candidate-generation recall at Voronoi
+    * boundaries) and returns ONLY (id, cid) — its caller keys the probe
+    * cells back to the full rows by id, so threading the vector through
+    * would shuffle and duplicate d doubles per probe for nothing.
+    * probes = 1 keeps (id, cid, vec): the Lloyd mean recompute consumes
+    * the vector in the very next aggregate.
     */
   private[graft] def assignNearestEuclid(f: DataFrame,
-      cents: DataFrame, probes: Int = 1): DataFrame = {
-    // LOCAL centroid frame → pure-scan assignment (see [[assignNearest]]):
-    // scores as literal-codebook expressions, argmax (and for
-    // multi-probe the argmax-of-the-rest) by position — no corpus
-    // shuffle, identical (score desc, cid asc) tie rule
-    if (graft.core.Materialize.isLocal(cents)) {
-      val rows = cents.select(col("cid").cast("int"), col("cvec"),
-          col("cn2")).collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1), r.getDouble(2)))
-        .sortBy(_._1)
-      val cids = typedLit(rows.map(_._1).toSeq)
-      val scores = array(rows.map { case (_, v, n2) =>
-        graft.catalyst.GraftFunctions.dot_arr(col("vec"), typedLit(v)) -
-          lit(0.5 * n2) }: _*)
-      if (probes <= 1) {
-        val cid = element_at(cids,
-          array_position(scores, array_max(scores)).cast("int"))
-        f.select(col("id"), cid.as("cid"), col("vec"))
-      } else {
-        require(probes == 2,
-          "scan-form multi-probe implements the top-2 the engine uses")
-        val p1 = array_position(scores, array_max(scores)).cast("int")
-        // mask the winner, take the max of the rest (ties again to the
-        // first position = smallest cid, matching the top-k aggregate)
-        val masked = zip_with(scores,
-          sequence(lit(1), lit(rows.length)),
-          (s, i) => when(i === p1, lit(Double.NegativeInfinity)).otherwise(s))
-        val p2 = array_position(masked, array_max(masked)).cast("int")
-        f.select(col("id"),
-            explode(array(element_at(cids, p1), element_at(cids, p2)))
-              .as("cid"))
-          .select(col("id"), col("cid"))
-      }
-    } else if (probes <= 1)
-      f.crossJoin(broadcast(cents))
-        .select(col("id"), col("vec"), col("cid"),
-          (graft.catalyst.GraftFunctions.dot_arr(col("vec"), col("cvec"))
-            - lit(0.5) * col("cn2")).as("score"))
-        .groupBy("id")
-        .agg(max_by(col("cid"), struct(col("score"), negate(col("cid"))))
-          .as("cid"),
-          first(col("vec")).as("vec"))
-    else
-      f.crossJoin(broadcast(cents))
-        .select(col("id"), col("cid"),
-          (graft.catalyst.GraftFunctions.dot_arr(col("vec"), col("cvec"))
-            - lit(0.5) * col("cn2")).as("score"))
-        .groupBy("id")
-        .agg(graft.catalyst.TopKAgg.topk(probes)(
-          col("score"), col("cid").cast("long")).as("top"))
-        .select(col("id"), explode(col("top")).as("t"))
-        .select(col("id"), col("t._2").cast("int").as("cid"))
-  }
+      cents: DataFrame, probes: Int = 1): DataFrame =
+    nearestCells(f, "id", "vec", cents, "cvec", euclid = true, probes,
+      if (probes <= 1) Seq("vec") else Nil)
 
-  /** Seed draw as a LOCAL relation: one TakeOrdered-heap collect of the
-    * first `n` rows under `ord` (never a global sort), numbered 0..n-1
-    * on the driver — the same rows and cids the old
-    * `orderBy.limit + row_number().over(Window.orderBy(ord))` form
-    * produced, without the window's sort exchange or the broadcast-
-    * build job every consumer then paid (seeds are ≤65536 rows by
-    * construction — driver-held for the broadcast either way).
+  /** Seed draw: the vectors of the first `n` (id, vector) rows under
+    * `ord` by one TakeOrdered-heap collect, never a global sort; seed i
+    * is cid i, as a `row_number()` ordered by `ord` numbers them. Seeds
+    * are ≤65536 rows, driver-held for the broadcast either way.
     */
-  private def collectSeeds(src: DataFrame, n: Int,
-      ord: Seq[org.apache.spark.sql.Column], vecCol: String,
-      outCols: Row => Seq[Any], schema: org.apache.spark.sql.types.StructType)
-      : DataFrame = {
-    val rows = src.orderBy(ord: _*).limit(n).collect() // TakeOrdered: sorted
-    val out = rows.iterator.zipWithIndex
-      .map { case (r, i) => Row.fromSeq(i +: outCols(r)) }.toSeq
-    src.sparkSession.createDataFrame(
-      java.util.Arrays.asList(out: _*), schema)
-  }
+  private def seedVectors(src: DataFrame, n: Int, ord: Seq[Column])
+      : Seq[Seq[Double]] =
+    src.orderBy(ord: _*).limit(n).collect().toSeq.map(_.getSeq[Double](1))
 
   private def lloydCentroids(corpus: DataFrame, nCentroids: Int,
       scattered: Boolean, dimHint: Int = -1): DataFrame = {
@@ -260,27 +265,8 @@ object Similarity {
     // TakeOrdered heap either way — never a global sort
     val ord =
       if (scattered) Seq(xxhash64(col("id")), col("id")) else Seq(col("id"))
-    val seeds = collectSeeds(c.select(col("id"), col("unit")), nCentroids,
-      ord, "unit", r => Seq(r.getSeq[Double](1)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cid",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("cunit",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType)))))
-    // one Lloyd sweep: assign to nearest seed, recompute means. The
-    // per-dimension avg columns stay inside ONE codegen'd hash aggregate
-    // with map-side partials (dim fixed, small).
-    val assigned = assignNearest(c, seeds)
-    val dim =
-      if (dimHint > 0) dimHint
-      else c.select(size(col("unit"))).head().getInt(0)
-    val out = assigned.groupBy("cid")
-      .agg(array((0 until dim).map(i =>
-        avg(col("unit")(i))): _*).as("cunit"))
-    if (centroidsFitDriver(nCentroids, dim))
-      graft.core.Materialize.collected(out, Seq(c))
-    else graft.core.Materialize.releasing(out, Seq(c))
+    lloydSweep(c, "unit", "cunit", nCentroids, ord, euclid = false, dimHint,
+      Seq(c))
   }
 
   /** Product-quantization codebooks (Jégou, Douze & Schmid, TPAMI
@@ -290,11 +276,11 @@ object Similarity {
     * compression that makes billion-vector ANN indexes fit a cluster's
     * memory (IVFADC = the [[ivfTopK]] coarse stage + this).
     *
-    * Training is ONE pass over the corpus: subvector rows (id, sub,
-    * svec) via posexplode (n·m rows but total volume = the corpus),
-    * Euclidean assignment against broadcast seeds keyed per subspace,
-    * and a (sub, cid)-keyed mean recompute — both shuffles carry
-    * ~one row per (vector, subspace) partial-aggregated. Seeding is
+    * Training is ONE pass over the corpus: each row's subvectors are
+    * assigned to their Euclidean-nearest seed by the encoder's
+    * per-subspace `nearest_cids` scan, then posexploded (n·m rows but
+    * total volume = the corpus) into the (sub, cid)-keyed mean
+    * recompute, the one shuffle, partial-aggregated. Seeding is
     * the IVF convention: the FIRST `ksub` vectors (id order) seed
     * every subspace, so the q108 DuckDB oracle replays the draw
     * without a per-subspace window. One Lloyd sweep, like
@@ -314,48 +300,19 @@ object Similarity {
                                  inputCached: Boolean = false): DataFrame = {
     val c0 = units.select(col("id"), col("unit"))
     val c = if (inputCached) c0 else c0.cache()
-    val dim =
-      if (dimHint > 0) dimHint
-      else c.select(size(col("unit"))).head().getInt(0)
+    val dim = trainDim(c, "unit", dimHint)
     require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
     val dsub = dim / m
-    def subSlices(v: org.apache.spark.sql.Column) =
-      posexplode(array((0 until m).map(j =>
-        slice(v, j * dsub + 1, dsub)): _*))
-    val subs = c.select(col("id"), subSlices(col("unit")))
-      .select(col("id"), col("pos").as("sub"), col("col").as("svec"))
-    // seed draw collected to a LOCAL relation (ksub ≤ 256 rows): same
-    // id-order TakeOrdered rows, cids 0..ksub-1, sub slices and cn2
-    // computed on the driver with the identical element order — kills
-    // the row_number window's sort exchange and the per-consumer
-    // broadcast-build job
-    val seedRows = c.orderBy(col("id")).limit(ksub).collect()
-    val seedOut: Seq[Row] =
-      (for ((r, i) <- seedRows.iterator.zipWithIndex; j <- (0 until m).iterator)
-        yield {
-          val unit = r.getSeq[Double](1)
-          val sv = unit.slice(j * dsub, (j + 1) * dsub)
-          Row(j, i, sv, sv.foldLeft(0.0)((a, x) => a + x * x))
-        }).toSeq
-    val seeds = c.sparkSession.createDataFrame(
-      java.util.Arrays.asList(seedOut: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("sub",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("cid",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("cvec",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType)),
-        org.apache.spark.sql.types.StructField("cn2",
-          org.apache.spark.sql.types.DoubleType, nullable = false))))
-    val assigned = subs.join(broadcast(seeds), "sub")
-      .select(col("id"), col("sub"), col("svec"), col("cid"),
-        (dot("svec", "cvec") - lit(0.5) * col("cn2")).as("score"))
-      .groupBy("id", "sub")
-      .agg(max_by(col("cid"), struct(col("score"), negate(col("cid"))))
-        .as("cid"),
-        first(col("svec")).as("svec"))
+    // the FIRST `ksub` vectors in id order seed every subspace
+    val seeds = seedVectors(c, ksub, Seq(col("id")))
+    val assigned = c.select(posexplode(array((0 until m).map { j =>
+        val cells = seeds.zipWithIndex.map { case (u, i) =>
+          euclidCell(i, u.slice(j * dsub, (j + 1) * dsub)) }
+        struct(nearestCids(subvec(j, dsub), cells, 1).getItem(0).as("cid"),
+          subvec(j, dsub).as("svec"))
+      }: _*)))
+      .select(col("pos").as("sub"), col("col.cid").as("cid"),
+        col("col.svec").as("svec"))
     val out = assigned.groupBy("sub", "cid")
       .agg(array((0 until dsub).map(i => avg(col("svec")(i))): _*).as("cvec"))
     // m·ksub rows × (d/m) doubles = d·ksub total — always driver-small
@@ -367,8 +324,16 @@ object Similarity {
     else graft.core.Materialize.releasing(out, internal)
   }
 
-  /** The collected codebook: per subspace, the (cid, cvec, cn2) list
-    * sorted by cid. m·ksub·(d/m) = d·ksub doubles total — broadcast-
+  /** (cid, v, −½|v|²): a Euclidean cell for [[nearestCids]]. */
+  private def euclidCell(cid: Int, v: Seq[Double]): (Int, Seq[Double], Double) =
+    (cid, v, -0.5 * v.foldLeft(0.0)((a, x) => a + x * x))
+
+  /** Subspace j's slice of the `unit` column. */
+  private def subvec(j: Int, dsub: Int): Column =
+    slice(col("unit"), j * dsub + 1, dsub)
+
+  /** The collected codebook: per subspace, its [[euclidCell]]s sorted by
+    * cid. m·ksub·(d/m) = d·ksub doubles total — broadcast-
     * scale BY CONSTRUCTION (ksub ≤ 256 in any standard PQ), which is
     * what lets the encoder be a pure scan.
     */
@@ -379,19 +344,18 @@ object Similarity {
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
       .groupBy(_._1)
       .map { case (s, rows) =>
-        s -> rows.sortBy(_._2).map { case (_, cid, v) =>
-          (cid, v, v.foldLeft(0.0)((a, x) => a + x * x))
-        }
+        s -> rows.sortBy(_._2).map { case (_, cid, v) => euclidCell(cid, v) }
       }
 
-  /** PQ encode as a PURE SCAN: the codebooks ride into the plan as
-    * literals, so each row pays m·ksub fused dot products inside
-    * whole-stage codegen and the operator has NO exchange, join, or
-    * aggregation — encoding 10^12 vectors is exactly as parallel as
-    * reading them. Returns (id, codes array<int>), codes[j] = cid of
-    * the Euclidean-nearest sub-centroid; ties to the smallest cid
-    * (`array_position` finds the FIRST maximum, and the score array is
-    * cid-ordered).
+  /** PQ encode as a PURE SCAN: one `nearest_cids` per subspace holds
+    * that subspace's codebook, so each row pays m·ksub fused dot products
+    * inside whole-stage codegen and the operator has NO exchange, join,
+    * or aggregation — encoding 10^12 vectors is exactly as parallel as
+    * reading them. The codebook is d·ksub doubles, driver-small by
+    * construction (ksub ≤ 256 in any standard PQ). Returns (id, codes
+    * array<int>), codes[j] = cid of the Euclidean-nearest sub-centroid;
+    * ties to the smallest cid (cids can be sparse if a seed lost every
+    * member in the Lloyd sweep).
     */
   def pqEncode(corpus: DataFrame, codebooks: DataFrame): DataFrame =
     pqEncodeUnit(normalized(corpus), codebooks)
@@ -403,18 +367,9 @@ object Similarity {
   private[graft] def pqEncodeUnit(units: DataFrame,
                                   codebooks: DataFrame): DataFrame = {
     val cb = collectCodebooks(codebooks)
-    val m = cb.keys.max + 1
     val dsub = cb(0).head._2.size
-    val codeCols = (0 until m).map { j =>
-      val sv = slice(col("unit"), j * dsub + 1, dsub)
-      val scores = array(cb(j).map { case (_, v, cn2) =>
-        graft.catalyst.GraftFunctions.dot_arr(sv, typedLit(v)) -
-          lit(0.5 * cn2) }: _*)
-      // position of the first max → the cid at that position (cids can
-      // be sparse if a seed lost every member in the Lloyd sweep)
-      element_at(typedLit(cb(j).map(_._1).toSeq),
-        array_position(scores, array_max(scores)).cast("int"))
-    }
+    val codeCols = (0 to cb.keys.max).map(j =>
+      nearestCids(subvec(j, dsub), cb(j).toSeq, 1).getItem(0))
     units.withColumn("codes", array(codeCols: _*)).drop("unit")
   }
 
@@ -427,7 +382,7 @@ object Similarity {
     val m = cb.keys.max + 1
     val dsub = cb(0).head._2.size
     array((0 until m).map { j =>
-      val sv = slice(col("unit"), j * dsub + 1, dsub)
+      val sv = subvec(j, dsub)
       val byCid = cb(j).map(e => e._1 -> e._2).toMap
       val maxCid = cb(j).map(_._1).max
       array((0 to maxCid).map(cid => byCid.get(cid)
@@ -490,7 +445,7 @@ object Similarity {
     * training sweeps amortize across query batches (a real deployment
     * persists `index` as a table of m ints + a cell id per vector and
     * the two centroid frames as tiny side tables). `release()` drops
-    * the cached centroid frame.
+    * the centroid, codebook and index frames' blocks.
     */
   final case class IvfAdcIndex(cents: DataFrame, codebooks: DataFrame,
                                index: DataFrame) {
@@ -502,23 +457,17 @@ object Similarity {
   }
 
   /** Build the IVFADC index: coarse sweep, residual computation,
-    * residual-PQ sweep, exchange-free encode. The m·ksub-row codebook
-    * frame is cached — [[ivfAdcSearch]] collects it per query batch,
-    * and without the cache each batch would re-trigger the whole
-    * training lineage (locally masked by shuffle-file reuse, a real
-    * recompute on a cluster whose shuffle files have aged out).
+    * residual-PQ sweep, exchange-free encode. The centroid and codebook
+    * frames come back materialized — LOCAL relations below the driver
+    * bound, checkpoint-backed beyond it — so [[ivfAdcSearch]], which
+    * collects the codebook per query batch, never re-triggers the
+    * training lineage, and [[IvfAdcIndex.release]] frees them.
     */
   def ivfAdcIndex(corpus: DataFrame, nCells: Int = 16,
                   m: Int = 8, ksub: Int = 16): IvfAdcIndex = {
     // one dim probe shared by the coarse and the residual-PQ training
-    // (each used to run its own limit-1 job)
-    val dim = corpus.select(size(col("embedding"))).head().getInt(0)
-    // centroid/codebook frames come back as LOCAL relations below the
-    // driver bound — caching those would only wrap a job-free local
-    // scan in distributed cache blocks
-    val cents0 = ivfCentroids(corpus, nCells, dim)
-    val cents =
-      if (graft.core.Materialize.isLocal(cents0)) cents0 else cents0.cache()
+    val dim = trainDim(corpus, "embedding", -1)
+    val cents = ivfCentroids(corpus, nCells, dim)
     val c = normalized(corpus)
     // ONE corpus assignment pass, cached: residual-PQ training and the
     // encode both consume `resid` — uncached, the coarse assignment's
@@ -531,9 +480,8 @@ object Similarity {
       .select(col("id"), col("cid").as("ccid"),
         zip_with(col("unit"), col("cunit"), (a, b) => a - b).as("unit"))
       .cache()
-    val cb0 = pqTrainUnit(resid.select(col("id"), col("unit")), m, ksub, dim,
+    val cb = pqTrainUnit(resid.select(col("id"), col("unit")), m, ksub, dim,
       inputCached = true)
-    val cb = if (graft.core.Materialize.isLocal(cb0)) cb0 else cb0.cache()
     val index = graft.core.Materialize.releasing(
       pqEncodeUnit(resid, cb), Seq(resid))
     IvfAdcIndex(cents, cb, index)
@@ -548,13 +496,10 @@ object Similarity {
     val cbc = collectCodebooks(idx.codebooks)
     val q = normalized(queries).select(col("id").as("qid"),
       col("unit").as("qunit"))
-    val qProbes = q.crossJoin(broadcast(idx.cents))
-      .select(col("qid"), col("qunit"), col("cid"),
-        dot("qunit", "cunit").as("sim"), col("cunit"))
-      .withColumn("rk", row_number().over(Window.partitionBy("qid")
-        .orderBy(col("sim").desc, col("cid"))))
-      .filter(col("rk") <= nprobe)
-      .select(col("qid"), col("cid").as("ccid"), col("sim").as("qc"),
+    val qProbes = nearestCells(q, "qid", "qunit", idx.cents, "cunit",
+        euclid = false, nprobe, Seq("qunit"))
+      .join(broadcast(idx.cents.select(col("cid"), col("cunit"))), "cid")
+      .select(col("qid"), col("cid").as("ccid"), dot("qunit", "cunit").as("qc"),
         zip_with(col("qunit"), col("cunit"), (a, b) => a - b).as("unit"))
     val lutProbes = qProbes
       .withColumn("lut", lutColumn(cbc)).drop("unit")
@@ -608,24 +553,16 @@ object Similarity {
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nCentroids: Int = 16, nprobe: Int = 4): DataFrame = {
-    val cents0 = ivfCentroids(corpus, nCentroids)
-    val cents =
-      if (graft.core.Materialize.isLocal(cents0)) cents0 else cents0.cache()
+    val cents = ivfCentroids(corpus, nCentroids)
     val c = normalized(corpus)
     val cBucketed = assignNearest(c, cents)
-      .select(col("id"), col("unit"), col("cid"))
     val q = normalized(queries).select(col("id").as("qid"),
       col("unit").as("qunit"))
-    val qProbes = q.crossJoin(broadcast(cents))
-      .select(col("qid"), col("qunit"), col("cid"),
-        dot("qunit", "cunit").as("sim"))
-      .withColumn("rk", row_number().over(Window.partitionBy("qid")
-        .orderBy(col("sim").desc, col("cid"))))
-      .filter(col("rk") <= nprobe)
-      .select(col("qid"), col("qunit"), col("cid"))
+    val qProbes = nearestCells(q, "qid", "qunit", cents, "cunit",
+      euclid = false, nprobe, Seq("qunit"))
     val scored = qProbes.join(cBucketed, "cid")
       .filter(col("id") =!= col("qid"))
       .select(col("qid"), col("id"), dot("unit", "qunit").as("cosine"))
-    graft.core.Materialize.releasing(rankTopK(scored, k), Seq(cents))
+    graft.core.Materialize.releasing(rankTopK(scored, k), Nil)
   }
 }

@@ -71,6 +71,37 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("partial_max_by"), plan)
   }
 
+  test("local-codebook assignment is one nearest_cids node whatever k is; " +
+      "beyond the driver bound it is the broadcast partial aggregate") {
+    import spark.implicits._
+    val c = graft.pipeline.Similarity.normalized(
+      SynthGeo.table(spark, dir, "embeddings"))
+    val dim = 64
+    def plan(cents: org.apache.spark.sql.DataFrame) =
+      graft.pipeline.Similarity.assignNearest(c, cents)
+        .queryExecution.executedPlan
+    val plans = Seq(16, 4096).map { k =>
+      val p = plan((0 until k).map(i =>
+        (i, Seq.tabulate(dim)(d => ((i * 7 + d) % 13).toDouble)))
+        .toDF("cid", "cunit"))
+      val nodes = p.collect { case n => n.expressions.flatMap(_.collect {
+        case e: graft.catalyst.NearestCidsExpr => e }) }.flatten
+      assert(nodes.size == 1, p.toString)
+      assert("nearest_cids\\(".r.findAllIn(p.toString).size == 1, p.toString)
+      p.toString
+    }
+    // the codebook is held once, not printed: the plan does not grow
+    // with k·dim
+    assert(math.abs(plans(0).length - plans(1).length) < 100,
+      plans.mkString("\n"))
+    // a driver-local codebook past centroidsFitDriver (8M doubles) takes
+    // the broadcast max_by form
+    val big = Seq.tabulate(2)(i => (i, Array.fill((4 << 20) + 1)(i.toDouble)))
+      .toDF("cid", "cunit")
+    val bp = plan(big).toString
+    assert(bp.contains("partial_max_by") && !bp.contains("nearest_cids"), bp)
+  }
+
   test("stratified sample is a partial aggregate, not a window sort") {
     val docs = SynthGeo.table(spark, dir, "documents")
     val df = graft.pipeline.Curation.stratifiedSample(

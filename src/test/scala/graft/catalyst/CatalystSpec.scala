@@ -36,6 +36,75 @@ class CatalystSpec extends AnyFunSuite {
     assert(oob.head.isNullAt(0))
   }
 
+  test("nearest_cids equals a brute-force top-n, codegen and interpreted") {
+    import spark.implicits._
+    // SQL double order: NaN above every value, -0.0 == 0.0
+    def cmp(x: Double, y: Double) =
+      if (x == y) 0 else java.lang.Double.compare(x, y)
+    val dim = 4
+    val rnd = new scala.util.Random(3)
+    def g() = Seq.fill(dim)(rnd.nextGaussian())
+    val c0 = g()
+    // sparse cids (seeds that lost every member leave gaps); cid 2 is a
+    // copy of cid 0 and cid 8 the -0.0 twin of the zero cell 3: planted
+    // exact score ties
+    val cids = Array(0, 2, 3, 5, 8, 13)
+    val cellsA = Seq(c0, c0, Seq.fill(dim)(0.0), g(), Seq.fill(dim)(-0.0), g())
+    val cellsB = cellsA.updated(4, Seq(1.0, Double.NaN, 0.0, 0.0))
+    val vecs: Seq[(Int, Option[Seq[Option[Double]]])] =
+      (Seq.fill(20)(g()) ++ Seq(c0, c0.map(-_), Seq.fill(dim)(0.0),
+        Seq(-0.0, 0.0, -0.0, 0.0), Seq(1.0, 1.0, 1.0, 1.0),
+        Seq(1.0, Double.NaN, 2.0, 3.0), Seq(1.0, 2.0)))
+        .map(v => Some(v.map(Option(_))))
+        .++(Seq(None, Some(Seq(Some(1.0), None, Some(2.0), Some(3.0)))))
+        .zipWithIndex.map(_.swap)
+    val df = vecs.toDF("i", "v")
+    def ref(v: Option[Seq[Option[Double]]], cells: Seq[Seq[Double]],
+            bias: Seq[Double], n: Int): Option[Seq[Int]] = v match {
+      case Some(x) if x.forall(_.isDefined) && x.size == dim =>
+        val s = cells.zip(bias).map { case (c, b) =>
+          x.flatten.zip(c).foldLeft(0.0)((a, p) => a + p._1 * p._2) + b }
+        Some(cids.indices.sortWith { (a, b) =>
+          val o = cmp(s(a), s(b)); o > 0 || (o == 0 && cids(a) < cids(b))
+        }.take(n).map(cids).toSeq)
+      case _ => None
+    }
+    val modes = Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false")
+    for ((factory, wholeStage) <- modes; cells <- Seq(cellsA, cellsB);
+         euclid <- Seq(false, true); n <- Seq(1, 2, 3, 6, 7)) {
+      spark.conf.set("spark.sql.codegen.factoryMode", factory)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try {
+        val bias = cells.map(c =>
+          if (euclid) -0.5 * c.foldLeft(0.0)((a, x) => a + x * x) else 0.0)
+        val got = df.select(col("i"), GraftFunctions.nearest_cids(col("v"),
+            cells.flatten.toArray, bias.toArray, cids, n).as("c"))
+          .collect().map(r => r.getInt(0) ->
+            (if (r.isNullAt(1)) None else Some(r.getSeq[Int](1)))).toMap
+        vecs.foreach { case (i, v) =>
+          assert(got(i) == ref(v, cells, bias, n),
+            s"$factory euclid=$euclid n=$n row $i")
+        }
+        if (n == 1) {
+          // the tie rule of the per-cell literal scan it replaced, on
+          // every vector that has a score (that scan put null and
+          // ragged vectors on the lowest cid; nearest_cids answers null)
+          val scores = array(cells.zip(bias).map { case (c, b) =>
+            GraftFunctions.dot_arr(col("v"), typedLit(c)) + lit(b) }: _*)
+          val scan = df.select(col("i"), element_at(typedLit(cids.toSeq),
+              array_position(scores, array_max(scores)).cast("int")))
+            .collect().map(r => r.getInt(0) ->
+              (if (r.isNullAt(1)) None else Some(Seq(r.getInt(1))))).toMap
+          assert(got.filter(_._2.isDefined) == scan.filter(r => got(r._1).isDefined),
+            s"$factory euclid=$euclid")
+        }
+      } finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+  }
+
   test("cell_id expression equals Tiling.cellId, in codegen") {
     import spark.implicits._
     val df = Seq((0.0, 0.0), (13.0, -9.0), (-0.1, 0.1), (179.99, 55.5))

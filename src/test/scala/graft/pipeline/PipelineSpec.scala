@@ -217,6 +217,67 @@ class PipelineSpec extends AnyFunSuite {
     assert(found.forall { case (a, b) => compOf(a) == compOf(b) })
   }
 
+  private def euclidFixture() = {
+    import spark.implicits._
+    val f = (0 until 60).map(i => (i.toLong,
+        Seq((i % 5).toDouble, (i % 3).toDouble, (i % 7 - 3).toDouble)))
+      .toDF("id", "vec")
+    def cents(cells: Seq[(Int, Seq[Double])]) = cells.map { case (c, v) =>
+      (c, v, v.foldLeft(0.0)((a, x) => a + x * x)) }.toDF("cid", "cvec", "cn2")
+    (f, cents _)
+  }
+
+  test("multi-probe Euclidean assignment over one local centroid emits " +
+      "one row per id") {
+    import spark.implicits._
+    val (f, cents) = euclidFixture()
+    val one = Similarity.assignNearestEuclid(f,
+      cents(Seq(4 -> Seq(1.0, 0.0, 0.0))), probes = 2).as[(Long, Int)].collect()
+    assert(one.sorted.toSeq == (0 until 60).map(i => (i.toLong, 4)))
+  }
+
+  test("multi-probe Euclidean assignment: probes = 3 on a local codebook " +
+      "equals the distributed top-k") {
+    import spark.implicits._
+    val (f, cents) = euclidFixture()
+    // integer cells, two of them equal: planted exact score ties
+    val cs = cents(Seq(0 -> Seq(0, 0, 0), 2 -> Seq(1, 1, 0), 3 -> Seq(1, 1, 0),
+      5 -> Seq(4, 2, 3), 6 -> Seq(2, 0, -3), 9 -> Seq(0, 2, 1))
+      .map { case (c, v) => (c, v.map(_.toDouble)) })
+    val local = Similarity.assignNearestEuclid(f, cs, probes = 3)
+    val dist = Similarity.assignNearestEuclid(f, cs.repartition(2), probes = 3)
+    assert(local.queryExecution.executedPlan.toString.contains("nearest_cids"))
+    assert(!dist.queryExecution.executedPlan.toString.contains("nearest_cids"))
+    val l = local.as[(Long, Int)].collect().sorted.toSeq
+    assert(l.size == 180 && l.distinct.size == 180)
+    assert(l == dist.as[(Long, Int)].collect().sorted.toSeq)
+  }
+
+  test("a null embedding fails semantic dedup and IVF with a message " +
+      "naming its id") {
+    import spark.implicits._
+    val (rows, _) = semanticFixture(11)
+    // the null row first: the dimension probe must not read it
+    val emb = ((99999L, None: Option[Seq[Float]]) +:
+      rows.map { case (i, v) => (i, Some(v)) }).toDF("vec_id", "embedding")
+    def causes(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    for ((name, run) <- Seq[(String, () => Any)](
+        "flat" -> (() => Dedup.semanticDedup(emb, nClusters = 8).collect()),
+        "two-level" -> (() => Dedup.semanticNearDup(emb, nClusters = 25,
+          twoLevelK = 9).collect()),
+        "ivf" -> (() => Similarity.ivfTopK(emb, emb.limit(3), k = 5,
+          nCentroids = 8).collect()))) {
+      val ex = intercept[Exception](run())
+      // not the dimension probe's null read (an NPE, or Spark's
+      // ROW_VALUE_IS_NULL for Row.getInt on a null)
+      assert(!causes(ex).exists(e => e.isInstanceOf[NullPointerException] ||
+        Option(e.getMessage).exists(_.contains("ROW_VALUE_IS_NULL"))), s"$name: $ex")
+      assert(causes(ex).exists(e => Option(e.getMessage).exists(
+        _.contains("vector input id 99999 has a null embedding"))), s"$name: $ex")
+    }
+  }
+
   test("semantic dedup occupancy telemetry + opt-in oversized-cell split") {
     import spark.implicits._
     // planted MEGA-CELL: 800 diffuse random unit vectors forced into
