@@ -124,8 +124,8 @@ object Similarity {
     * within [[centroidsFitDriver]] is one `nearest_cids` projection — a
     * PURE SCAN, rows are never shuffled to be assigned; beyond it the
     * centroids are broadcast into a partial aggregate with the same tie
-    * rule, `max_by` over (score, −cid) for n = 1, [[graft.catalyst
-    * .TopKAgg]] for n > 1. Returns (`key`, cid, `keep`…) per (row, cell).
+    * rule, `max_by` over (score, −cid) for n = 1, `TopKAgg` for n > 1.
+    * Returns (`key`, cid, `keep`…) per (row, cell).
     */
   private def nearestCells(f: DataFrame, key: String, vec: String,
       cents: DataFrame, cvec: String, euclid: Boolean, n: Int,

@@ -58,7 +58,9 @@ class CatalystSpec extends AnyFunSuite {
         .map(v => Some(v.map(Option(_))))
         .++(Seq(None, Some(Seq(Some(1.0), None, Some(2.0), Some(3.0)))))
         .zipWithIndex.map(_.swap)
-    val df = vecs.toDF("i", "v")
+    // shuffled, so the projection runs in a stage of its own rather than
+    // being folded into the local relation by the optimizer
+    val df = vecs.toDF("i", "v").repartition(2)
     def ref(v: Option[Seq[Option[Double]]], cells: Seq[Seq[Double]],
             bias: Seq[Double], n: Int): Option[Seq[Int]] = v match {
       case Some(x) if x.forall(_.isDefined) && x.size == dim =>
@@ -77,10 +79,13 @@ class CatalystSpec extends AnyFunSuite {
       try {
         val bias = cells.map(c =>
           if (euclid) -0.5 * c.foldLeft(0.0)((a, x) => a + x * x) else 0.0)
-        val got = df.select(col("i"), GraftFunctions.nearest_cids(col("v"),
-            cells.flatten.toArray, bias.toArray, cids, n).as("c"))
-          .collect().map(r => r.getInt(0) ->
-            (if (r.isNullAt(1)) None else Some(r.getSeq[Int](1)))).toMap
+        val q = df.select(col("i"), GraftFunctions.nearest_cids(col("v"),
+          cells.flatten.toArray, bias.toArray, cids, n).as("c"))
+        val got = q.collect().map(r => r.getInt(0) ->
+          (if (r.isNullAt(1)) None else Some(r.getSeq[Int](1)))).toMap
+        val plan = q.queryExecution.executedPlan.toString
+        assert(plan.contains("nearest_cids") &&
+          plan.contains("*(") == (wholeStage == "true"), plan)
         vecs.foreach { case (i, v) =>
           assert(got(i) == ref(v, cells, bias, n),
             s"$factory euclid=$euclid n=$n row $i")
