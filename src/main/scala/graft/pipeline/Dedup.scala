@@ -350,7 +350,8 @@ object Dedup {
       h.toDouble / Long.MaxValue.toDouble
     }
     val bHp = spark.sparkContext.broadcast(hp)
-    emb.select(col(idCol).cast("long").as("id"), col(vecCol))
+    emb.select(col(idCol).cast("long").as("id"),
+        Similarity.checked(idCol, vecCol, dim))
       .as[(Long, Seq[Float])]
       .map { case (id, v) =>
         val arr = v.toArray
@@ -398,11 +399,12 @@ object Dedup {
     // count + dim in ONE pass over the (possibly uncached, expensive)
     // input — a separate count() and size().head() would each replay
     // the upstream plan
-    val cd = emb.agg(count(lit(1)), first(size(col(vecCol)))).head()
+    val cd = emb.agg(count(lit(1)),
+      first(size(col(vecCol)), ignoreNulls = true)).head()
     val nRows = cd.getLong(0)
     if (nRows == 0)
       return Seq.empty[(Long, Long, Double)].toDF("id_a", "id_b", "cosine")
-    val dim = cd.getInt(1)
+    val dim = if (cd.isNullAt(1)) -1 else cd.getInt(1)
     val (bb, nt) = embeddingLshParams(nRows, threshold, bandBits, tables,
       targetBucket)
     val sigs = embeddingSigs(emb, bb, nt, idCol, vecCol, dimHint = dim)
@@ -571,23 +573,6 @@ object Dedup {
     occ
   }
 
-  /** Pair-join input with PINNED partitioning width (4× the session's
-    * shuffle width, hashed by cid). The within-cell pair expansion is
-    * compute-quadratic in occupancy while its shuffle INPUT bytes are
-    * linear — AQE's byte-based coalescing sees a few MB and hands the
-    * whole expansion to one task (r8 probe: the q104 pair join ran as
-    * a single 0.65 s task at 32 idle cores). A user-pinned width is
-    * exempt from coalescing, and both join sides share the one
-    * exchange (ReusedExchange), so the expansion parallelizes by cell
-    * at any scale. Values are unaffected — only placement changes.
-    */
-  private def pairJoinSide(assigned: DataFrame, cells: Long): DataFrame = {
-    val w = math.min(
-      4L * assigned.sparkSession.sessionState.conf.numShufflePartitions,
-      math.max(1L, cells)).toInt
-    assigned.repartition(w, col("cid"))
-  }
-
   private[graft] case class SemAssign(assigned: DataFrame,
                                       kcents: DataFrame,
                                       n: Long, multiProbe: Boolean,
@@ -683,20 +668,20 @@ object Dedup {
     // with an explicit cluster count only an emptiness probe is needed —
     // a full count() would replay the (possibly expensive, uncached)
     // upstream plan once before any clustering work. The probe returns
-    // the DIMENSION too, so neither branch pays a second limit-1 job
-    // for it (the flat path's centroid build used to run its own). It
+    // the DIMENSION, which centroid training and the length check in
+    // `normalized` share, so no later step pays a limit-1 job for it. It
     // skips null embeddings; when it finds none, the first row (if any)
     // goes through `normalized`, whose check names a null one's id.
-    val dimProbe: Option[Int] =
-      if (nClusters0 > 0) Similarity.dimOf(renamed, "embedding") else None
-    if (nClusters0 > 0 && dimProbe.isEmpty)
-      Similarity.normalized(renamed).limit(1).collect()
+    val dimProbe = Similarity.dimOf(renamed, "embedding")
+    if (dimProbe.isEmpty) Similarity.normalized(renamed).limit(1).collect()
     val n: Long =
       if (nClusters0 > 0) { if (dimProbe.isEmpty) 0L else -1L }
       else renamed.count()
     if (n == 0)
       return SemAssign(null, null, 0L, multiProbe = false,
         Occupancy(0L, 0L, 0.0, 0L))
+    val dim = dimProbe.get
+    val units = Similarity.normalized(renamed, dim = dim)
     // k stays a Long until the branch: at n beyond ~2·10^12 the
     // Int-narrowed quotient wraps negative, which would silently route
     // a trillion-vector corpus to the flat path with a garbage k
@@ -705,10 +690,8 @@ object Dedup {
       else math.max(1L, n / math.max(1, targetCluster))
     if (kL <= twoLevelK) {
       val k = kL.toInt // <= twoLevelK, Int-safe
-      val cents = Similarity.scatteredCentroids(renamed, k,
-        dimProbe.getOrElse(-1))
-      val assigned = Similarity.assignNearest(
-          Similarity.normalized(renamed), cents)
+      val cents = Similarity.scatteredCentroids(renamed, k, dim)
+      val assigned = Similarity.assignNearest(units, cents)
         .withColumn("kcid", col("cid")).cache()
       SemAssign(assigned,
         cents.select(col("cid").as("kcid"), col("cunit")), n,
@@ -726,13 +709,10 @@ object Dedup {
           f"centroids — expected cell occupancy ~${
             n.toDouble / (65536.0 * 65536.0)}%.0f; pair volume grows " +
           "quadratically with it. Raise targetCluster knowingly.")
-      // one dim probe shared by both levels' centroid builds (residuals
-      // have the same dimensionality as the embeddings); reuses the
-      // emptiness probe's value when it ran
-      val dim = dimProbe.getOrElse(Similarity.trainDim(renamed, "embedding", -1))
+      // residuals have the embeddings' dimension: both levels' centroid
+      // builds share the probe
       val cents1 = Similarity.scatteredCentroids(renamed, k1, dim)
-      val a1 = Similarity.assignNearest(
-        Similarity.normalized(renamed), cents1)
+      val a1 = Similarity.assignNearest(units, cents1)
       val resid = a1.join(broadcast(cents1), "cid")
         .select(col("id"), col("cid").as("c1"), col("unit"),
           zip_with(col("unit"), col("cunit"), (x, c) => x - c).as("vec"))
@@ -804,7 +784,7 @@ object Dedup {
     if (sa.n == 0)
       return Seq.empty[(Long, Long, Double)].toDF("id_a", "id_b", "cosine")
     val (assigned, toRelease) = maybeSplit(sa, targetCluster, splitOversized)
-    val byCell = pairJoinSide(assigned, sa.occ.cells)
+    val byCell = graft.core.Parallelism.spread(assigned, col("cid"), sa.occ.cells)
     val paired = byCell.as("a").join(byCell.as("b"),
         $"a.cid" === $"b.cid" && $"a.id" < $"b.id")
       .select($"a.id".as("id_a"), $"b.id".as("id_b"),
@@ -839,7 +819,7 @@ object Dedup {
         .toDF("id", "component", "keep")
     val (assigned, toRelease) = maybeSplit(sa, targetCluster, splitOversized)
     val kcents = sa.kcents
-    val byCell = pairJoinSide(assigned, sa.occ.cells)
+    val byCell = graft.core.Parallelism.spread(assigned, col("cid"), sa.occ.cells)
     val pairs = byCell.as("a").join(byCell.as("b"),
         $"a.cid" === $"b.cid" && $"a.id" < $"b.id")
       .filter(graft.catalyst.GraftFunctions.dot_arr($"a.unit", $"b.unit")

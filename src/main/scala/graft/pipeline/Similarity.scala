@@ -29,19 +29,13 @@ object Similarity {
     graft.catalyst.GraftFunctions.dot_arr(col(a), col(b))
 
   /** L2-normalize the vector column into `unit` (array<double>). A null
-    * vector or element fails the query with a message naming its id —
-    * checked in this projection, so it costs no job.
+    * vector or element, or with `dim` > 0 a vector of another length,
+    * fails the query with a message naming its id ([[checked]]).
     */
   def normalized(emb: DataFrame, idCol: String = "vec_id",
-                 vecCol: String = "embedding"): DataFrame = {
-    val v = col(vecCol)
-    val checked = when(v.isNull || exists(v, _.isNull),
-      raise_error(concat(lit("vector input id "),
-        coalesce(col(idCol).cast("string"), lit("null")),
-        lit(" has a null embedding or a null element"))))
-      .otherwise(v)
+                 vecCol: String = "embedding", dim: Int = -1): DataFrame = {
     emb.select(col(idCol).cast("long").as("id"),
-        transform(checked, x => x.cast("double")).as("v"))
+        transform(checked(idCol, vecCol, dim), x => x.cast("double")).as("v"))
       .withColumn("norm",
         sqrt(aggregate(transform(col("v"), x => x * x), lit(0.0),
           (acc, x) => acc + x)))
@@ -49,6 +43,21 @@ object Similarity {
         when(col("norm") === 0.0, col("v"))
           .otherwise(transform(col("v"), x => x / col("norm"))))
       .select("id", "unit")
+  }
+
+  /** `vecCol`, or an error naming the row's id when the vector or an
+    * element is null, or when `dim` > 0 and its length differs. Checked
+    * in the caller's projection, so it costs no job.
+    */
+  private[pipeline] def checked(idCol: String, vecCol: String,
+                                dim: Int): Column = {
+    val v = col(vecCol)
+    def fail(what: String) = raise_error(concat(lit("vector input id "),
+      coalesce(col(idCol).cast("string"), lit("null")), lit(what)))
+    val nulls = when(v.isNull || exists(v, _.isNull),
+      fail(" has a null embedding or a null element"))
+    (if (dim > 0) nulls.when(size(v) =!= dim,
+      fail(s" has a length other than $dim")) else nulls).otherwise(v)
   }
 
   /** Size of the first non-null `vecCol` vector (one limit-1 job). */
@@ -261,7 +270,7 @@ object Similarity {
 
   private def lloydCentroids(corpus: DataFrame, nCentroids: Int,
       scattered: Boolean, dimHint: Int = -1): DataFrame = {
-    val c = normalized(corpus).cache()
+    val c = normalized(corpus, dim = dimHint).cache()
     // TakeOrdered heap either way — never a global sort
     val ord =
       if (scattered) Seq(xxhash64(col("id")), col("id")) else Seq(col("id"))
@@ -468,7 +477,7 @@ object Similarity {
     // one dim probe shared by the coarse and the residual-PQ training
     val dim = trainDim(corpus, "embedding", -1)
     val cents = ivfCentroids(corpus, nCells, dim)
-    val c = normalized(corpus)
+    val c = normalized(corpus, dim = dim)
     // ONE corpus assignment pass, cached: residual-PQ training and the
     // encode both consume `resid` — uncached, the coarse assignment's
     // aggregate ran twice per index build (and a third time per search
@@ -553,10 +562,11 @@ object Similarity {
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nCentroids: Int = 16, nprobe: Int = 4): DataFrame = {
-    val cents = ivfCentroids(corpus, nCentroids)
-    val c = normalized(corpus)
-    val cBucketed = assignNearest(c, cents)
-    val q = normalized(queries).select(col("id").as("qid"),
+    // one dim probe: centroid training and both length checks share it
+    val dim = trainDim(corpus, "embedding", -1)
+    val cents = ivfCentroids(corpus, nCentroids, dim)
+    val cBucketed = assignNearest(normalized(corpus, dim = dim), cents)
+    val q = normalized(queries, dim = dim).select(col("id").as("qid"),
       col("unit").as("qunit"))
     val qProbes = nearestCells(q, "qid", "qunit", cents, "cunit",
       euclid = false, nprobe, Seq("qunit"))

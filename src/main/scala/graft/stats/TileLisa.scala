@@ -117,24 +117,13 @@ object TileLisa {
     val ts = if (tileSize > 0) tileSize else autoTileSize(points)
     val tiles = points.select(col("gid").cast("long"),
       Tiling.cellIdCol(col("x"), col("y"), ts).as("tile"))
-    val joined = tiles
+    val keyed = tiles
       .join(values.select(col("gid").cast("long"),
         col("vals").cast("array<double>").as("vals")), Seq("gid"))
       .join(weights.select(col("gid").cast("long"), col("nbrs")), Seq("gid"))
       .select(col("tile"), col("gid").cast("long").as("gid"), col("vals"),
         col("nbrs"))
-      // 4× the session's shuffle width: the kernel stage is compute-
-      // bound (O(rows × k × permutations) per window), and hashing a
-      // modest tile count into exactly `numShufflePartitions`
-      // partitions stacks 2-3 windows on
-      // one task while other cores idle — at 20 tiles / 32 partitions
-      // the r8 probe measured the kernel job at ~0.9 s vs ~0.35 s of
-      // max-window work. Wider hashing separates the windows; values
-      // are partitioning-independent (per-window seed streams), so the
-      // output is bit-identical under any width.
-      .repartition(
-        4 * points.sparkSession.sessionState.conf.numShufflePartitions,
-        col("tile"))
+    val joined = graft.core.Parallelism.spread(keyed, col("tile"))
       .sortWithinPartitions("tile", "gid")
 
     import org.apache.spark.sql.catalyst.InternalRow

@@ -17,7 +17,10 @@ import org.apache.spark.sql.functions._
   *          self-join on the edge key.
   * The shuffle is keyed by vertex/edge coordinates, so it spreads evenly
   * over the cluster regardless of polygon layout; no tile index is needed
-  * at all for contiguity. Order-k neighbors (with `inc_lower`) are a BFS
+  * at all for contiguity. The joins are hinted `shuffle_hash`: by size the
+  * planner would broadcast the key table, and a broadcast hash relation
+  * on coordinate keys takes a whole memory page, held until the
+  * ContextCleaner drops it. Order-k neighbors (with `inc_lower`) are a BFS
   * of k-1 adjacency self-joins, exactly `create_cont_weights`' semantics.
   *
   * `precision` > 0 snaps coordinates to that grid before matching
@@ -73,7 +76,7 @@ object ContiguityWeights {
             case _ => Nil
           }
         }.toDF("gid", "kx", "ky").cache() // both sides of the self-join
-        (verts.as("a").join(verts.as("b"),
+        (verts.as("a").join(verts.as("b").hint("shuffle_hash"),
             $"a.kx" === $"b.kx" && $"a.ky" === $"b.ky" &&
               $"a.gid" =!= $"b.gid")
           .select($"a.gid".as("gid"), $"b.gid".as("nbr")), verts)
@@ -104,7 +107,7 @@ object ContiguityWeights {
             case _ => Nil
           }
         }.toDF("gid", "ax", "ay", "bx", "by").cache()
-        (edges.as("a").join(edges.as("b"),
+        (edges.as("a").join(edges.as("b").hint("shuffle_hash"),
             $"a.ax" === $"b.ax" && $"a.ay" === $"b.ay" &&
               $"a.bx" === $"b.bx" && $"a.by" === $"b.by" &&
               $"a.gid" =!= $"b.gid")

@@ -1,6 +1,6 @@
 package graft.weights
 
-import graft.core.{Dist, Tiling}
+import graft.core.{Dist, Parallelism, Tiling}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -72,23 +72,14 @@ object DistanceWeights {
         .withColumn("cell", Tiling.cellIdCol(col("x"), col("y"), cellSize))
       val deltas = (for (dx <- -1 to 1; dy <- -1 to 1)
         yield dx.toLong * Tiling.Mul + dy).toArray
-      // pin both join inputs to a cell-hashed width, 4× the session's
-      // shuffle width so that the candidate join + distance filter, the
-      // compute-dense stage, spreads over several waves per core. Its
-      // inputs are byte-tiny: without the pin the planner broadcast-
-      // joins and streams everything through the source scan's task
-      // count (ONE task for a small
-      // parquet file; at cluster scale, however many splits the scan
-      // happened to get). Same-width hash on the join keys keeps the
-      // pair math spread by cell at any scale; values are unchanged.
-      val w = 4 * points.sparkSession.sessionState.conf.numShufflePartitions
-      pts
+      // both join inputs cell-hashed at one width (graft.core.Parallelism)
+      val cand = pts
         .withColumn("__delta", explode(typedLit(deltas)))
         .withColumn("__ccell", col("cell") + col("__delta"))
-        .repartition(w, col("__ccell"))
-        .join(pts.select(col("gid").as("bgid"), col("x").as("bx"),
-          col("y").as("by"), col("cell").as("bcell"))
-          .repartition(w, col("bcell")),
+      val ptsB = pts.select(col("gid").as("bgid"), col("x").as("bx"),
+        col("y").as("by"), col("cell").as("bcell"))
+      Parallelism.spread(cand, col("__ccell"))
+        .join(Parallelism.spread(ptsB, col("bcell")),
           col("__ccell") === col("bcell"))
         .filter(col("gid") =!= col("bgid"))
         .withColumn("dist",

@@ -1,6 +1,6 @@
 package graft.weights
 
-import graft.core.{Dist, Tiling}
+import graft.core.{Dist, Parallelism, Tiling}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -300,19 +300,14 @@ object KnnWeights {
     val deltas = (for (dx <- -1 to 1; dy <- -1 to 1)
       yield dx.toLong * Tiling.Mul + dy).toArray
     val homePred = homeFilter.getOrElse(lit(true))
-    val shippedDf = pts
+    // the output keeps this partitioning, so every consumer of the
+    // weights runs at the session width too (graft.core.Parallelism)
+    val shippedDf = Parallelism.spread(pts
       .withColumn("__delta", explode(typedLit(deltas)))
       .select(Seq((col("cell") + col("__delta")).as("tcell"), col("gid"),
         col("x"), col("y"),
-        ((col("__delta") === 0L) && homePred).as("home")) ++ vcol: _*)
-      // explicit partition count at the session's shuffle width (the
-      // core count locally, the deployer's width on a cluster): one task
-      // per partition keeps the compute-bound heap evals on every core,
-      // where an AQE-coalesced exchange would target 64MB IO-sized
-      // partitions and under-parallelize the math. No wider: the output
-      // keeps this partitioning, and every consumer of the weights pays
-      // each partition's fixed task and block cost again.
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("tcell"))
+        ((col("__delta") === 0L) && homePred).as("home")) ++ vcol: _*),
+        col("tcell"))
       .sortWithinPartitions("tcell")
 
     // one pass per cell-run over raw InternalRows: bounded-heap top-k per

@@ -134,6 +134,21 @@ class PlanSpec extends AnyFunSuite {
     cachedSrc.unpersist(blocking = false)
   }
 
+  test("queen and rook adjacency self-joins never broadcast their key table") {
+    // a broadcast hash relation on the compound (double) key takes a
+    // whole memory page, held until the ContextCleaner drops it
+    val polys = SynthGeo.partPolygons(spark, dir)
+    for (queen <- Seq(true, false)) {
+      val (lazyAdj, cachedSrc) = graft.weights.ContiguityWeights.adjacencyLazy(
+        polys, graft.weights.ContiguityWeights.Conf(queen = queen))
+      assert(lazyAdj.collect().nonEmpty)
+      // the adaptive plan after the run: a join re-planned at runtime shows
+      val plan = lazyAdj.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastExchange"), s"queen=$queen: $plan")
+      cachedSrc.unpersist(blocking = false)
+    }
+  }
+
   test("hashed linear scorer broadcasts the model, never the corpus") {
     val docs = SynthGeo.table(spark, dir, "documents")
     val w = spark.range(1024).select(col("id").as("bucket"),

@@ -267,7 +267,8 @@ class PipelineSpec extends AnyFunSuite {
         "two-level" -> (() => Dedup.semanticNearDup(emb, nClusters = 25,
           twoLevelK = 9).collect()),
         "ivf" -> (() => Similarity.ivfTopK(emb, emb.limit(3), k = 5,
-          nCentroids = 8).collect()))) {
+          nCentroids = 8).collect()),
+        "lsh" -> (() => Dedup.embeddingNearDup(emb).collect()))) {
       val ex = intercept[Exception](run())
       // not the dimension probe's null read (an NPE, or Spark's
       // ROW_VALUE_IS_NULL for Row.getInt on a null)
@@ -276,6 +277,31 @@ class PipelineSpec extends AnyFunSuite {
       assert(causes(ex).exists(e => Option(e.getMessage).exists(
         _.contains("vector input id 99999 has a null embedding"))), s"$name: $ex")
     }
+  }
+
+  test("a ragged embedding fails assignment with one message, local or broadcast codebook") {
+    import spark.implicits._
+    val (rows, _) = semanticFixture(13)
+    // last, so the dimension probe reads a 32-element vector
+    val emb = (rows :+ ((77777L, Seq(0.5f, 0.5f)))).toDF("vec_id", "embedding")
+    val local = Similarity.scatteredCentroids(rows.toDF("vec_id", "embedding"), 4)
+    assert(local.queryExecution.optimizedPlan.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    def message(run: => Any): String = {
+      val ex = intercept[Exception](run)
+      Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .flatMap(e => Option(e.getMessage)).find(_.contains("vector input id"))
+        .getOrElse(fail(s"no message naming the id: $ex"))
+    }
+    val want = "vector input id 77777 has a length other than 32"
+    val units = Similarity.normalized(emb, dim = 32)
+    // a codebook past centroidsFitDriver is a frame that is not a
+    // driver-local relation, assigned by the broadcast max_by form
+    for ((name, cents) <- Seq("local" -> local, "broadcast" -> local.repartition(2)))
+      assert(message(Similarity.assignNearest(units, cents).collect()).contains(want), name)
+    assert(message(Dedup.semanticNearDup(emb, nClusters = 4).collect()).contains(want))
+    assert(message(Similarity.ivfTopK(emb, emb.limit(3), k = 5, nCentroids = 4)
+      .collect()).contains(want))
   }
 
   test("semantic dedup occupancy telemetry + opt-in oversized-cell split") {
