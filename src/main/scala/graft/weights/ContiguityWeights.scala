@@ -38,17 +38,15 @@ object ContiguityWeights {
     if (prec > 0.0) math.rint(v / prec) else v
 
   /** First-order adjacency pairs `(gid, nbr)`, both directions. */
-  def adjacency(polys: DataFrame, conf: Conf): DataFrame = {
-    val (pairs, cachedSrc) = adjacencyLazy(polys, conf)
-    // materialize once, release the vertex/edge cache (scoped-release
-    // pattern — see graft.core.Materialize)
-    graft.core.Materialize.releasing(pairs, Seq(cachedSrc))
-  }
+  def adjacency(polys: DataFrame, conf: Conf): DataFrame =
+    graft.core.Materialize.releasing(adjacencyLazy(polys, conf)._1, Nil)
 
-  /** Pre-materialization adjacency: (lazy pairs frame, the internal
-    * cache backing it). Test seam — plan-shape assertions must look at
-    * this frame, because [[adjacency]] returns a checkpointed frame
-    * whose executed plan is just a scan of the materialized blocks.
+  /** Pre-materialization adjacency: (lazy pairs frame, the vertex or
+    * edge frame beneath it). Test seam — plan-shape assertions must look
+    * at this frame, because [[adjacency]] returns a checkpointed frame
+    * whose executed plan is just a scan of the materialized blocks. The
+    * key frame is not cached: both sides of the self-join read one
+    * reused exchange, so the polygons are decoded once.
     */
   private[graft] def adjacencyLazy(polys: DataFrame,
                                    conf: Conf): (DataFrame, Dataset[_]) = {
@@ -75,7 +73,7 @@ object ContiguityWeights {
               out
             case _ => Nil
           }
-        }.toDF("gid", "kx", "ky").cache() // both sides of the self-join
+        }.toDF("gid", "kx", "ky")
         (verts.as("a").join(verts.as("b").hint("shuffle_hash"),
             $"a.kx" === $"b.kx" && $"a.ky" === $"b.ky" &&
               $"a.gid" =!= $"b.gid")
@@ -106,7 +104,7 @@ object ContiguityWeights {
               out.distinct
             case _ => Nil
           }
-        }.toDF("gid", "ax", "ay", "bx", "by").cache()
+        }.toDF("gid", "ax", "ay", "bx", "by")
         (edges.as("a").join(edges.as("b").hint("shuffle_hash"),
             $"a.ax" === $"b.ax" && $"a.ay" === $"b.ay" &&
               $"a.bx" === $"b.bx" && $"a.by" === $"b.by" &&

@@ -139,13 +139,12 @@ class PlanSpec extends AnyFunSuite {
     // whole memory page, held until the ContextCleaner drops it
     val polys = SynthGeo.partPolygons(spark, dir)
     for (queen <- Seq(true, false)) {
-      val (lazyAdj, cachedSrc) = graft.weights.ContiguityWeights.adjacencyLazy(
-        polys, graft.weights.ContiguityWeights.Conf(queen = queen))
+      val lazyAdj = graft.weights.ContiguityWeights.adjacencyLazy(
+        polys, graft.weights.ContiguityWeights.Conf(queen = queen))._1
       assert(lazyAdj.collect().nonEmpty)
       // the adaptive plan after the run: a join re-planned at runtime shows
       val plan = lazyAdj.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastExchange"), s"queen=$queen: $plan")
-      cachedSrc.unpersist(blocking = false)
     }
   }
 
