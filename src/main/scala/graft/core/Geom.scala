@@ -66,12 +66,24 @@ final case class GPolygon(partStarts: Array[Int], xs: Array[Double],
   }
 
   /** Even-odd (ray crossing) point-in-polygon over all parts. */
-  def contains(px: Double, py: Double): Boolean = {
+  def contains(px: Double, py: Double): Boolean =
+    GPolygon.evenOdd(partStarts, 0, partStarts.length, xs, ys, px, py)
+}
+
+object GPolygon {
+
+  /** Even-odd (ray crossing) test of (px, py) against rings `r0` until
+    * `r1` of `starts`: ring r holds vertices `starts(r)` until the next
+    * ring's start, the last ring until the end of `xs`. One polygon's
+    * parts, or one polygon's run of rings in a layer stored end to end.
+    */
+  def evenOdd(starts: Array[Int], r0: Int, r1: Int, xs: Array[Double],
+              ys: Array[Double], px: Double, py: Double): Boolean = {
     var inside = false
-    var p = 0
-    while (p < partStarts.length) {
-      val s = partStarts(p)
-      val e = if (p + 1 < partStarts.length) partStarts(p + 1) else xs.length
+    var p = r0
+    while (p < r1) {
+      val s = starts(p)
+      val e = if (p + 1 < starts.length) starts(p + 1) else xs.length
       var i = s
       var j = e - 1
       while (i < e) {

@@ -1,6 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Scoped cache release for multi-pass builders.
   *
@@ -18,7 +20,10 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   *   - false (default): `localCheckpoint` — executor-local blocks, no
   *     extra I/O. Right for local mode and short-lived jobs; on a real
   *     cluster an executor loss makes the result unrecoverable (lineage
-  *     is gone).
+  *     is gone). The blocks are stored serialized ([[Level]]): a
+  *     deserialized block is sized by walking its object graph
+  *     (`SizeEstimator`), which costs more CPU than serializing the
+  *     rows does.
   *   - true: reliable `checkpoint` to the SparkContext checkpoint dir —
   *     survives executor loss; the mode a 1000-executor run should set
   *     (together with `sparkContext.setCheckpointDir` on durable
@@ -28,29 +33,50 @@ object Materialize {
 
   val ReliableConfKey = "spark.graft.checkpoint.reliable"
 
+  /** Storage level of every local checkpoint taken here. */
+  val Level: StorageLevel = StorageLevel.MEMORY_AND_DISK_SER
+
+  /** Whether the session asks for reliable checkpoints; checks that it
+    * can have them.
+    */
+  private def reliable(spark: SparkSession): Boolean = {
+    val on = spark.conf.getOption(ReliableConfKey).exists(_.trim.toBoolean)
+    if (on) {
+      require(spark.sparkContext.getCheckpointDir.isDefined,
+        s"$ReliableConfKey=true needs sparkContext.setCheckpointDir " +
+          "(durable storage on a real cluster)")
+      // reliable checkpoint FILES are only reclaimed by the
+      // ContextCleaner when cleanCheckpoints is on — without it every
+      // checkpoint leaks durable storage for the app lifetime
+      if (!spark.sparkContext.getConf.getBoolean(
+          "spark.cleaner.referenceTracking.cleanCheckpoints", false))
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"$ReliableConfKey=true without " +
+            "spark.cleaner.referenceTracking.cleanCheckpoints=true: " +
+            "checkpoint files will accumulate for the app lifetime")
+    }
+    on
+  }
+
   /** Eagerly materialize `out`, then release `internal` caches. */
   def releasing(out: DataFrame, internal: Seq[Dataset[_]]): DataFrame = {
-    val spark = out.sparkSession
-    val reliable =
-      spark.conf.getOption(ReliableConfKey).exists(_.trim.toBoolean)
     val mat =
-      if (reliable) {
-        require(spark.sparkContext.getCheckpointDir.isDefined,
-          s"$ReliableConfKey=true needs sparkContext.setCheckpointDir " +
-            "(durable storage on a real cluster)")
-        // reliable checkpoint FILES are only reclaimed by the
-        // ContextCleaner when cleanCheckpoints is on — without it every
-        // releasing() call leaks durable storage for the app lifetime
-        if (!spark.sparkContext.getConf.getBoolean(
-            "spark.cleaner.referenceTracking.cleanCheckpoints", false))
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"$ReliableConfKey=true without " +
-              "spark.cleaner.referenceTracking.cleanCheckpoints=true: " +
-              "checkpoint files will accumulate for the app lifetime")
-        out.checkpoint(eager = true)
-      } else out.localCheckpoint(eager = true)
+      if (reliable(out.sparkSession)) out.checkpoint(eager = true)
+      else out.localCheckpoint(eager = true, Level)
     internal.foreach(_.unpersist(blocking = false))
     mat
+  }
+
+  /** Marks `rdd` to be checkpointed, in the session's mode, by the first
+    * job that computes it: its partitions are stored at [[Level]] as that
+    * job runs, and its lineage is cut when the job ends. The lazy sibling
+    * of [[releasing]], for a builder whose first read of its rows is a
+    * job it runs anyway. Returns `rdd`.
+    */
+  def onFirstJob[T](spark: SparkSession, rdd: RDD[T]): RDD[T] = {
+    rdd.persist(Level)
+    if (reliable(spark)) rdd.checkpoint() else rdd.localCheckpoint()
+    rdd
   }
 
   /** Collect `out` to the driver and return it as a LOCAL relation,
@@ -71,15 +97,6 @@ object Materialize {
     spark.createDataFrame(
       java.util.Arrays.asList(rows: _*), out.schema)
   }
-
-  /** True when the frame is backed by a driver-local relation (no
-    * distributed lineage to cache or release).
-    */
-  def isLocal(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.collectLeaves().forall {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
-      case _ => false
-    }
 
   /** Explicitly release the storage blocks behind a frame previously
     * returned by [[releasing]] (a local/reliable checkpoint). Iterative

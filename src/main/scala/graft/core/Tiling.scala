@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Planar grid tiling index. Replaces the reference's reliance on PostGIS
@@ -36,6 +36,27 @@ object Tiling {
   def cellIdCol(x: Column, y: Column, cellSize: Double): Column =
     (floor(x / cellSize).cast("long") + Off) * Mul +
       (floor(y / cellSize).cast("long") + Off)
+
+  /** `(gid long, x, y)` with every row checked: a null gid, or a null,
+    * NaN or infinite x/y, fails the query with a message that starts with
+    * `what` (the operator reading the points) and names the gid. The
+    * check wraps x and y themselves so it runs before the cell id
+    * arithmetic; without it a raw read takes null as 0.0, and NaN falls
+    * in no cell.
+    */
+  def checkedPoints(points: DataFrame, what: String): DataFrame = {
+    val gid = col("gid").cast("long")
+    def bad(c: Column): Column = c.isNull || isnan(c) || abs(c) === Double.PositiveInfinity
+    val fail = raise_error(concat(lit(s"$what input gid "), shown(gid), lit(" has x="),
+      shown(col("x")), lit(", y="), shown(col("y")),
+      lit("; gid must be non-null and x, y finite")))
+    val badRow = gid.isNull || bad(col("x")) || bad(col("y"))
+    points.select(gid.as("gid"), when(badRow, fail).otherwise(col("x")).as("x"),
+      when(badRow, fail).otherwise(col("y")).as("y"))
+  }
+
+  /** A value as an error message shows it: null as "null". */
+  def shown(c: Column): Column = coalesce(c.cast("string"), lit("null"))
 
   /** All cells of the Chebyshev-radius-`r` block around a cell. */
   def block(cell: Long, r: Int): Array[Long] = {

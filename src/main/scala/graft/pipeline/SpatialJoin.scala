@@ -1,15 +1,20 @@
 package graft.pipeline
 
 import graft.core.{GPolygon, Tiling, Wkb}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
 
 /** Point-in-polygon spatial join (SURVEY §7, BASELINE.json north rule).
   *
   * Two physical strategies, chosen by polygon-side size:
-  *   - broadcast: polygons are collected into a cell→polygon hash index
-  *     and broadcast; points stream through `mapPartitions` — zero
-  *     shuffle. The right plan for admin-boundary-sized layers.
+  *   - broadcast: one bounded collect brings the polygons to the driver,
+  *     which lays them out as flat primitive arrays (sorted cell ids with
+  *     offsets into the candidate polygons, polygon vertices end to end)
+  *     and broadcasts them; points stream through a stateless `flatMap`
+  *     — zero shuffle. The right plan for admin-boundary-sized layers.
   *   - partitioned: polygons explode to their bbox-overlapping cells,
   *     points carry their single cell, equi-join on cell, then exact
   *     ray-crossing refine. Shuffle is keyed by cell; dense cells are
@@ -23,6 +28,9 @@ import org.apache.spark.sql.functions._
   * Matching the reference's semantics means edge-exact behavior is
   * undefined on boundaries (same as PostGIS GIST + ST_Contains refine
   * usage in `postgeoda/notes.md:174-200` — the candidate/refine split).
+  *
+  * Input: a null gid, a null, NaN or infinite x/y, or a null pid fails
+  * the join on either path, naming the gid (`Tiling.checkedPoints`).
   */
 object SpatialJoin {
 
@@ -32,12 +40,16 @@ object SpatialJoin {
 
   /** points(gid,x,y) × polys(pid, geom WKB) → (gid, pid).
     *
-    * The broadcast/partitioned choice is BYTE-based: one cheap agg sums
-    * the polygon WKB sizes, and broadcast is taken only while the layer
-    * (plus the decoded-index overhead factor) fits a driver/executor-safe
-    * budget — a 2M-multiring layer is GBs and must NOT collect, while 2M
-    * tiny boxes may be fine. Default budget 256 MB ≈ Spark's own
-    * autoBroadcastJoinThreshold philosophy scaled to a hash index.
+    * The broadcast/partitioned choice is BYTE-based: broadcast is taken
+    * only while the layer's WKB (times 3, the decoded index's overhead)
+    * fits a driver/executor-safe budget — a 2M-multiring layer is GBs
+    * and must NOT collect, while 2M tiny boxes may be fine. Default
+    * budget 256 MB ≈ Spark's own autoBroadcastJoinThreshold philosophy
+    * scaled to a hash index. One collect both measures and fetches the
+    * layer: each partition returns its rows while they fit its share of
+    * the budget, else only its byte count, so the driver never holds
+    * more than the budget. A layer that overflows some share but fits
+    * in total is fetched whole by a second job.
     */
   def pip(points: DataFrame, polys: DataFrame, cellSize: Double,
           broadcastLimitBytes: Long = DefaultBroadcastLimit,
@@ -45,44 +57,31 @@ object SpatialJoin {
     require(nSalt >= 1, s"nSalt must be >= 1, got $nSalt")
     val spark = points.sparkSession
     import spark.implicits._
-    val sz = polys.agg(
-      coalesce(sum(octet_length(col("geom"))), lit(0L)).cast("long"),
-      count(lit(1))).head()
-    val wkbBytes = sz.getLong(0)
+    val checked = Tiling.checkedPoints(points, "PIP")
+    val pid = col("pid").cast("long")
+    val layer = polys.select(
+      when(pid.isNull, raise_error(lit("PIP polygon layer has a null pid")))
+        .otherwise(pid).as("pid"), col("geom"))
     // decoded index ≈ WKB coords as doubles + per-cell fanout overhead 3x
-    if (wkbBytes * 3 <= broadcastLimitBytes) {
-      // broadcast cell index of decoded polygons
-      val collected = polys.select(col("pid").cast("long"), col("geom"))
-        .as[(Long, Array[Byte])].collect()
-      val index = new scala.collection.mutable.HashMap[Long,
-        scala.collection.mutable.ArrayBuffer[(Long, GPolygon)]]()
-      collected.foreach { case (pid, wkb) =>
-        Wkb.read(wkb) match {
-          case Some(p: GPolygon) =>
-            val (mnx, mny, mxx, mxy) = p.bbox
-            Tiling.bboxCells(mnx, mny, mxx, mxy, cellSize).foreach { c =>
-              index.getOrElseUpdate(c,
-                scala.collection.mutable.ArrayBuffer.empty) += ((pid, p))
-            }
-          case _ =>
-        }
-      }
-      val bIndex = spark.sparkContext.broadcast(
-        index.map { case (k, v) => (k, v.toArray) }.toMap)
-      points.select(col("gid").cast("long"), col("x"), col("y"))
-        .as[(Long, Double, Double)]
-        .flatMap { case (gid, x, y) =>
-          val cell = Tiling.cellId(x, y, cellSize)
-          bIndex.value.get(cell) match {
-            case Some(cands) =>
-              cands.iterator.filter(_._2.contains(x, y)).map(c => (gid, c._1))
-            case None => Iterator.empty
-          }
-        }.toDF("gid", "pid")
+    val budget = broadcastLimitBytes / 3
+    val rows = org.apache.spark.sql.graftshim.ColumnShim.toInternalRdd(layer)
+    val first = slices(rows, budget / math.max(1, rows.getNumPartitions))
+    val total = first.map(_.bytes).sum
+    if (total <= budget) {
+      val fetched = if (first.forall(_.pids != null)) first else slices(rows, budget)
+      // points stream through a stateless flatMap (a streaming frame of
+      // points joins too): no shuffle
+      val bIndex = spark.sparkContext.broadcast(PolyIndex(fetched, cellSize))
+      checked.as[(Long, Double, Double)].flatMap { case (gid, x, y) =>
+        val ix = bIndex.value
+        val j = java.util.Arrays.binarySearch(ix.cells, Tiling.cellId(x, y, cellSize))
+        if (j < 0) Iterator.empty
+        else Iterator.range(ix.offs(j), ix.offs(j + 1)).map(ix.cands(_))
+          .filter(ix.contains(_, x, y)).map(q => (gid, ix.pids(q)))
+      }.toDF("gid", "pid")
     } else {
       // partitioned: explode polygons to cells, equi-join, exact refine
-      val polyCells0 = polys.select(col("pid").cast("long"), col("geom"))
-        .as[(Long, Array[Byte])]
+      val polyCells0 = layer.as[(Long, Array[Byte])]
         .flatMap { case (pid, wkb) =>
           Wkb.read(wkb) match {
             case Some(p: GPolygon) =>
@@ -101,7 +100,7 @@ object SpatialJoin {
         if (nSalt == 1) polyCells0
         else polyCells0.withColumn("psalt",
           explode(sequence(lit(0), lit(nSalt - 1))))
-      val pts0 = points
+      val pts0 = checked
         .withColumn("cell", Tiling.cellIdCol(col("x"), col("y"), cellSize))
       val pts =
         if (nSalt == 1) pts0
@@ -128,6 +127,90 @@ object SpatialJoin {
             else Iterator.empty
           }
         }.toDF("gid", "pid")
+    }
+  }
+
+  /** One partition of the polygon layer: its pids and WKBs (null for a
+    * null geometry) in row order, or null for both when its `bytes` of
+    * WKB exceed the share it was read with.
+    */
+  private final case class Slice(bytes: Long, pids: Array[Long], wkbs: Array[Array[Byte]])
+
+  /** One job over the layer's `(pid, geom)` rows: a [[Slice]] per
+    * partition, which keeps at most `share` bytes of WKB.
+    */
+  private def slices(rows: RDD[InternalRow], share: Long): Array[Slice] =
+    rows.mapPartitions { it =>
+      val pids = new ArrayBuilder.ofLong
+      val wkbs = ArrayBuffer.empty[Array[Byte]]
+      var bytes = 0L
+      it.foreach { row =>
+        val wkb = if (row.isNullAt(1)) null else row.getBinary(1)
+        if (wkb != null) bytes += wkb.length
+        if (bytes <= share) { pids += row.getLong(0); wkbs += wkb }
+      }
+      Iterator.single(
+        if (bytes <= share) Slice(bytes, pids.result(), wkbs.toArray)
+        else Slice(bytes, null, null))
+    }.collect()
+
+  /** The broadcast cell index: `cells` sorted, cell `cells(j)`'s
+    * candidate polygons at `cands(offs(j))` until `cands(offs(j + 1))` in
+    * layer order; polygon q is `pids(q)`, its rings `rings(q)` until
+    * `rings(q + 1)` of `starts`, vertices stored end to end in xs/ys.
+    */
+  private final case class PolyIndex(cells: Array[Long], offs: Array[Int], cands: Array[Int],
+                                     pids: Array[Long], rings: Array[Int], starts: Array[Int],
+                                     xs: Array[Double], ys: Array[Double]) {
+    def contains(q: Int, x: Double, y: Double): Boolean =
+      GPolygon.evenOdd(starts, rings(q), rings(q + 1), xs, ys, x, y)
+  }
+
+  private object PolyIndex {
+    /** Decodes the polygons of `fetched` in order (anything else is
+      * skipped) and indexes each under every cell its bbox overlaps.
+      */
+    def apply(fetched: Array[Slice], cellSize: Double): PolyIndex = {
+      val pids = new ArrayBuilder.ofLong
+      val rings = new ArrayBuilder.ofInt
+      val starts = new ArrayBuilder.ofInt
+      val xs = new ArrayBuilder.ofDouble
+      val ys = new ArrayBuilder.ofDouble
+      val hitCells = new ArrayBuilder.ofLong // (cell, polygon) pairs in layer order
+      val hitPolys = new ArrayBuilder.ofInt
+      var nPolys = 0; var nRings = 0; var nVerts = 0
+      rings += 0
+      fetched.foreach { sl =>
+        var i = 0
+        while (i < sl.pids.length) {
+          Wkb.read(sl.wkbs(i)) match {
+            case Some(p: GPolygon) =>
+              pids += sl.pids(i)
+              p.partStarts.foreach(s => starts += nVerts + s)
+              nRings += p.partStarts.length
+              rings += nRings
+              xs ++= p.xs; ys ++= p.ys
+              nVerts += p.xs.length
+              val (mnx, mny, mxx, mxy) = p.bbox
+              Tiling.bboxCells(mnx, mny, mxx, mxy, cellSize).foreach { c =>
+                hitCells += c; hitPolys += nPolys
+              }
+              nPolys += 1
+            case _ =>
+          }
+          i += 1
+        }
+      }
+      // a stable sort of the pairs by cell keeps each cell's polygons in
+      // layer order
+      val hc = hitCells.result(); val hp = hitPolys.result()
+      val order = hc.indices.sortBy(hc(_)).toArray
+      val runs = order.indices.filter(e => e == 0 || hc(order(e)) != hc(order(e - 1))).toArray
+      val cells = runs.map(e => hc(order(e)))
+      val offs = runs :+ order.length
+      val cands = order.map(hp(_))
+      PolyIndex(cells, offs, cands, pids.result(), rings.result(), starts.result(),
+        xs.result(), ys.result())
     }
   }
 }

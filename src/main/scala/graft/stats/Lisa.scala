@@ -17,9 +17,14 @@ import org.apache.spark.sql.types._
   * bit-identical under any partitioning because each row's permutation
   * stream depends only on (seed, idx).
   *
-  * Broadcast mode holds 16 bytes/row (gid + z) — fine to ~100M rows.
-  * Beyond that the engine switches to per-tile windows ([[TileLisa]],
-  * whose doc names the two deliberate differences between the modes).
+  * Broadcast mode holds 16 bytes/row (gid + z) on the driver and on
+  * every executor — fine to ~100M rows. Nothing here switches mode by
+  * size: a larger table calls per-tile windows ([[TileLisa]]) itself,
+  * whose doc names the two deliberate differences between the modes.
+  *
+  * Driver reads: one job gathers the values (and, in 'lookup' mode, the
+  * longest neighbor list, from the same collect); one more runs the
+  * kernel into a serialized checkpoint (`Materialize.releasing`).
   */
 object Lisa {
 
@@ -48,7 +53,7 @@ object Lisa {
     * `(gid, value)` table. Deterministic: gid-sorted order.
     */
   def gather(values: DataFrame): (Array[Long], Array[Double]) = {
-    val (gids, mat) = LisaEngine.gather(LisaEngine.univariate(values))
+    val (gids, mat, _) = LisaEngine.gather(LisaEngine.univariate(values))
     (gids, mat.headOption.getOrElse(Array.emptyDoubleArray))
   }
 
@@ -59,21 +64,16 @@ object Lisa {
   private def run(stat: TileLisa.Stat, values: DataFrame, weights: DataFrame,
                   conf: Conf): DataFrame = {
     val spark = weights.sparkSession
-    val (gids, mat) = LisaEngine.gather(values)
+    // 'lookup' sizes its shared draw table by the GLOBAL max neighbor
+    // count (`LisaEngine.scratch`): the gather's job reads it too
+    val (gids, mat, maxK) = LisaEngine.gather(values,
+      if (conf.permMethod == "lookup") Some(weights) else None)
     // an empty value table has no window to prepare; every weights row
     // then fails its gid lookup, and no weights rows give no output
     val kernel =
       if (gids.isEmpty) null else LisaEngine.prepare(stat, gids, mat, conf)
     val bGids = spark.sparkContext.broadcast(gids)
     val numObs = gids.length
-    // 'lookup' sizes its shared draw table by the GLOBAL max neighbor
-    // count (`LisaEngine.scratch`): one cheap agg precomputes it
-    val maxK: Int =
-      if (conf.permMethod != "lookup") 0
-      else {
-        val mk = weights.agg(max(size(col("nbrs")))).head()
-        if (mk.isNullAt(0)) 0 else mk.getInt(0)
-      }
     // raw InternalRow pass (as in the kNN group stage): neighbor arrays
     // read straight out of UnsafeRows into primitive buffers — no boxed
     // Seq[Long] per row on the permutation hot path

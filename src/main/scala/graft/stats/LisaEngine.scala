@@ -1,6 +1,7 @@
 package graft.stats
 
 import graft.core.Stat0
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
@@ -64,19 +65,35 @@ private[stats] object LisaEngine {
     * rows into primitive arrays on the executor (no driver-side Row
     * boxing), and the driver makes them the one whole-table window with
     * one primitive sort by gid — ~10x faster than orderBy().collect() for
-    * broadcast-vector builds.
+    * broadcast-vector builds. Given `weights` rows `(.., nbrs, ..)`, the
+    * same job (one collect over both) also returns the longest neighbor
+    * list's length, else 0.
     */
-  def gather(values: DataFrame): (Array[Long], Array[Array[Double]]) = {
+  def gather(values: DataFrame, weights: Option[DataFrame] = None)
+      : (Array[Long], Array[Array[Double]], Int) = {
+    import org.apache.spark.sql.graftshim.ColumnShim
     val src = values.select(col("gid").cast("long"),
       col("vals").cast("array<double>"))
-    val parts = org.apache.spark.sql.graftshim.ColumnShim.toInternalRdd(src)
+    val rows: RDD[Either[Rows, Int]] = ColumnShim.toInternalRdd(src)
       .mapPartitions { it =>
         val b = new RowsBuilder
         it.foreach(b.add(_, 0))
-        Iterator.single(b.result())
-      }.collect()
-    window(Rows(parts.flatMap(_.gids), parts.flatMap(_.widths),
-      parts.flatMap(_.flat)))
+        Iterator.single(Left(b.result()))
+      }
+    val degrees = weights.map(w => ColumnShim.toInternalRdd(w.select(col("nbrs")))
+      .mapPartitions { it =>
+        var most = 0
+        it.foreach(r => if (!r.isNullAt(0)) most = math.max(most, r.getArray(0).numElements()))
+        Iterator.single(Right(most): Either[Rows, Int])
+      })
+    // a task per partition of the wider input: the job is no wider than
+    // the kernel pass over the weights
+    val parts = degrees.fold(rows)(d => rows.union(d)
+      .coalesce(math.max(1, math.max(rows.getNumPartitions, d.getNumPartitions)))).collect()
+    val packed = parts.collect { case Left(r) => r }
+    val (gids, mat) = window(Rows(packed.flatMap(_.gids), packed.flatMap(_.widths),
+      packed.flatMap(_.flat)))
+    (gids, mat, parts.collect { case Right(d) => d }.foldLeft(0)(math.max))
   }
 
   /** A window's gids in ascending order and its column-major value matrix

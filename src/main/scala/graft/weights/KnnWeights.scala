@@ -1,7 +1,11 @@
 package graft.weights
 
 import graft.core.{Dist, Parallelism, Tiling}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -102,15 +106,39 @@ object KnnWeights {
     * area rule that shrinks to a sliver of the 1e-9 floor.
     */
   def autoCellSize(points: DataFrame, k: Int): Double = {
-    val row = points.agg(min("x"), max("x"), min("y"), max("y"),
-      count(lit(1))).head()
-    val n = row.getLong(4)
+    // one fold over the rows: a global agg().head() runs two jobs under AQE
+    val e = org.apache.spark.sql.graftshim.ColumnShim
+      .toInternalRdd(points.select(col("x").cast("double"), col("y").cast("double")))
+      .mapPartitions { it =>
+        val p = Extent.empty
+        it.foreach { r =>
+          if (!r.isNullAt(0)) {
+            val x = r.getDouble(0); p.minX = math.min(p.minX, x); p.maxX = math.max(p.maxX, x)
+          }
+          if (!r.isNullAt(1)) {
+            val y = r.getDouble(1); p.minY = math.min(p.minY, y); p.maxY = math.max(p.maxY, y)
+          }
+          p.n += 1
+        }
+        Iterator.single(p)
+      }.fold(Extent.empty)(_ merge _)
     // an empty frame has no extent: any positive cell size is exact
-    if (n == 0L) return 1.0
-    val w = math.max(row.getDouble(1) - row.getDouble(0), 1e-9)
-    val h = math.max(row.getDouble(3) - row.getDouble(2), 1e-9)
-    val perPoint = math.max(1, k).toDouble / n
+    if (e.n == 0L) return 1.0
+    val w = math.max(e.maxX - e.minX, 1e-9)
+    val h = math.max(e.maxY - e.minY, 1e-9)
+    val perPoint = math.max(1, k).toDouble / e.n
     math.max(math.max(math.sqrt(w * h * perPoint), math.max(w, h) * perPoint), 1e-9)
+  }
+
+  /** Bounds of the non-null x and y values and the row count. */
+  private final class Extent(var minX: Double, var maxX: Double, var minY: Double,
+                             var maxY: Double, var n: Long) extends Serializable {
+    def merge(o: Extent): Extent = new Extent(math.min(minX, o.minX), math.max(maxX, o.maxX),
+      math.min(minY, o.minY), math.max(maxY, o.maxY), n + o.n)
+  }
+  private object Extent {
+    def empty: Extent = new Extent(Double.PositiveInfinity, Double.NegativeInfinity,
+      Double.PositiveInfinity, Double.NegativeInfinity, 0L)
   }
 
   /** Distance under `m` from point a to point b, given their grid
@@ -173,35 +201,16 @@ object KnnWeights {
     } else if (2 * scanned <= MaxRing) 2 * scanned
     else AllPoints
 
-  private def shown(c: Column): Column = coalesce(c.cast("string"), lit("null"))
-
-  /** `(gid long, x, y)` with every row checked: a null gid, or a null,
-    * NaN or infinite x/y, fails the build with a message naming the gid.
-    * The check wraps x and y themselves so it runs before the cell id
-    * arithmetic; without it a raw read takes null as 0.0, and NaN has no
-    * place in the (dist, gid) order.
-    */
-  private def checkedPoints(points: DataFrame): DataFrame = {
-    val gid = col("gid").cast("long")
-    def bad(c: Column): Column = c.isNull || isnan(c) || abs(c) === Double.PositiveInfinity
-    val fail = raise_error(concat(lit("kNN input gid "), shown(gid), lit(" has x="),
-      shown(col("x")), lit(", y="), shown(col("y")),
-      lit("; gid must be non-null and x, y finite")))
-    val badRow = gid.isNull || bad(col("x")) || bad(col("y"))
-    points.select(gid.as("gid"), when(badRow, fail).otherwise(col("x")).as("x"),
-      when(badRow, fail).otherwise(col("y")).as("y"))
-  }
-
   /** The attribute vector `v` (array<double>) of row `gid`, checked by
-    * [[checkedPoints]]' rule: a null gid, a null vector, a null, NaN or
+    * `Tiling.checkedPoints`' rule: a null gid, a null vector, a null, NaN or
     * infinite value, or a length other than `dims` fails with a message
     * naming the gid.
     */
   private[graft] def checkedVector(gid: Column, v: Column, dims: Int): Column = {
     val badRow = gid.isNull || v.isNull || size(v) =!= dims ||
       exists(v, e => e.isNull || isnan(e) || abs(e) === Double.PositiveInfinity)
-    when(badRow, raise_error(concat(lit("kNN input gid "), shown(gid), lit(" has values "),
-      shown(v), lit(s"; gid must be non-null and the vector hold $dims finite values"))))
+    when(badRow, raise_error(concat(lit("kNN input gid "), Tiling.shown(gid), lit(" has values "),
+      Tiling.shown(v), lit(s"; gid must be non-null and the vector hold $dims finite values"))))
       .otherwise(v)
   }
 
@@ -260,7 +269,7 @@ object KnnWeights {
     */
   def knnRows(points: DataFrame, conf: Conf,
               homeFilter: Option[Column] = None): DataFrame =
-    engine(checkedPoints(points), conf.k,
+    engine(Tiling.checkedPoints(points, "kNN"), conf.k,
       Metric(if (conf.isArc) Metric.Arc else Metric.Planar, 0, conf.isMile),
       conf.cellSize, homeFilter)
 
@@ -314,9 +323,6 @@ object KnnWeights {
     // home point. Fields read straight out of UnsafeRows into primitive
     // buffers — zero boxing for the 9N shipped rows, which keeps the hot
     // stage allocation-free (only the 2M output rows allocate).
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-    import org.apache.spark.sql.catalyst.util.ArrayData
     val rowSchema = StructType(Seq(
       StructField("gid", LongType, nullable = false),
       StructField("x", DoubleType, nullable = false),
@@ -329,9 +335,12 @@ object KnnWeights {
     val outSchema =
       if (m.vector) ringSchema.add("v", ArrayType(DoubleType, containsNull = false))
       else ringSchema
-    val outRdd = org.apache.spark.sql.graftshim.ColumnShim
+    // round 1's rows are stored serialized and checkpointed by the first
+    // straggler fetch, the first job that reads them (Materialize)
+    val round1 = graft.core.Materialize.onFirstJob(spark, org.apache.spark.sql.graftshim.ColumnShim
       .toInternalRdd(shippedDf)
       .mapPartitions { it =>
+        val unsafe = UnsafeProjection.create(outSchema)
         new Iterator[InternalRow] {
           private var gBuf = new Array[Long](256)
           private var xBuf = new Array[Double](256)
@@ -400,46 +409,55 @@ object KnnWeights {
             val ring = nextRing(m, k, s, 1, heap.size, heap.kth, y)
             val fields = Array[Any](gid, x, y,
               ArrayData.toArrayData(nbrs), ArrayData.toArrayData(dists), ring)
-            new GenericInternalRow(if (stride == 0) fields else fields :+
-              ArrayData.toArrayData(java.util.Arrays.copyOfRange(vBuf, i0 * stride, (i0 + 1) * stride)))
+            unsafe(new GenericInternalRow(if (stride == 0) fields else fields :+
+              ArrayData.toArrayData(java.util.Arrays.copyOfRange(vBuf, i0 * stride, (i0 + 1) * stride))))
+              .copy() // a stored row must not share the projection's buffer
           }
         }
-      }
-    val round1 = org.apache.spark.sql.graftshim.ColumnShim
-      .internalDf(spark, outRdd, outSchema).cache()
-    val parts = complete(round1.filter(col("ring") > 0)
-        .select(Seq(col("gid"), col("x"), col("y"), col("ring")) ++ vcol: _*),
-      checked, k, m, s, rowSchema)
-    val done = (round1.filter(col("ring") === 0).select("gid", "x", "y", "nbrs", "dists") +:
-      parts).reduce(_ unionByName _)
-    // Materialize once (one pass over the already-cached round1), then
-    // release it — see graft.core.Materialize for the rationale and the
-    // reliable-checkpoint cluster mode.
-    val out = graft.core.Materialize.releasing(done, Seq(round1))
-    parts.foreach(graft.core.Materialize.release)
-    out
+      })
+    val parts = complete(round1, checked, k, m, s, rowSchema)
+    // certified rows read the checkpoint; stragglers' rows are one
+    // partition per batch, so the frame has width + 1 partitions
+    (org.apache.spark.sql.graftshim.ColumnShim.internalDf(spark, round1, outSchema)
+      .filter(col("ring") === 0).select("gid", "x", "y", "nbrs", "dists") +: parts)
+      .reduce(_ unionByName _)
   }
 
-  /** Finishes round 1's stragglers `(gid, x, y, ring[, v])` by completion
-    * passes over the `checked` points; returns their rows as frames of
-    * `schema`. Stragglers come to the driver in gid order, at most
-    * `batch` at a time (the most one pass could take); the first fetch
-    * also fills round 1's cache. Each pass takes a gid-order prefix of
-    * the pending ones within [[MaxPassEntries]] and sends back those it
-    * could not finish with their next ring. A batch's rows stay a
-    * driver-local relation only when no batch follows; otherwise they
-    * are checkpointed off the driver, so it never holds more than one
-    * batch of rows.
+  /** Finishes the stragglers among round 1's rows `(gid, x, y, nbrs,
+    * dists, ring[, v])` by completion passes over the `checked` points;
+    * returns their rows as frames of `schema`. Stragglers come to the
+    * driver in gid order, at most `batch` at a time (the most one pass
+    * could take): each partition sends its lowest `batch + 1` by gid,
+    * the bound an `orderBy.limit` has. The first fetch also fills round
+    * 1's cache: it is the first job over those rows. Each pass takes a
+    * gid-order prefix of the pending ones within [[MaxPassEntries]] and
+    * sends back those it could not finish with their next ring. A
+    * batch's rows stay a driver-local relation only when no batch
+    * follows; otherwise they are checkpointed off the driver, so it never
+    * holds more than one batch of rows.
     */
-  private def complete(stragglers: DataFrame, checked: DataFrame, k: Int, m: Metric,
+  private def complete(round1: RDD[InternalRow], checked: DataFrame, k: Int, m: Metric,
                        s: Double, schema: StructType): Seq[DataFrame] = {
-    val spark = stragglers.sparkSession
+    val spark = checked.sparkSession
     val batch = math.max(1, MaxPassEntries / (k + 1))
-    def fetch(after: Option[Long]): Array[Straggler] =
-      after.fold(stragglers)(g => stragglers.filter(col("gid") > g))
-        .orderBy("gid").limit(batch + 1).collect()
-        .map(r => Straggler(r.getLong(0), r.getDouble(1), r.getDouble(2), r.getInt(3),
-          if (m.vector) r.getSeq[Double](4).toArray else Array.emptyDoubleArray))
+    val stride = m.dims
+    def fetch(after: Option[Long]): Array[Straggler] = {
+      val from = after.getOrElse(Long.MinValue); val all = after.isEmpty
+      round1.mapPartitions { it =>
+        // max-heap by gid: the partition's lowest batch + 1 stay
+        val low = new java.util.PriorityQueue[Straggler](
+          (a: Straggler, b: Straggler) => java.lang.Long.compare(b.gid, a.gid))
+        it.foreach { r =>
+          val g = r.getLong(0); val ring = r.getInt(5)
+          if (ring > 0 && (all || g > from) && (low.size <= batch || g < low.peek.gid)) {
+            low.add(Straggler(g, r.getDouble(1), r.getDouble(2), ring,
+              if (stride > 0) r.getArray(6).toDoubleArray() else Array.emptyDoubleArray))
+            if (low.size > batch + 1) low.poll()
+          }
+        }
+        Iterator.single(low.toArray(Array.empty[Straggler]))
+      }.collect().flatten.sortBy(_.gid).take(batch + 1)
+    }
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var fetched = fetch(None)
     while (fetched.nonEmpty) {

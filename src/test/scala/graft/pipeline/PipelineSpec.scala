@@ -909,6 +909,83 @@ class PipelineSpec extends AnyFunSuite {
     assert(salted.as[(Long, Long)].collect().toSet == bcast && bcast.nonEmpty)
   }
 
+  test("pip: a bad point or a null pid fails either path with one message") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("gid", LongType), StructField("x", DoubleType),
+      StructField("y", DoubleType)))
+    val good = (1 to 30).map(i => Row(i.toLong, (i % 6).toDouble, (i / 6).toDouble))
+    val square = graft.core.Wkb.writePolygon(
+      Array((0.0, 0.0), (8.0, 0.0), (8.0, 8.0), (0.0, 8.0)))
+    val polys = spark.createDataFrame(java.util.Arrays.asList(Row(1L, square)),
+      StructType(Seq(StructField("pid", LongType), StructField("geom", BinaryType))))
+    def fails(pts: Seq[Row], layer: org.apache.spark.sql.DataFrame, limit: Long): String = {
+      val df = spark.createDataFrame(java.util.Arrays.asList(pts: _*), schema)
+      val e = intercept[Exception](SpatialJoin.pip(df, layer, 1.0, limit).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    }
+    // byte budget 0 → the partitioned path
+    for (limit <- Seq(SpatialJoin.DefaultBroadcastLimit, 0L)) {
+      assert(fails(good :+ Row(77L, null, 1.0), polys, limit).contains("PIP input gid 77"),
+        s"null x, limit $limit")
+      assert(fails(good :+ Row(78L, Double.NaN, 1.0), polys, limit).contains("gid 78"),
+        s"NaN x, limit $limit")
+      assert(fails(good :+ Row(79L, 1.0, Double.NegativeInfinity), polys, limit)
+        .contains("gid 79"), s"infinite y, limit $limit")
+      assert(fails(good :+ Row(null, 1.0, 1.0), polys, limit).contains("gid null"),
+        s"null gid, limit $limit")
+      val nullPid = spark.createDataFrame(java.util.Arrays.asList(Row(1L, square),
+        Row(null, square)), polys.schema)
+      assert(fails(good, nullPid, limit).contains("null pid"), s"null pid, limit $limit")
+    }
+  }
+
+  test("pip: either path is planned by one job") {
+    import org.apache.spark.graftshim.BusShim
+    val pts = SynthGeo.customerPoints(spark, dir)
+    val polys = SynthGeo.partPolygons(spark, dir).withColumnRenamed("gid", "pid")
+    // one bounded collect both sizes and fetches the layer (broadcast
+    // path) or finds it over budget (partitioned path, byte budget 0)
+    for ((limit, path) <- Seq(SpatialJoin.DefaultBroadcastLimit -> "broadcast",
+        0L -> "partitioned")) {
+      val (joined, ran) = BusShim.counted(spark.sparkContext, s"pip-$path")(
+        SpatialJoin.pip(pts, polys, SynthGeo.CellW, limit))
+      assert(ran.jobs == 1, s"$path PIP ran ${ran.jobs} jobs before its first action")
+      assert(joined.count() > 0)
+    }
+  }
+
+  test("pip: a layer over one partition's share of the budget but within it in total " +
+      "takes a second job and the broadcast path") {
+    import org.apache.spark.graftshim.BusShim
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val ring = (0 until 64).map { i =>
+      val a = 2 * math.Pi * i / 64
+      (10.0 + 9.0 * math.cos(a), 10.0 + 9.0 * math.sin(a))
+    }.toArray
+    val big = graft.core.Wkb.writePolygon(ring)
+    val small = graft.core.Wkb.writePolygon(
+      Array((20.0, 0.0), (30.0, 0.0), (30.0, 10.0), (20.0, 10.0)))
+    // two partitions: the 64-gon's bytes are over half the layer's
+    val layer = spark.createDataFrame(spark.sparkContext.parallelize(
+        Seq(Row(1L, big), Row(2L, small)), 2),
+      StructType(Seq(StructField("pid", LongType), StructField("geom", BinaryType))))
+    val total = (big.length + small.length).toLong
+    val pts = (0 until 300).map(i => (i.toLong, (i % 30) + 0.5, (i / 30) + 0.5))
+      .toDF("gid", "x", "y")
+    val want = SpatialJoin.pip(pts, layer, 1.0).as[(Long, Long)].collect().toSet
+    assert(want.map(_._2) == Set(1L, 2L))
+    for ((limit, jobs) <- Seq(3 * total -> 2, 3 * total - 1 -> 1)) {
+      val (joined, ran) = BusShim.counted(spark.sparkContext, s"pip-share-$limit")(
+        SpatialJoin.pip(pts, layer, 1.0, limit))
+      assert(ran.jobs == jobs, s"PIP at limit $limit ran ${ran.jobs} jobs")
+      assert(joined.as[(Long, Long)].collect().toSet == want, s"limit $limit")
+    }
+  }
+
   test("breaks leave no cached DF behind (Idx scoped release)") {
     val vals = SynthGeo.customerValues(spark, dir)
     spark.sharedState.cacheManager.clearCache()

@@ -135,6 +135,25 @@ class LisaSpec extends AnyFunSuite {
     assert(diag.toSeq == Seq((1L, 20.0), (2L, 20.0), (3L, 20.0)))
   }
 
+  test("local Moran runs two jobs in either permutation mode, into a serialized checkpoint") {
+    import org.apache.spark.graftshim.BusShim
+    // one job gathers the values ('lookup' reads the longest neighbor
+    // list in the same collect), one runs the kernel into the checkpoint
+    val w = KnnWeights.build(points(200), KnnWeights.Conf(k = 4, cellSize = Some(4.0)))
+    val v = values(200)
+    for (mode <- Seq("lookup", "complete")) {
+      val (out, ran) = BusShim.counted(spark.sparkContext, s"moran-$mode")(
+        Lisa.localMoran(v, w, Lisa.Conf(permutations = 99, permMethod = mode)))
+      assert(ran.jobs == 2, s"$mode local Moran ran ${ran.jobs} jobs")
+      val levels = out.queryExecution.analyzed.collectLeaves().collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.getStorageLevel
+      }
+      assert(levels.nonEmpty && levels.forall(l => l.isValid && !l.deserialized),
+        s"$mode local Moran's checkpoint is stored as $levels")
+      assert(out.count() == 200)
+    }
+  }
+
   test("lookup permutation mode: same stats, agreeing significance calls") {
     import spark.implicits._
     val pts = points(200)

@@ -146,7 +146,7 @@ class KnnSpec extends AnyFunSuite {
     pts.takeRight(2).foreach(p => assert(kth(pts, p, 10) >= s, s"gid ${p._1} must straggle"))
     val (got, ran) = BusShim.counted(spark.sparkContext, "knn-job-count")(
       KnnWeights.build(df, KnnWeights.Conf(k = 10)))
-    assert(ran.jobs <= 6, s"kNN build ran ${ran.jobs} jobs")
+    assert(ran.jobs <= 4, s"kNN build ran ${ran.jobs} jobs")
     val want = brute(pts, 10)
     got.select("gid", "nbrs").as[(Long, Seq[Long])].collect()
       .foreach { case (g, n) => assert(n == want(g)._2, s"gid $g") }
