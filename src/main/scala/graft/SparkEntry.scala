@@ -433,11 +433,8 @@ object SparkEntry {
         col("p_partkey").cast("long").as("gid"),
         array(col("p_retailprice").cast("double"),
           col("p_size").cast("double")).as("vals"))
-      // distributedMst: edge dissimilarities computed + sorted in Spark,
-      // driver streams them (O(N) state) — bit-identical to the collect
-      // path (RegionalizeSpec), so the committed golden hash is unchanged
       graft.cluster.Regionalize.run(v, queenWeights(s, dir),
-        graft.cluster.Regionalize.Conf(k = 6, distributedMst = true))
+        graft.cluster.Regionalize.Conf(k = 6))
         .orderBy("gid")
     }),
     "q41_redcap_ward" -> ((s, dir) => {

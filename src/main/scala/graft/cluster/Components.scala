@@ -1,5 +1,6 @@
 package graft.cluster
 
+import graft.core.DriverBudget
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -23,10 +24,11 @@ import org.apache.spark.sql.functions._
   *
   * Hybrid finish: alternation rounds have fixed latency (4 node-keyed
   * shuffles + checkpoint + fingerprint), so once the shrinking edge set
-  * fits on the driver (`spark.graft.cc.driverFinishEdges`, default 10^6
-  * ≈ 16 MB collected) the remaining rounds are finished by an exact
-  * union-find — bit-identical labels, and the tail rounds stop paying
-  * cluster-sized latency for megabyte-sized data.
+  * fits the driver budget ([[graft.core.DriverBudget]]; at the default
+  * 256 MB and 192 bytes an edge, 1,398,101 edges) the remaining rounds
+  * are finished by an exact union-find — bit-identical labels, and the
+  * tail rounds stop paying cluster-sized latency for megabyte-sized
+  * data.
   *
   * Uses: resolving near-duplicate PAIRS (minhash / simhash / embedding
   * LSH output) into duplicate CLUSTERS with a canonical representative
@@ -37,59 +39,71 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
-  /** Exact finish for a small surviving edge set: union-find on the
-    * driver, returned as the SAME star-edge shape the alternation
-    * converges to — (component-min u, member v), v > u, deduped — so the
-    * downstream label fold is shared and the labels are bit-identical to
-    * a pure distributed run (both define component = min member id).
+  /** A surviving edge's cost on the driver, in bytes: its two ids as
+    * fetched (16), at most two node slots of the union-find (2 × 12), and
+    * at most one star row, boxed for the star frame and copied into its
+    * local relation (~150). Star rows are the non-minimal nodes, which a
+    * spanning forest of the edges has as many of as it has edges.
     */
-  /** @return (star frame, collected edge count, star edge count) — the
+  private[cluster] val EdgeBytes = 192L
+
+  /** The edges of `e` within the driver budget, else None. */
+  private def fetched(e: DataFrame, budget: Long): Option[Seq[DriverBudget.Pairs]] =
+    DriverBudget.fetch(e.select(col("u"), col("v")), budget)(
+        () => new DriverBudget.LongPairs(EdgeBytes, "CC edges")) match {
+      case DriverBudget.Held(parts, _) => Some(parts)
+      case _: DriverBudget.Over => None
+    }
+
+  /** Exact finish for a fetched edge set: union-find on the driver over
+    * primitive arrays, returned as the SAME star-edge shape the
+    * alternation converges to — (component-min u, member v), v > u,
+    * deduped — so the downstream label fold is shared and the labels are
+    * bit-identical to a pure distributed run (both define component = min
+    * member id).
+    *
+    * @return (star frame, fetched edge count, star edge count) — the
     *         counts are free on the driver and feed the convergence log
     */
-  private def driverFinish(e: DataFrame): (DataFrame, Int, Int) = {
-    val spark = e.sparkSession
+  private def driverFinish(spark: org.apache.spark.sql.SparkSession,
+      parts: Seq[DriverBudget.Pairs]): (DataFrame, Int, Int) = {
     import spark.implicits._
-    // typed collect (Tuple2 encoder), not Row collect: at the default
-    // 10^6-edge threshold the boxed-Row form transiently holds ~100 MB
-    // of GenericRow scaffolding on a heap this sandbox caps at 12g;
-    // tuples keep the transient closer to ~50 MB and the retained
-    // working set (parent map + star array) well under that
-    val pairs = e.select(col("u"), col("v")).as[(Long, Long)].collect()
-    driverFinishCollected(spark, pairs)
-  }
-
-  /** [[driverFinish]] over an already-collected edge array — the
-    * small-graph entry fold ([[connected]]) collects once (bounded) and
-    * reuses the rows here instead of paying a second collect job.
-    */
-  private def driverFinishCollected(spark: org.apache.spark.sql.SparkSession,
-      pairs: Array[(Long, Long)]): (DataFrame, Int, Int) = {
-    import spark.implicits._
-    val parent = new java.util.HashMap[Long, Long]()
-    def find(x: Long): Long = {
+    val us = Array.concat(parts.map(_.as): _*)
+    val vs = Array.concat(parts.map(_.bs): _*)
+    // the node table: sorted distinct endpoints, so index order is id order
+    val ids = Array.concat(us, vs)
+    java.util.Arrays.sort(ids)
+    var n = 0
+    ids.indices.foreach { i => if (i == 0 || ids(i) != ids(i - 1)) { ids(n) = ids(i); n += 1 } }
+    def at(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
       var r = x
-      while (parent.getOrDefault(r, r) != r) r = parent.get(r)
+      while (parent(r) != r) r = parent(r)
       var c = x // path compression
-      while (parent.getOrDefault(c, c) != r) {
-        val nxt = parent.get(c); parent.put(c, r); c = nxt
-      }
+      while (parent(c) != r) { val nxt = parent(c); parent(c) = r; c = nxt }
       r
     }
     // union by min: the smaller root becomes parent, so every root IS
     // its component's minimum id and no second min pass is needed
-    pairs.foreach { case (u, v) =>
-      val (ru, rv) = (find(u), find(v))
-      if (ru != rv) {
-        if (ru < rv) parent.put(rv, ru) else parent.put(ru, rv)
+    us.indices.foreach { e =>
+      val (ru, rv) = (find(at(us(e))), find(at(vs(e))))
+      if (ru < rv) parent(rv) = ru else if (rv < ru) parent(ru) = rv
+    }
+    // one star row per non-root node, in the order its id first appears
+    val seen = new java.util.BitSet(n)
+    val star = Array.newBuilder[(Long, Long)]
+    def emit(id: Long): Unit = {
+      val i = at(id)
+      if (!seen.get(i)) {
+        seen.set(i)
+        val r = find(i)
+        if (r != i) star += ((ids(r), id))
       }
     }
-    val star = pairs.iterator
-      .flatMap { case (u, v) => Iterator(u, v) }
-      .map(x => (find(x), x))
-      .filter { case (m, x) => m != x }
-      .toArray.distinct
-    (spark.createDataset(star.toSeq).toDF("u", "v"),
-      pairs.length, star.length)
+    us.indices.foreach { e => emit(us(e)); emit(vs(e)) }
+    val rows = star.result()
+    (spark.createDataset(rows.toSeq).toDF("u", "v"), us.length, rows.length)
   }
 
   /** Component label per node: `(id, component)` where `component` is
@@ -123,7 +137,7 @@ object Components {
     // overflow under ANSI mode)
     def checksum(d: DataFrame): (Long, Long) = {
       val r = d.agg(count(lit(1)),
-        expr("bit_xor(xxhash64(u, v))")).head()
+        expr("bit_xor(xxhash64(u, v))")).head() // driver: one row
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
 
@@ -132,50 +146,36 @@ object Components {
     // the edge set shrinks geometrically toward #nodes - #components —
     // so the tail rounds move megabytes through cluster-sized machinery
     // (measured: strong scaling 0.34 at 1M nodes, round-latency-bound).
-    // Once the surviving set fits comfortably on the driver, collect it
-    // and finish with union-find: bit-identical labels (component = min
-    // member id either way), ~half the rounds at small n and the tail
-    // rounds at any n. 10^6 edges = 16 MB of longs (~50 MB transient
-    // with tuple boxing during the typed collect) — driver-trivial,
-    // while 100-TB inputs still do all real volume distributed.
-    val driverFinishEdges = edges.sparkSession.conf
-      .getOption("spark.graft.cc.driverFinishEdges").map(_.toLong)
-      .getOrElse(1000000L)
+    // Once the surviving set fits the driver budget ([[EdgeBytes]] an
+    // edge), fetch it and finish with union-find: bit-identical labels
+    // (component = min member id either way), ~half the rounds at small
+    // n and the tail rounds at any n, while 100-TB inputs still do all
+    // real volume distributed.
+    val spark0 = edges.sparkSession
+    val budget = DriverBudget.bytes(spark0)
 
-    // Entry fold: ONE bounded collect (limit threshold+1 over the
-    // checkpointed edge blocks) decides small-vs-large AND, when small,
-    // already holds every edge — the union-find runs on those rows
-    // directly. The previous flow spent two jobs here (a checksum pass
-    // plus a separate full collect); at 100-TB scale the limited collect
-    // reads a handful of checkpoint blocks and stops.
+    // Entry fold: ONE bounded fetch over the checkpointed edge blocks
+    // decides small-vs-large AND, when small, already holds every edge —
+    // the union-find runs on those rows directly.
     var it = 0
     var converged = false
-    // (collected edges, star edges) when the driver union-find finished —
+    // (fetched edges, star edges) when the driver union-find finished —
     // the convergence log otherwise reports stale round-state (prev._1 is
     // the PRE-finish edge count and `it` can say 0 rounds)
     var driverFinished: Option[(Int, Int)] = None
     var prev = (-1L, 0L)
 
-    val spark0 = edges.sparkSession
-    import spark0.implicits._
-    val probeCap = driverFinishEdges + 1
-    val probe =
-      if (probeCap <= Int.MaxValue.toLong)
-        e.select(col("u"), col("v")).limit(probeCap.toInt)
-          .as[(Long, Long)].collect()
-      else Array.empty[(Long, Long)]
-    if (probeCap <= Int.MaxValue.toLong && probe.length <= driverFinishEdges) {
-      if (probe.isEmpty) converged = true
-      else {
-        val (star, nIn, nStar) = driverFinishCollected(spark0, probe)
+    fetched(e, budget) match {
+      case Some(parts) if parts.forall(_.as.isEmpty) => converged = true
+      case Some(parts) =>
+        val (star, nIn, nStar) = driverFinish(spark0, parts)
         driverFinished = Some((nIn, nStar))
         graft.core.Materialize.release(e)
         e = star
         converged = true
-      }
-    } else {
-      prev = checksum(e)
-      converged = prev._1 == 0L
+      case None =>
+        prev = checksum(e)
+        converged = prev._1 == 0L
     }
     while (!converged && it < maxIter) {
       // large-star: every node attaches its LARGER neighbors to the
@@ -208,8 +208,9 @@ object Components {
       prev = cur
       e = next
       it += 1
-      if (!converged && cur._1 <= driverFinishEdges) {
-        val (star, nIn, nStar) = driverFinish(e)
+      // the fingerprint's count says when the survivors fit
+      if (!converged && cur._1 <= budget / EdgeBytes) fetched(e, budget).foreach { parts =>
+        val (star, nIn, nStar) = driverFinish(spark0, parts)
         driverFinished = Some((nIn, nStar))
         graft.core.Materialize.release(e)
         e = star

@@ -1,6 +1,7 @@
 package graft.cluster
 
-import graft.core.Stat0
+import graft.core.{DriverBudget, Stat0}
+import graft.stats.LisaEngine
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
@@ -30,70 +31,73 @@ object Regionalize {
       distType: String = "euclidean",
       minRegionSize: Int = 0,
       /** optional (boundVals(i), minBound) spatial-constraint pair */
-      minBound: Double = 0.0,
-      /** SKATER scale path: compute + sort edge dissimilarities in Spark
-        * and stream the sorted edges to the driver's union-find instead
-        * of collecting all E edges (first-order single linkage only;
-        * result is bit-identical — same (d, a, b) tie-break order). */
-      distributedMst: Boolean = false,
-      /** Below this many observations the collect-path MST runs even
-        * when `distributedMst` is set: at toy N the Spark range-sort's
-        * fixed stage latency (~1 s) dwarfs the O(E log E) driver sort it
-        * replaces, and the two paths are bit-identical anyway (the
-        * distributed sort key (d, a, b) IS the driver tie-break). Set 0
-        * to force the distributed path (tests / benchmarking).
-        */
-      distributedMstMinRows: Int = 65536)
+      minBound: Double = 0.0)
 
-  /** values: (gid, vals array<double>); weights: (gid, nbrs). */
+  /** values: (gid, vals array<double>); weights: (gid, nbrs).
+    *
+    * The driver holds the value matrix, the bounds and the weights edges
+    * at once, so each is fetched ([[DriverBudget]]) within what the
+    * earlier ones left of the budget. Past it, first-order single
+    * linkage (SKATER) builds its tree distributed
+    * ([[firstOrderTreeDistributed]], bit-identical); the values, the
+    * bounds and the other linkages' edges have no distributed form and
+    * fail, naming the bound.
+    */
   def run(values: DataFrame, weights: DataFrame, conf: Conf,
           boundValues: Option[DataFrame] = None): DataFrame = {
     val spark = values.sparkSession
     import spark.implicits._
-    val rows = values.select(col("gid").cast("long"), col("vals"))
-      .orderBy("gid").collect()
-    val n = rows.length
-    val gids = rows.map(_.getLong(0))
+    var left = DriverBudget.bytes(spark)
+    def fetch[A <: AnyRef](df: DataFrame, holder: () => DriverBudget.Holder[A]) = {
+      val f = DriverBudget.fetch(df, left)(holder)
+      f match { case DriverBudget.Held(_, bytes) => left -= bytes; case _ => }
+      f
+    }
+    val onDriver = "every method holds it on the driver; raise the budget, with a driver heap to match"
+    val parts = fetch(values.select(col("gid").cast("long"), col("vals").cast("array<double>")),
+        () => new LisaEngine.RowsBuilder(0)).orFail("Regionalize's value table", onDriver)
+    // gids ascending and the column-major matrix; duplicate, empty and
+    // ragged rows fail naming the gid
+    val (gids, mat) = LisaEngine.window(LisaEngine.Rows(parts.toArray.flatMap(_.gids),
+      parts.toArray.flatMap(_.widths), parts.toArray.flatMap(_.flat)))
+    val n = gids.length
     val gidIdx = gids.zipWithIndex.toMap
-    val nv = rows.head.getSeq[Double](1).length
-    val mat = Array.ofDim[Double](nv, n)
-    for (i <- 0 until n; v <- 0 until nv)
-      mat(v)(i) = rows(i).getSeq[Double](1)(v)
     val scaled = mat.map(v => Stat0.scale(v, conf.scaleMethod))
 
     val bounds: Array[Double] = boundValues match {
       case Some(bv) =>
-        val m = bv.select(col("gid").cast("long"), col("value").cast("double"))
-          .as[(Long, Double)].collect().toMap
+        val m = fetch(bv.select(col("gid").cast("long"), array(col("value").cast("double"))),
+            () => new LisaEngine.RowsBuilder(0)).orFail("Regionalize's bound values", onDriver)
+          .flatMap(p => p.gids.zip(p.flat)).toMap
         gids.map(m)
       case None => Array.fill(n)(0.0)
     }
 
-    val labels =
-      if (conf.distributedMst && n >= conf.distributedMstMinRows &&
-          conf.method == "firstorder-singlelinkage") {
+    val edgeRows = weights.select(col("gid").cast("long").as("gid"), explode(col("nbrs")).as("nbr"))
+      .select(col("gid"), col("nbr").cast("long"))
+    val labels = fetch(edgeRows, () => new DriverBudget.LongPairs(16L, "Regionalize weights")) match {
+      case DriverBudget.Held(parts, _) =>
+        val edges = parts.toArray.flatMap(p => p.as.indices.map(i => (gidIdx(p.as(i)), gidIdx(p.bs(i)))))
+          .filter { case (a, b) => a < b }.distinct
+        solve(n, scaled, edges, bounds, conf)
+      case _: DriverBudget.Over if conf.method == "firstorder-singlelinkage" =>
         val tree = firstOrderTreeDistributed(weights, scaled, gids,
           conf.distType == "manhattan")
         require(tree.length == n - 1,
           "The weights graph is disconnected (skater.c:165-168): regionalization requires one connected component")
         partitionTree(n, scaled, tree, bounds, conf)
-      } else {
-        val edges = weights.select(col("gid").cast("long"),
-            explode(col("nbrs")).as("nbr"))
-          .as[(Long, Long)].collect()
-          .map { case (a, b) => (gidIdx(a), gidIdx(b)) }
-          .filter { case (a, b) => a < b }.distinct
-        solve(n, scaled, edges, bounds, conf)
-      }
+      case o: DriverBudget.Over => o.fail(s"Regionalize's weights edges for ${conf.method}",
+        "only firstorder-singlelinkage (SKATER) builds its tree distributed past the budget")
+    }
     spark.createDataset(gids.zip(labels).toIndexedSeq)
       .toDF("gid", "cluster")
   }
 
   /** SKATER's spanning-tree build as a Spark job (the scale path).
     *
-    * The default path collects all E contiguity edges and sorts them on
-    * the driver — fine at polygon-layer scale, but E ≈ avg-degree × N
-    * dominates the driver footprint on web-scale graphs. Here every
+    * Within the driver budget, [[run]] fetches all E contiguity edges and
+    * sorts them on the driver — fine at polygon-layer scale, but E ≈
+    * avg-degree × N dominates the driver footprint on web-scale graphs. Here every
     * edge's dissimilarity is computed executor-side against a broadcast
     * of the scaled value matrix, Spark range-sorts the (d, a, b) stream,
     * and the driver consumes it through `toLocalIterator`, holding only
@@ -130,7 +134,8 @@ object Regionalize {
         .orderBy("d", "a", "b")
         .as[(Double, Int, Int)]
       import scala.jdk.CollectionConverters._
-      kruskal(n, sorted.toLocalIterator().asScala)
+      // holds the N-1 tree edges and one range-sorted partition at a time
+      kruskal(n, sorted.toLocalIterator().asScala) // driver: bounded, a partition at a time
     } finally { bScaled.destroy(); bGids.destroy() }
   }
 

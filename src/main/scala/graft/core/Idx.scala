@@ -39,7 +39,7 @@ object Idx {
     sorted.cache()
     val counts = sorted.groupBy("__pid").agg(count(lit(1)).as("__cnt"),
         min("__mid").as("__base"))
-      .orderBy("__pid").collect()
+      .orderBy("__pid").collect() // driver: bounded, a row a partition
     var off = 0L
     val offsets = counts.map { r =>
       val pid = r.getInt(0); val cnt = r.getLong(1); val base = r.getLong(2)

@@ -92,7 +92,7 @@ object Materialize {
     */
   def collected(out: DataFrame, internal: Seq[Dataset[_]]): DataFrame = {
     val spark = out.sparkSession
-    val rows = out.collect()
+    val rows = out.collect() // driver: bounded, by the caller's gate
     internal.foreach(_.unpersist(blocking = false))
     spark.createDataFrame(
       java.util.Arrays.asList(rows: _*), out.schema)

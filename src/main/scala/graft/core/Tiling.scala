@@ -55,6 +55,39 @@ object Tiling {
       when(badRow, fail).otherwise(col("y")).as("y"))
   }
 
+  /** Bounds of the non-null x and y values and the row count. */
+  final class Extent(var minX: Double, var maxX: Double, var minY: Double,
+                     var maxY: Double, var n: Long) extends Serializable {
+    def merge(o: Extent): Extent = new Extent(math.min(minX, o.minX), math.max(maxX, o.maxX),
+      math.min(minY, o.minY), math.max(maxY, o.maxY), n + o.n)
+    /** Some row has a non-null x. */
+    def hasX: Boolean = minX != Double.PositiveInfinity || maxX != Double.NegativeInfinity
+  }
+  object Extent {
+    def empty: Extent = new Extent(Double.PositiveInfinity, Double.NegativeInfinity,
+      Double.PositiveInfinity, Double.NegativeInfinity, 0L)
+  }
+
+  /** The [[Extent]] of `points`' `x` and `y`, in one fold over the rows:
+    * a global agg().head() runs two jobs under AQE.
+    */
+  def extent(points: DataFrame): Extent =
+    org.apache.spark.sql.graftshim.ColumnShim
+      .toInternalRdd(points.select(col("x").cast("double"), col("y").cast("double")))
+      .mapPartitions { it =>
+        val p = Extent.empty
+        it.foreach { r =>
+          if (!r.isNullAt(0)) {
+            val x = r.getDouble(0); p.minX = math.min(p.minX, x); p.maxX = math.max(p.maxX, x)
+          }
+          if (!r.isNullAt(1)) {
+            val y = r.getDouble(1); p.minY = math.min(p.minY, y); p.maxY = math.max(p.maxY, y)
+          }
+          p.n += 1
+        }
+        Iterator.single(p)
+      }.fold(Extent.empty)(_ merge _)
+
   /** A value as an error message shows it: null as "null". */
   def shown(c: Column): Column = coalesce(c.cast("string"), lit("null"))
 

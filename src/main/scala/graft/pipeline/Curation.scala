@@ -133,7 +133,7 @@ object Curation {
       .filter(length(col("token")) > 0)
     val tokenCounts = toks.groupBy("token").agg(count(lit(1)).as("n"))
       .cache()
-    val totalRow = tokenCounts.agg(sum(col("n"))).head()
+    val totalRow = tokenCounts.agg(sum(col("n"))).head() // driver: one row
     val total =
       (if (totalRow.isNullAt(0)) 0L else totalRow.getLong(0)).toDouble
     val vocab = tokenCounts

@@ -400,7 +400,7 @@ object Dedup {
     // input — a separate count() and size().head() would each replay
     // the upstream plan
     val cd = emb.agg(count(lit(1)),
-      first(size(col(vecCol)), ignoreNulls = true)).head()
+      first(size(col(vecCol)), ignoreNulls = true)).head() // driver: one row
     val nRows = cd.getLong(0)
     if (nRows == 0)
       return Seq.empty[(Long, Long, Double)].toDF("id_a", "id_b", "cosine")
@@ -546,7 +546,7 @@ object Dedup {
   private[graft] def occupancyOf(assigned: DataFrame): Occupancy = {
     val r = assigned.groupBy("cid").agg(count(lit(1)).as("n"))
       .agg(count(lit(1)), max(col("n")), avg(col("n")),
-        expr("approx_percentile(n, 0.99)")).head()
+        expr("approx_percentile(n, 0.99)")).head() // driver: one row
     Occupancy(r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))
   }
 
@@ -673,7 +673,7 @@ object Dedup {
     // skips null embeddings; when it finds none, the first row (if any)
     // goes through `normalized`, whose check names a null one's id.
     val dimProbe = Similarity.dimOf(renamed, "embedding")
-    if (dimProbe.isEmpty) Similarity.normalized(renamed).limit(1).collect()
+    if (dimProbe.isEmpty) Similarity.normalized(renamed).limit(1).collect() // driver: bounded, limit 1
     val n: Long =
       if (nClusters0 > 0) { if (dimProbe.isEmpty) 0L else -1L }
       else renamed.count()

@@ -63,7 +63,7 @@ object Similarity {
   /** Size of the first non-null `vecCol` vector (one limit-1 job). */
   private[pipeline] def dimOf(df: DataFrame, vecCol: String): Option[Int] =
     df.filter(col(vecCol).isNotNull).select(size(col(vecCol))).limit(1)
-      .collect().headOption.map(_.getInt(0))
+      .collect().headOption.map(_.getInt(0)) // driver: bounded, limit 1
 
   /** `dimHint` when positive, else [[dimOf]]; training needs a vector. */
   private[pipeline] def trainDim(df: DataFrame, vecCol: String,
@@ -123,7 +123,7 @@ object Similarity {
     }
     if (!fits) None
     else Some(cents.select(col("cid").cast("int"), col(cvec),
-        if (euclid) lit(-0.5) * col("cn2") else lit(0.0)).collect().toSeq
+        if (euclid) lit(-0.5) * col("cn2") else lit(0.0)).collect().toSeq // driver: bounded, centroidsFitDriver
       .map(r => (r.getInt(0), r.getSeq[Double](1), r.getDouble(2))))
   }
 
@@ -266,7 +266,7 @@ object Similarity {
     */
   private def seedVectors(src: DataFrame, n: Int, ord: Seq[Column])
       : Seq[Seq[Double]] =
-    src.orderBy(ord: _*).limit(n).collect().toSeq.map(_.getSeq[Double](1))
+    src.orderBy(ord: _*).limit(n).collect().toSeq.map(_.getSeq[Double](1)) // driver: bounded, n seeds
 
   private def lloydCentroids(corpus: DataFrame, nCentroids: Int,
       scattered: Boolean, dimHint: Int = -1): DataFrame = {
@@ -349,7 +349,7 @@ object Similarity {
   private def collectCodebooks(codebooks: DataFrame)
       : Map[Int, Array[(Int, Seq[Double], Double)]] =
     codebooks.select(col("sub").cast("int"), col("cid").cast("int"),
-        col("cvec")).collect()
+        col("cvec")).collect() // driver: bounded, d·ksub doubles
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
       .groupBy(_._1)
       .map { case (s, rows) =>

@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import graft.core.{GPolygon, Tiling, Wkb}
-import org.apache.spark.rdd.RDD
+import graft.core.{DriverBudget, GPolygon, Tiling, Wkb}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
@@ -34,22 +33,21 @@ import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
   */
 object SpatialJoin {
 
-  /** Default polygon-layer byte budget for the broadcast path — one
-    * source of truth for every caller (batch + streaming wrappers). */
-  val DefaultBroadcastLimit: Long = 256L * 1024 * 1024
+  /** Default polygon-layer byte budget for the broadcast path: the
+    * driver budget's default ([[DriverBudget.DefaultBytes]]).
+    */
+  val DefaultBroadcastLimit: Long = DriverBudget.DefaultBytes
 
   /** points(gid,x,y) × polys(pid, geom WKB) → (gid, pid).
     *
     * The broadcast/partitioned choice is BYTE-based: broadcast is taken
     * only while the layer's WKB (times 3, the decoded index's overhead)
-    * fits a driver/executor-safe budget — a 2M-multiring layer is GBs
+    * fits `broadcastLimitBytes` and the session's driver budget
+    * ([[DriverBudget]]), whichever is lower — a 2M-multiring layer is GBs
     * and must NOT collect, while 2M tiny boxes may be fine. Default
     * budget 256 MB ≈ Spark's own autoBroadcastJoinThreshold philosophy
-    * scaled to a hash index. One collect both measures and fetches the
-    * layer: each partition returns its rows while they fit its share of
-    * the budget, else only its byte count, so the driver never holds
-    * more than the budget. A layer that overflows some share but fits
-    * in total is fetched whole by a second job.
+    * scaled to a hash index. One [[DriverBudget.fetch]] both measures and
+    * fetches the layer, so the driver never holds more than the budget.
     */
   def pip(points: DataFrame, polys: DataFrame, cellSize: Double,
           broadcastLimitBytes: Long = DefaultBroadcastLimit,
@@ -63,96 +61,87 @@ object SpatialJoin {
       when(pid.isNull, raise_error(lit("PIP polygon layer has a null pid")))
         .otherwise(pid).as("pid"), col("geom"))
     // decoded index ≈ WKB coords as doubles + per-cell fanout overhead 3x
-    val budget = broadcastLimitBytes / 3
-    val rows = org.apache.spark.sql.graftshim.ColumnShim.toInternalRdd(layer)
-    val first = slices(rows, budget / math.max(1, rows.getNumPartitions))
-    val total = first.map(_.bytes).sum
-    if (total <= budget) {
-      val fetched = if (first.forall(_.pids != null)) first else slices(rows, budget)
-      // points stream through a stateless flatMap (a streaming frame of
-      // points joins too): no shuffle
-      val bIndex = spark.sparkContext.broadcast(PolyIndex(fetched, cellSize))
-      checked.as[(Long, Double, Double)].flatMap { case (gid, x, y) =>
-        val ix = bIndex.value
-        val j = java.util.Arrays.binarySearch(ix.cells, Tiling.cellId(x, y, cellSize))
-        if (j < 0) Iterator.empty
-        else Iterator.range(ix.offs(j), ix.offs(j + 1)).map(ix.cands(_))
-          .filter(ix.contains(_, x, y)).map(q => (gid, ix.pids(q)))
-      }.toDF("gid", "pid")
-    } else {
-      // partitioned: explode polygons to cells, equi-join, exact refine
-      val polyCells0 = layer.as[(Long, Array[Byte])]
-        .flatMap { case (pid, wkb) =>
-          Wkb.read(wkb) match {
-            case Some(p: GPolygon) =>
-              val (mnx, mny, mxx, mxy) = p.bbox
-              Tiling.bboxCells(mnx, mny, mxx, mxy, cellSize)
-                .map(c => (pid, c, wkb))
-            case _ => Nil
-          }
-        }.toDF("pid", "pcell", "pgeom")
-      // Explicit skew salt: replicate the (smaller) polygon-cell side
-      // nSalt times; each point deterministically picks ONE salt from
-      // its gid, so every (point, candidate-polygon) pair still meets
-      // exactly once while a hot cell's points fan out over nSalt
-      // shuffle partitions. nSalt == 1 keeps the original plan shape.
-      val polyCells =
-        if (nSalt == 1) polyCells0
-        else polyCells0.withColumn("psalt",
-          explode(sequence(lit(0), lit(nSalt - 1))))
-      val pts0 = checked
-        .withColumn("cell", Tiling.cellIdCol(col("x"), col("y"), cellSize))
-      val pts =
-        if (nSalt == 1) pts0
-        else pts0.withColumn("salt", pmod(hash(col("gid")), lit(nSalt)))
-      val joinCond =
-        if (nSalt == 1) col("cell") === col("pcell")
-        else col("cell") === col("pcell") && col("salt") === col("psalt")
-      pts.join(polyCells, joinCond)
-        .select(col("gid").cast("long"), col("x"), col("y"),
-          col("pid"), col("pgeom"))
-        .as[(Long, Double, Double, Long, Array[Byte])]
-        .mapPartitions { it =>
-          // memoize decodes per partition — polygons repeat across points
-          val cache = new java.util.HashMap[Long, GPolygon]()
-          it.flatMap { case (gid, x, y, pid, wkb) =>
-            var poly = cache.get(pid)
-            if (poly == null) {
-              Wkb.read(wkb) match {
-                case Some(p: GPolygon) => cache.put(pid, p); poly = p
-                case _ =>
-              }
-            }
-            if (poly != null && poly.contains(x, y)) Iterator.single((gid, pid))
-            else Iterator.empty
-          }
+    val budget = math.min(broadcastLimitBytes, DriverBudget.bytes(spark)) / 3
+    DriverBudget.fetch(layer, budget)(() => new LayerHolder) match {
+      case DriverBudget.Held(fetched, _) =>
+        // points stream through a stateless flatMap (a streaming frame of
+        // points joins too): no shuffle
+        val bIndex = spark.sparkContext.broadcast(PolyIndex(fetched, cellSize))
+        checked.as[(Long, Double, Double)].flatMap { case (gid, x, y) =>
+          val ix = bIndex.value
+          val j = java.util.Arrays.binarySearch(ix.cells, Tiling.cellId(x, y, cellSize))
+          if (j < 0) Iterator.empty
+          else Iterator.range(ix.offs(j), ix.offs(j + 1)).map(ix.cands(_))
+            .filter(ix.contains(_, x, y)).map(q => (gid, ix.pids(q)))
         }.toDF("gid", "pid")
+      case _: DriverBudget.Over =>
+        // partitioned: explode polygons to cells, equi-join, exact refine
+        val polyCells0 = layer.as[(Long, Array[Byte])]
+          .flatMap { case (pid, wkb) =>
+            Wkb.read(wkb) match {
+              case Some(p: GPolygon) =>
+                val (mnx, mny, mxx, mxy) = p.bbox
+                Tiling.bboxCells(mnx, mny, mxx, mxy, cellSize)
+                  .map(c => (pid, c, wkb))
+              case _ => Nil
+            }
+          }.toDF("pid", "pcell", "pgeom")
+        // Explicit skew salt: replicate the (smaller) polygon-cell side
+        // nSalt times; each point deterministically picks ONE salt from
+        // its gid, so every (point, candidate-polygon) pair still meets
+        // exactly once while a hot cell's points fan out over nSalt
+        // shuffle partitions. nSalt == 1 keeps the original plan shape.
+        val polyCells =
+          if (nSalt == 1) polyCells0
+          else polyCells0.withColumn("psalt",
+            explode(sequence(lit(0), lit(nSalt - 1))))
+        val pts0 = checked
+          .withColumn("cell", Tiling.cellIdCol(col("x"), col("y"), cellSize))
+        val pts =
+          if (nSalt == 1) pts0
+          else pts0.withColumn("salt", pmod(hash(col("gid")), lit(nSalt)))
+        val joinCond =
+          if (nSalt == 1) col("cell") === col("pcell")
+          else col("cell") === col("pcell") && col("salt") === col("psalt")
+        pts.join(polyCells, joinCond)
+          .select(col("gid").cast("long"), col("x"), col("y"),
+            col("pid"), col("pgeom"))
+          .as[(Long, Double, Double, Long, Array[Byte])]
+          .mapPartitions { it =>
+            // memoize decodes per partition — polygons repeat across points
+            val cache = new java.util.HashMap[Long, GPolygon]()
+            it.flatMap { case (gid, x, y, pid, wkb) =>
+              var poly = cache.get(pid)
+              if (poly == null) {
+                Wkb.read(wkb) match {
+                  case Some(p: GPolygon) => cache.put(pid, p); poly = p
+                  case _ =>
+                }
+              }
+              if (poly != null && poly.contains(x, y)) Iterator.single((gid, pid))
+              else Iterator.empty
+            }
+          }.toDF("gid", "pid")
     }
   }
 
   /** One partition of the polygon layer: its pids and WKBs (null for a
-    * null geometry) in row order, or null for both when its `bytes` of
-    * WKB exceed the share it was read with.
+    * null geometry) in row order.
     */
-  private final case class Slice(bytes: Long, pids: Array[Long], wkbs: Array[Array[Byte]])
+  private final case class Slice(pids: Array[Long], wkbs: Array[Array[Byte]])
 
-  /** One job over the layer's `(pid, geom)` rows: a [[Slice]] per
-    * partition, which keeps at most `share` bytes of WKB.
-    */
-  private def slices(rows: RDD[InternalRow], share: Long): Array[Slice] =
-    rows.mapPartitions { it =>
-      val pids = new ArrayBuilder.ofLong
-      val wkbs = ArrayBuffer.empty[Array[Byte]]
-      var bytes = 0L
-      it.foreach { row =>
-        val wkb = if (row.isNullAt(1)) null else row.getBinary(1)
-        if (wkb != null) bytes += wkb.length
-        if (bytes <= share) { pids += row.getLong(0); wkbs += wkb }
-      }
-      Iterator.single(
-        if (bytes <= share) Slice(bytes, pids.result(), wkbs.toArray)
-        else Slice(bytes, null, null))
-    }.collect()
+  /** Holds `(pid, geom)` rows as a [[Slice]]; a row costs its WKB bytes. */
+  private final class LayerHolder extends DriverBudget.Holder[Slice] {
+    private val pids = new ArrayBuilder.ofLong
+    private val wkbs = ArrayBuffer.empty[Array[Byte]]
+    private var wkb: Array[Byte] = _ // the row `size` last read
+    def size(row: InternalRow): Long = {
+      wkb = if (row.isNullAt(1)) null else row.getBinary(1)
+      if (wkb == null) 0L else wkb.length
+    }
+    def add(row: InternalRow): Unit = { pids += row.getLong(0); wkbs += wkb }
+    def result(): Slice = Slice(pids.result(), wkbs.toArray)
+  }
 
   /** The broadcast cell index: `cells` sorted, cell `cells(j)`'s
     * candidate polygons at `cands(offs(j))` until `cands(offs(j + 1))` in
@@ -170,7 +159,7 @@ object SpatialJoin {
     /** Decodes the polygons of `fetched` in order (anything else is
       * skipped) and indexes each under every cell its bbox overlaps.
       */
-    def apply(fetched: Array[Slice], cellSize: Double): PolyIndex = {
+    def apply(fetched: Seq[Slice], cellSize: Double): PolyIndex = {
       val pids = new ArrayBuilder.ofLong
       val rings = new ArrayBuilder.ofInt
       val starts = new ArrayBuilder.ofInt

@@ -30,7 +30,7 @@ object Breaks {
       values.select(col("value").cast("double"), col("gid")), "rk",
       "value", "gid") { ranked =>
       ranked.filter(col("rk").isin(want: _*))
-        .select(col("rk"), col("value")).collect()
+        .select(col("rk"), col("value")).collect() // driver: bounded, O(#ranks)
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     }
   }
@@ -108,7 +108,7 @@ object Breaks {
     val r = values.agg(
       org.apache.spark.sql.functions.min(col("value").cast("double")),
       org.apache.spark.sql.functions.max(col("value").cast("double")))
-      .head()
+      .head() // driver: one row
     val lo = r.getDouble(0); val hi = r.getDouble(1)
     (1 until k).map(i => lo + i * (hi - lo) / k)
   }
@@ -118,7 +118,7 @@ object Breaks {
     */
   def stddevBreaks(values: DataFrame): Seq[Double] = {
     val r = values.agg(avg(col("value")).as("m"),
-      stddev_samp(col("value")).as("s")).head()
+      stddev_samp(col("value")).as("s")).head() // driver: one row
     val m = r.getDouble(0); val s = r.getDouble(1)
     Seq(m - 2 * s, m - s, m, m + s, m + 2 * s)
   }
@@ -137,7 +137,7 @@ object Breaks {
     val vals: Array[Double] =
       if (n <= sampleCap) {
         values.select(col("value").cast("double")).orderBy("value")
-          .collect().map(_.getDouble(0))
+          .collect().map(_.getDouble(0)) // driver: bounded, n <= sampleCap
       } else {
         val step = n.toDouble / sampleCap
         val ranks = (0 until sampleCap).map(i => (i * step).toLong)

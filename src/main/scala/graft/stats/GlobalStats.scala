@@ -163,7 +163,7 @@ object GlobalStats {
       col("value").cast("double").as("x"))
     val chk = v.agg(
       sum(when(col("x") =!= 0.0 && col("x") =!= 1.0, 1L).otherwise(0L)),
-      count(lit(1)), sum(col("x"))).head()
+      count(lit(1)), sum(col("x"))).head() // driver: one row
     require(chk.getLong(0) == 0L,
       "global join count needs a binary 0/1 variable (joincount.c semantics)")
     val num = w

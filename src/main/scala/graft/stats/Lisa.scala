@@ -19,8 +19,9 @@ import org.apache.spark.sql.types._
   *
   * Broadcast mode holds 16 bytes/row (gid + z) on the driver and on
   * every executor — fine to ~100M rows. Nothing here switches mode by
-  * size: a larger table calls per-tile windows ([[TileLisa]]) itself,
-  * whose doc names the two deliberate differences between the modes.
+  * size: a gather past the driver budget fails, and a larger table calls
+  * per-tile windows ([[TileLisa]]) itself, whose doc names the two
+  * deliberate differences between the modes.
   *
   * Driver reads: one job gathers the values (and, in 'lookup' mode, the
   * longest neighbor list, from the same collect); one more runs the

@@ -1,6 +1,6 @@
 package graft.stats
 
-import graft.core.Stat0
+import graft.core.{DriverBudget, Stat0}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
@@ -15,9 +15,10 @@ import scala.collection.mutable.ArrayBuilder
   * statistic is derived over a window: broadcast mode ([[Lisa]]) runs it
   * once over the whole value table, tile mode ([[TileLisa]]) once per
   * tile. Both modes read, check and size windows with the helpers here,
-  * so bad input fails with the same message, naming the gid.
+  * so bad input fails with the same message, naming the gid; REDCAP
+  * (`graft.cluster.Regionalize`) reads its value table the same way.
   */
-private[stats] object LisaEngine {
+private[graft] object LisaEngine {
 
   /** Rows as read, in any order: gids, per-row widths, row-major values. */
   final case class Rows(gids: Array[Long], widths: Array[Int], flat: Array[Double])
@@ -32,18 +33,22 @@ private[stats] object LisaEngine {
       col("value2").cast("double")).as("vals"))
 
   /** Accumulates `(gid, vals: array<double>)` rows read straight out of
-    * InternalRows (no boxed Seq decoding on the hot path). The raw read
-    * would decode a null slot as 0, so null gids, null arrays and null
-    * elements are rejected here, naming the gid.
+    * InternalRows (no boxed Seq decoding on the hot path), the gid at
+    * ordinal `g` and vals at `g + 1`. The raw read would decode a null
+    * slot as 0, so null gids, null arrays and null elements are rejected
+    * here, naming the gid. As a [[DriverBudget.Holder]], a row costs its
+    * gid, width and values: 12 + 8 bytes a value.
     */
-  final class RowsBuilder {
+  final class RowsBuilder(g: Int) extends DriverBudget.Holder[Rows] {
     private val gids = new ArrayBuilder.ofLong
     private val widths = new ArrayBuilder.ofInt
     private val flat = new ArrayBuilder.ofDouble
 
-    /** Appends the row whose gid is at ordinal `g` and vals at `g + 1`. */
-    def add(row: InternalRow, g: Int): Unit = {
-      require(!row.isNullAt(g), "null gid in LISA input")
+    def size(row: InternalRow): Long =
+      12L + (if (row.isNullAt(g + 1)) 0L else 8L * row.getArray(g + 1).numElements())
+
+    def add(row: InternalRow): Unit = {
+      require(!row.isNullAt(g), "null gid in value table")
       val gid = row.getLong(g)
       require(!row.isNullAt(g + 1), s"null vals array at gid $gid")
       val arr = row.getArray(g + 1)
@@ -61,36 +66,42 @@ private[stats] object LisaEngine {
     def result(): Rows = Rows(gids.result(), widths.result(), flat.result())
   }
 
-  /** Broadcast mode's gather of `(gid, vals)`: each partition packs its
-    * rows into primitive arrays on the executor (no driver-side Row
-    * boxing), and the driver makes them the one whole-table window with
-    * one primitive sort by gid — ~10x faster than orderBy().collect() for
-    * broadcast-vector builds. Given `weights` rows `(.., nbrs, ..)`, the
-    * same job (one collect over both) also returns the longest neighbor
-    * list's length, else 0.
+  /** Broadcast mode's gather of `(gid, vals)` within the driver budget
+    * ([[DriverBudget]]): each partition packs its rows into primitive
+    * arrays on the executor (no driver-side Row boxing), and the driver
+    * makes them the one whole-table window with one primitive sort by
+    * gid — ~10x faster than orderBy().collect() for broadcast-vector
+    * builds. A value table past the budget fails, pointing to
+    * [[TileLisa]]. Given `weights` rows `(.., nbrs, ..)`, the same job
+    * (one collect over both) also returns the longest neighbor list's
+    * length, else 0.
     */
   def gather(values: DataFrame, weights: Option[DataFrame] = None)
       : (Array[Long], Array[Array[Double]], Int) = {
     import org.apache.spark.sql.graftshim.ColumnShim
-    val src = values.select(col("gid").cast("long"),
-      col("vals").cast("array<double>"))
-    val rows: RDD[Either[Rows, Int]] = ColumnShim.toInternalRdd(src)
-      .mapPartitions { it =>
-        val b = new RowsBuilder
-        it.foreach(b.add(_, 0))
-        Iterator.single(Left(b.result()))
-      }
+    val src = ColumnShim.toInternalRdd(values.select(col("gid").cast("long"),
+      col("vals").cast("array<double>")))
+    val budget = DriverBudget.bytes(values.sparkSession)
+    val holder = () => new RowsBuilder(0)
+    val rows: RDD[Either[DriverBudget.Slice[Rows], Int]] =
+      DriverBudget.slices(src, DriverBudget.share(budget, src), holder).map(Left(_))
     val degrees = weights.map(w => ColumnShim.toInternalRdd(w.select(col("nbrs")))
       .mapPartitions { it =>
         var most = 0
         it.foreach(r => if (!r.isNullAt(0)) most = math.max(most, r.getArray(0).numElements()))
-        Iterator.single(Right(most): Either[Rows, Int])
+        Iterator.single(Right(most): Either[DriverBudget.Slice[Rows], Int])
       })
     // a task per partition of the wider input: the job is no wider than
-    // the kernel pass over the weights
+    // the kernel pass over the weights; the driver gets a slice per value
+    // partition and an int per weights partition
     val parts = degrees.fold(rows)(d => rows.union(d)
-      .coalesce(math.max(1, math.max(rows.getNumPartitions, d.getNumPartitions)))).collect()
-    val packed = parts.collect { case Left(r) => r }
+      .coalesce(math.max(1, math.max(rows.getNumPartitions, d.getNumPartitions))))
+      .collect() // driver: DriverBudget, settled below
+    val packed = DriverBudget.settle(parts.collect { case Left(s) => s }, budget)(
+      DriverBudget.slices(src, budget, holder).collect()) // driver: DriverBudget
+      .orFail("broadcast LISA's value table",
+        "run the statistic per tile with TileLisa, whose windows never reach the driver")
+      .toArray
     val (gids, mat) = window(Rows(packed.flatMap(_.gids), packed.flatMap(_.widths),
       packed.flatMap(_.flat)))
     (gids, mat, parts.collect { case Right(d) => d }.foldLeft(0)(math.max))

@@ -75,7 +75,7 @@ object NeighborMatch {
       case "standardize" | "demean" =>
         val aggs = (0 until nv).flatMap(i => Seq(
           avg(v(i)).as(s"m$i"), stddev_samp(v(i)).as(s"s$i")))
-        val m = values.agg(aggs.head, aggs.tail: _*).head()
+        val m = values.agg(aggs.head, aggs.tail: _*).head() // driver: one row
         val cols = (0 until nv).map { i =>
           val mu = m.getDouble(2 * i)
           val sd = if (method == "demean") 0.0 else m.getDouble(2 * i + 1)
@@ -87,7 +87,7 @@ object NeighborMatch {
       case "range_standardize" | "range_adjust" =>
         val aggs = (0 until nv).flatMap(i => Seq(
           min(v(i)).as(s"mn$i"), max(v(i)).as(s"mx$i")))
-        val m = values.agg(aggs.head, aggs.tail: _*).head()
+        val m = values.agg(aggs.head, aggs.tail: _*).head() // driver: one row
         val cols = (0 until nv).map { i =>
           val mn = m.getDouble(2 * i); val mx = m.getDouble(2 * i + 1)
           val r = mx - mn
@@ -115,7 +115,7 @@ object NeighborMatch {
         // throwing path cannot leave a pinned DataFrame behind.
         val counts = pre.agg(count(lit(1)),
           count(when(col("vals").isNull ||
-            exists(col("vals"), x => x.isNull), 1))).head()
+            exists(col("vals"), x => x.isNull), 1))).head() // driver: one row
         val n = counts.getLong(0)
         require(counts.getLong(1) == 0,
           "null element in vals — 'mad' scaling needs complete rows")
@@ -167,7 +167,7 @@ object NeighborMatch {
     // scaling moments could spread one NaN to every row
     val len = when(col("vals").isNotNull, size(col("vals")))
     val m = values.agg(count(lit(1)), min(len), max(len),
-      min_by(col("gid"), len), max_by(col("gid"), len)).head()
+      min_by(col("gid"), len), max_by(col("gid"), len)).head() // driver: one row
     val n = m.getLong(0)
     if (n == 0) {
       require(points.isEmpty, "neighbor match: values has no rows but points has")

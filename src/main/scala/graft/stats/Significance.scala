@@ -63,7 +63,7 @@ object Significance {
       .crossJoin(nTotal)
       .select(col("p"),
         ((col("__before") + col("__cum")) * alpha / col("__n")).as("__thr"))
-    val r = ranked.filter(col("p") <= col("__thr")).agg(max(col("p"))).head()
+    val r = ranked.filter(col("p") <= col("__thr")).agg(max(col("p"))).head() // driver: one row
     if (r.isNullAt(0)) None else Some(r.getDouble(0))
   }
 

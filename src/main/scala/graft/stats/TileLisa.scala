@@ -76,13 +76,11 @@ object TileLisa {
     */
   def autoTileSize(points: DataFrame,
                    targetRows: Long = DefaultTileRows): Double = {
-    val b = points.agg(min(col("x")), max(col("x")),
-      min(col("y")), max(col("y")), count(lit(1))).head()
-    require(!b.isNullAt(0), "autoTileSize over empty points")
-    val w = math.max(b.getDouble(1) - b.getDouble(0), 1e-9)
-    val h = math.max(b.getDouble(3) - b.getDouble(2), 1e-9)
-    val n = b.getLong(4)
-    math.max(math.sqrt(w * h * targetRows.toDouble / math.max(1L, n)), 1e-9)
+    val e = graft.core.Tiling.extent(points)
+    require(e.hasX, "autoTileSize over empty points")
+    val w = math.max(e.maxX - e.minX, 1e-9)
+    val h = math.max(e.maxY - e.minY, 1e-9)
+    math.max(math.sqrt(w * h * targetRows.toDouble / math.max(1L, e.n)), 1e-9)
   }
 
   /** Per-tile LISA for any univariate statistic.
@@ -135,7 +133,7 @@ object TileLisa {
         // consume one consecutive same-tile run into a window at a time
         Iterator.continually(rowsIt).takeWhile(_.hasNext).flatMap { _ =>
           val tile = rowsIt.head.getLong(0)
-          val rows = new LisaEngine.RowsBuilder
+          val rows = new LisaEngine.RowsBuilder(1)
           val nbrsB = Array.newBuilder[Array[Long]]
           while (rowsIt.hasNext && rowsIt.head.getLong(0) == tile) {
             val row = rowsIt.next()
@@ -143,7 +141,7 @@ object TileLisa {
             // decode a null slot as 0 and contaminate tile 0
             require(!row.isNullAt(0),
               "null tile in TileLisa input (null x/y in points?)")
-            rows.add(row, 1)
+            rows.add(row)
             nbrsB += LisaEngine.nbrGids(row, 3)
           }
           // the window is prepared exactly as broadcast mode prepares the

@@ -39,24 +39,23 @@ object ContiguityWeights {
 
   /** First-order adjacency pairs `(gid, nbr)`, both directions. */
   def adjacency(polys: DataFrame, conf: Conf): DataFrame =
-    graft.core.Materialize.releasing(adjacencyLazy(polys, conf)._1, Nil)
+    graft.core.Materialize.releasing(adjacencyLazy(polys, conf), Nil)
 
-  /** Pre-materialization adjacency: (lazy pairs frame, the vertex or
-    * edge frame beneath it). Test seam — plan-shape assertions must look
-    * at this frame, because [[adjacency]] returns a checkpointed frame
-    * whose executed plan is just a scan of the materialized blocks. The
-    * key frame is not cached: both sides of the self-join read one
-    * reused exchange, so the polygons are decoded once.
+  /** Pre-materialization adjacency: the lazy pairs frame. Test seam —
+    * plan-shape assertions must look at this frame, because [[adjacency]]
+    * returns a checkpointed frame whose executed plan is just a scan of
+    * the materialized blocks. The key frame is not cached: both sides of
+    * the self-join read one reused exchange, so the polygons are decoded
+    * once.
     */
-  private[graft] def adjacencyLazy(polys: DataFrame,
-                                   conf: Conf): (DataFrame, Dataset[_]) = {
+  private[graft] def adjacencyLazy(polys: DataFrame, conf: Conf): DataFrame = {
     val spark = polys.sparkSession
     import spark.implicits._
     val prec = conf.precision
     val geoms: Dataset[(Long, Array[Byte])] =
       polys.select(col("gid").cast("long"), col("geom")).as[(Long, Array[Byte])]
 
-    val pairs: (DataFrame, Dataset[_]) =
+    val pairs =
       if (conf.queen) {
         val verts = geoms.flatMap { case (gid, wkb) =>
           Wkb.read(wkb) match {
@@ -74,10 +73,10 @@ object ContiguityWeights {
             case _ => Nil
           }
         }.toDF("gid", "kx", "ky")
-        (verts.as("a").join(verts.as("b").hint("shuffle_hash"),
+        verts.as("a").join(verts.as("b").hint("shuffle_hash"),
             $"a.kx" === $"b.kx" && $"a.ky" === $"b.ky" &&
               $"a.gid" =!= $"b.gid")
-          .select($"a.gid".as("gid"), $"b.gid".as("nbr")), verts)
+          .select($"a.gid".as("gid"), $"b.gid".as("nbr"))
       } else {
         val edges = geoms.flatMap { case (gid, wkb) =>
           Wkb.read(wkb) match {
@@ -105,13 +104,13 @@ object ContiguityWeights {
             case _ => Nil
           }
         }.toDF("gid", "ax", "ay", "bx", "by")
-        (edges.as("a").join(edges.as("b").hint("shuffle_hash"),
+        edges.as("a").join(edges.as("b").hint("shuffle_hash"),
             $"a.ax" === $"b.ax" && $"a.ay" === $"b.ay" &&
               $"a.bx" === $"b.bx" && $"a.by" === $"b.by" &&
               $"a.gid" =!= $"b.gid")
-          .select($"a.gid".as("gid"), $"b.gid".as("nbr")), edges)
+          .select($"a.gid".as("gid"), $"b.gid".as("nbr"))
       }
-    (pairs._1.distinct(), pairs._2)
+    pairs.distinct()
   }
 
   /** Order-k adjacency with optional lower orders (BFS by self-joins). */

@@ -188,6 +188,6 @@ object DistanceWeights {
     val p1 = KnnWeights.pairs(points,
       KnnWeights.Conf(k = 1, isArc = isArc, isMile = isMile,
         cellSize = Some(KnnWeights.autoCellSize(points, 4))))
-    p1.agg(max("dist")).head().getDouble(0)
+    p1.agg(max("dist")).head().getDouble(0) // driver: one row
   }
 }

@@ -106,39 +106,13 @@ object KnnWeights {
     * area rule that shrinks to a sliver of the 1e-9 floor.
     */
   def autoCellSize(points: DataFrame, k: Int): Double = {
-    // one fold over the rows: a global agg().head() runs two jobs under AQE
-    val e = org.apache.spark.sql.graftshim.ColumnShim
-      .toInternalRdd(points.select(col("x").cast("double"), col("y").cast("double")))
-      .mapPartitions { it =>
-        val p = Extent.empty
-        it.foreach { r =>
-          if (!r.isNullAt(0)) {
-            val x = r.getDouble(0); p.minX = math.min(p.minX, x); p.maxX = math.max(p.maxX, x)
-          }
-          if (!r.isNullAt(1)) {
-            val y = r.getDouble(1); p.minY = math.min(p.minY, y); p.maxY = math.max(p.maxY, y)
-          }
-          p.n += 1
-        }
-        Iterator.single(p)
-      }.fold(Extent.empty)(_ merge _)
+    val e = Tiling.extent(points)
     // an empty frame has no extent: any positive cell size is exact
     if (e.n == 0L) return 1.0
     val w = math.max(e.maxX - e.minX, 1e-9)
     val h = math.max(e.maxY - e.minY, 1e-9)
     val perPoint = math.max(1, k).toDouble / e.n
     math.max(math.max(math.sqrt(w * h * perPoint), math.max(w, h) * perPoint), 1e-9)
-  }
-
-  /** Bounds of the non-null x and y values and the row count. */
-  private final class Extent(var minX: Double, var maxX: Double, var minY: Double,
-                             var maxY: Double, var n: Long) extends Serializable {
-    def merge(o: Extent): Extent = new Extent(math.min(minX, o.minX), math.max(maxX, o.maxX),
-      math.min(minY, o.minY), math.max(maxY, o.maxY), n + o.n)
-  }
-  private object Extent {
-    def empty: Extent = new Extent(Double.PositiveInfinity, Double.NegativeInfinity,
-      Double.PositiveInfinity, Double.NegativeInfinity, 0L)
   }
 
   /** Distance under `m` from point a to point b, given their grid
@@ -456,7 +430,7 @@ object KnnWeights {
           }
         }
         Iterator.single(low.toArray(Array.empty[Straggler]))
-      }.collect().flatten.sortBy(_.gid).take(batch + 1)
+      }.collect().flatten.sortBy(_.gid).take(batch + 1) // driver: bounded, batch + 1 a partition
     }
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var fetched = fetch(None)
@@ -561,6 +535,22 @@ object KnnWeights {
     } finally plan.destroy()
   }
 
+  /** The largest last distance of `rows`' `dists`, in one fold (a global
+    * agg().head() runs two jobs under AQE); −∞ when no row has one, so
+    * that no rows give no weights rather than a null bandwidth.
+    */
+  private def longestLastDist(rows: DataFrame): Double =
+    org.apache.spark.sql.graftshim.ColumnShim.toInternalRdd(rows.select(col("dists")))
+      .mapPartitions { it =>
+        var most = Double.NegativeInfinity
+        it.foreach { r =>
+          val d = if (r.isNullAt(0)) null else r.getArray(0)
+          if (d != null && d.numElements() > 0 && !d.isNullAt(d.numElements() - 1))
+            most = math.max(most, d.getDouble(d.numElements() - 1))
+        }
+        Iterator.single(most)
+      }.fold(Double.NegativeInfinity)(math.max)
+
   /** `knn_weights_sub(gid, geom, k, start, end)` parity
     * (`postgeoda/src/weights_knn.c:213-369`): kNN for gids in
     * [startGid, endGid) only — the reference's manual sharding device.
@@ -596,7 +586,7 @@ object KnnWeights {
       case Some(kname) =>
         val bw =
           if (conf.adaptiveBandwidth) element_at(col("dists"), -1)
-          else lit(rows.agg(max(element_at(col("dists"), -1))).head().getDouble(0))
+          else lit(longestLastDist(rows))
         val kv: Column => Column = { u =>
           kname match {
             case "triangular"   => when(u >= 1, 0.0).otherwise(lit(1.0) - u)

@@ -1,7 +1,10 @@
 package graft.weights
 
+import graft.core.DriverBudget
 import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.functions._
 
 /** Binary-parity codec for the reference's weights blob formats, plus the
@@ -131,12 +134,14 @@ object WeightsCodec {
   def toJsonText(weights: DataFrame): String = {
     val spark = weights.sparkSession
     import spark.implicits._
-    val rows = weights.select(col("gid").cast("long"), col("nbrs"), col("wts"))
-      .orderBy("gid").as[(Long, Seq[Long], Option[Seq[Double]])].collect()
-    rows.map { case (g, nbrs, w) =>
-      val ws = w.getOrElse(Seq.fill(nbrs.length)(1.0))
-      s""""$g":[[${nbrs.mkString(",")}],[${ws.mkString(",")}]]"""
-    }.mkString("{", ",", "}")
+    val entries = weights.select(col("gid").cast("long"), col("nbrs"), col("wts"))
+      .orderBy("gid").as[(Long, Seq[Long], Option[Seq[Double]])]
+      .map { case (g, nbrs, w) =>
+        val ws = w.getOrElse(Seq.fill(nbrs.length)(1.0))
+        s""""$g":[[${nbrs.mkString(",")}],[${ws.mkString(",")}]]"""
+      }.toDF("line")
+    lines(entries, "toJsonText's weights", "use asText for a distributed text form")
+      .mkString("{", ",", "}")
   }
 
   /** S4 `weights_astext` — one text line per row. GAL (binary) weights
@@ -184,28 +189,41 @@ object WeightsCodec {
           round(col("col.w2"), wtsDecimals).cast("string")).as("line"))
 
   /** Driver-side .gal/.gwt file writers (weights exports are per-layer
-    * artifacts, small relative to the data; at web scale write the lines
-    * DF as partitioned text instead).
+    * artifacts, small relative to the data). Past the driver budget they
+    * fail; write the `galLines`/`gwtLines` frame as partitioned text
+    * instead.
     */
-  def writeGal(weights: DataFrame, path: String): Unit = {
-    val spark = weights.sparkSession
-    import spark.implicits._
+  def writeGal(weights: DataFrame, path: String): Unit =
+    write(weights, galLines(weights).orderBy("gid", "sub"), "writeGal", "galLines", path)
+
+  def writeGwt(weights: DataFrame, path: String): Unit =
+    write(weights, gwtLines(weights).orderBy("gid", "nbr"), "writeGwt", "gwtLines", path)
+
+  private def write(weights: DataFrame, sorted: DataFrame, what: String, frame: String,
+                    path: String): Unit = {
     val n = weights.count()
-    val body = galLines(weights).orderBy("gid", "sub")
-      .select("line").as[String].collect()
+    val body = lines(sorted.select("line"), s"$what's lines",
+      s"write the $frame frame as partitioned text instead")
     val all = (s"0 $n" +: body).mkString("", "\n", "\n")
     java.nio.file.Files.write(java.nio.file.Paths.get(path),
       all.getBytes("UTF-8"))
   }
 
-  def writeGwt(weights: DataFrame, path: String): Unit = {
-    val spark = weights.sparkSession
-    import spark.implicits._
-    val n = weights.count()
-    val body = gwtLines(weights).orderBy("gid", "nbr")
-      .select("line").as[String].collect()
-    val all = (s"0 $n" +: body).mkString("", "\n", "\n")
-    java.nio.file.Files.write(java.nio.file.Paths.get(path),
-      all.getBytes("UTF-8"))
+  /** The one string column of `df`, in order, within the driver budget: a
+    * line costs its UTF-8 bytes and a separator.
+    */
+  private def lines(df: DataFrame, what: String, instead: String): Seq[String] =
+    DriverBudget.fetch(df, DriverBudget.bytes(df.sparkSession))(() => new LineHolder)
+      .orFail(what, instead).flatten
+
+  private final class LineHolder extends DriverBudget.Holder[Array[String]] {
+    private val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    private var line: UTF8String = _ // the row `size` last read
+    def size(row: InternalRow): Long = {
+      line = row.getUTF8String(0)
+      if (line == null) 5L else line.numBytes() + 1L
+    }
+    def add(row: InternalRow): Unit = out += (if (line == null) null else line.toString)
+    def result(): Array[String] = out.toArray
   }
 }

@@ -125,13 +125,12 @@ class PlanSpec extends AnyFunSuite {
     // the expected equi-join shape
     // plan shape must be read from the PRE-checkpoint frame: adjacency()
     // returns a materialized frame whose plan is just a scan
-    val (lazyAdj, cachedSrc) = graft.weights.ContiguityWeights.adjacencyLazy(
+    val lazyAdj = graft.weights.ContiguityWeights.adjacencyLazy(
       polys, graft.weights.ContiguityWeights.Conf(queen = true))
     val plan = lazyAdj.queryExecution.executedPlan.toString
     assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin")
       || plan.contains("BroadcastHashJoin"), plan)
     assert(lazyAdj.limit(5).count() > 0)
-    cachedSrc.unpersist(blocking = false)
   }
 
   test("queen and rook adjacency self-joins never broadcast their key table") {
@@ -140,7 +139,7 @@ class PlanSpec extends AnyFunSuite {
     val polys = SynthGeo.partPolygons(spark, dir)
     for (queen <- Seq(true, false)) {
       val lazyAdj = graft.weights.ContiguityWeights.adjacencyLazy(
-        polys, graft.weights.ContiguityWeights.Conf(queen = queen))._1
+        polys, graft.weights.ContiguityWeights.Conf(queen = queen))
       assert(lazyAdj.collect().nonEmpty)
       // the adaptive plan after the run: a join re-planned at runtime shows
       val plan = lazyAdj.queryExecution.executedPlan.toString

@@ -15,4 +15,10 @@ object SparkFixture {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Runs `body` at a driver budget of `bytes` ([[graft.core.DriverBudget]]). */
+  def withBudget[T](bytes: Long)(body: => T): T = {
+    spark.conf.set(graft.core.DriverBudget.Key, bytes.toString)
+    try body finally spark.conf.unset(graft.core.DriverBudget.Key)
+  }
 }

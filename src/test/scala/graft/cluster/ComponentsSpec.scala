@@ -41,12 +41,11 @@ class ComponentsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
-  /** Run with a forced driver-finish threshold (0 = pure distributed). */
-  private def withThreshold[T](edges: Long)(body: => T): T = {
-    spark.conf.set("spark.graft.cc.driverFinishEdges", edges.toString)
-    try body
-    finally spark.conf.unset("spark.graft.cc.driverFinishEdges")
-  }
+  /** Run at a driver budget of `edges` surviving edges (0 = pure
+    * distributed).
+    */
+  private def withThreshold[T](edges: Long)(body: => T): T =
+    SparkFixture.withBudget(edges * Components.EdgeBytes)(body)
 
   test("random graphs match brute-force union-find (both finish paths)") {
     val rnd = new scala.util.Random(20260817L)
@@ -71,7 +70,7 @@ class ComponentsSpec extends AnyFunSuite {
     val edges = Seq.fill(3000)(
       (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
     val distributed = withThreshold(0L)(run(n, edges))
-    val roundZero = run(n, edges) // default 10^6: immediate driver finish
+    val roundZero = run(n, edges) // default budget: immediate driver finish
     val midLoop = withThreshold(500L)(run(n, edges))
     assert(distributed === brute(n, edges))
     assert(roundZero === distributed)

@@ -45,9 +45,10 @@ class RegionalizeSpec extends AnyFunSuite {
       val conf = Regionalize.Conf(k = k)
       val drv = Regionalize.run(vals, w, conf)
         .orderBy("gid").as[(Long, Int)].collect()
-      val dist = Regionalize.run(vals, w, conf.copy(distributedMst = true,
-          distributedMstMinRows = 0))
-        .orderBy("gid").as[(Long, Int)].collect()
+      // the values (144 rows at 28 bytes) fit 8192 bytes, the edges
+      // (1012 at 16) do not: the tree builds distributed
+      val dist = SparkFixture.withBudget(8192L)(Regionalize.run(vals, w, conf)
+        .orderBy("gid").as[(Long, Int)].collect())
       assert(drv.sameElements(dist), s"k=$k")
     }
     // disconnected graph must raise through the streamed path too
@@ -55,10 +56,10 @@ class RegionalizeSpec extends AnyFunSuite {
       .toDF("gid", "nbrs")
     val vBad = Seq((1L, Seq(1.0)), (2L, Seq(2.0)), (3L, Seq(3.0)))
       .toDF("gid", "vals")
+    // values 3 × 20 bytes fit 80, edges 2 × 16 do not
     val e = intercept[Exception] {
-      Regionalize.run(vBad, wBad,
-        Regionalize.Conf(k = 2, distributedMst = true,
-          distributedMstMinRows = 0)).collect()
+      SparkFixture.withBudget(80L)(Regionalize.run(vBad, wBad,
+        Regionalize.Conf(k = 2)).collect())
     }
     assert(e.getMessage.contains("disconnected"))
   }

@@ -66,6 +66,21 @@ class TileLisaSpec extends AnyFunSuite {
     assert(nTiles > 1)
   }
 
+  test("autoTileSize reads the extent in one job, and fails over empty points") {
+    import org.apache.spark.graftshim.BusShim
+    import spark.implicits._
+    val pts = points(2000).cache()
+    val local = pts.as[(Long, Double, Double)].collect()
+    val (s, ran) = BusShim.counted(spark.sparkContext, "auto-tile")(TileLisa.autoTileSize(pts))
+    assert(ran.jobs == 1, s"autoTileSize ran ${ran.jobs} jobs")
+    val w = local.map(_._2).max - local.map(_._2).min
+    val h = local.map(_._3).max - local.map(_._3).min
+    assert(s == math.sqrt(w * h * TileLisa.DefaultTileRows.toDouble / local.length))
+    val e = intercept[IllegalArgumentException](TileLisa.autoTileSize(points(0)))
+    assert(e.getMessage.contains("autoTileSize over empty points"))
+    pts.unpersist()
+  }
+
   /** Value frames for every statistic over the gids of `pts`: `v`
     * (gid, value), binary `bin`, bivariate `bm` (gid, value, value2),
     * never co-located binary `bi`, multivariate `mv` (gid, vals) and

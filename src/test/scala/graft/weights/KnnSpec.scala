@@ -191,6 +191,28 @@ class KnnSpec extends AnyFunSuite {
     assert(KnnWeights.pairs(empty, conf).count() == 0)
   }
 
+  test("kernel kNN with a fixed bandwidth reads the bandwidth in one job") {
+    val df = uniform(2000, 100.0, 21L).toDF("gid", "x", "y").cache()
+    df.count()
+    val conf = KnnWeights.Conf(k = 4, kernel = Some("triangular"), adaptiveBandwidth = false)
+    val (w, ran) = BusShim.counted(spark.sparkContext, "knn-fixed-bandwidth")(
+      KnnWeights.build(df, conf))
+    // the adaptive build's 4 jobs and one fold for the bandwidth
+    assert(ran.jobs <= 5, s"fixed-bandwidth kernel kNN ran ${ran.jobs} jobs")
+    // the bandwidth is the longest k-th neighbor distance: that neighbor's
+    // triangular weight is 0, and no weight is negative
+    val wts = w.select("wts").as[Seq[Double]].collect()
+    assert(wts.length == 2000 && wts.forall(_.forall(_ >= 0.0)))
+    assert(wts.count(_.last == 0.0) >= 1)
+    df.unpersist()
+  }
+
+  test("kernel kNN with a fixed bandwidth over an empty input gives 0 rows") {
+    val empty = Seq.empty[Pt].toDF("gid", "x", "y")
+    val conf = KnnWeights.Conf(k = 4, kernel = Some("triangular"), adaptiveBandwidth = false)
+    assert(KnnWeights.build(empty, conf).count() == 0)
+  }
+
   test("kNN stragglers beyond the per-pass driver bound complete exactly") {
     // 120 points per unit² and k = 600: every point's round-1 heap is
     // full or under-filled with kth ≥ the cell size, so all 1920 straggle

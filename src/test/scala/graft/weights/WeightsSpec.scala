@@ -233,6 +233,35 @@ class WeightsSpec extends AnyFunSuite {
     }
   }
 
+  test("queen, rook and distance-band builds run a fixed number of jobs") {
+    import org.apache.spark.graftshim.BusShim
+    import spark.implicits._
+    val polys = (for (cy <- 0 until 20; cx <- 0 until 20) yield {
+      ((cy * 20 + cx + 1).toLong, Wkb.writePolygon(Array((cx * 1.0, cy * 1.0),
+        (cx + 1.0, cy * 1.0), (cx + 1.0, cy + 1.0), (cx * 1.0, cy + 1.0))))
+    }).toDF("gid", "geom")
+    // building materializes first-order adjacency (3 jobs: the self-join
+    // reads one reused exchange); reading the weights runs the per-row
+    // fold on top (4)
+    for (queen <- Seq(true, false)) {
+      val (w, built) = BusShim.counted(spark.sparkContext, s"contiguity-$queen")(
+        ContiguityWeights.build(polys, ContiguityWeights.Conf(queen = queen)))
+      val (n, read) = BusShim.counted(spark.sparkContext, s"contiguity-$queen-read")(
+        w.collect().length)
+      assert(n == 400)
+      assert(built.jobs == 3 && read.jobs == 4, s"queen=$queen: built in $built, read in $read")
+    }
+    // a band build is lazy: reading it runs the candidate join and the fold
+    val pts = points(2000)
+    for (kernel <- Seq(None, Some("triangular"))) {
+      val (n, ran) = BusShim.counted(spark.sparkContext, s"band-$kernel")(
+        DistanceWeights.build(pts, DistanceWeights.Conf(threshold = 6.0, kernel = kernel))
+          .collect().length)
+      assert(n == 2000)
+      assert(ran.jobs == 5, s"band kernel=$kernel ran $ran")
+    }
+  }
+
   test("queen vs rook on a 3x3 polygon grid") {
     import spark.implicits._
     val polys = (for (cy <- 0 until 3; cx <- 0 until 3) yield {
